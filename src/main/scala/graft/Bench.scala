@@ -94,7 +94,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config(Tuning.Key, "true")  // test-SF partition sizing (see graft.Tuning)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

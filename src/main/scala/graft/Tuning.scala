@@ -1,119 +1,65 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.plans.RelationStats
 
-/** Centralized test-scale partition sizing (r3 verdict #6).
+/** Partition sizing picked from the input. Every session runs the same
+  * code: there is no option to turn a knob on or off, and each knob
+  * decides from something the driver observes without running a job.
   *
-  * The driver's test parquet is one row group per table, so a scan is ONE
-  * task no matter how small `maxPartitionBytes` is — per-row
-  * expression-heavy queries (shingling, simhash votes) serialize, and the
-  * MLlib LSH bucket joins at test SF drown in task overhead at 32 shuffle
-  * partitions. Those are FIXTURE artifacts, not properties of the
-  * operators: at 100 TB a scan is already thousands of tasks and the
-  * bucket joins are the scalable path.
-  *
-  * Rather than scatter `repartition(defaultParallelism)` / `coalesce(8)`
-  * through query bodies (where a production user could cargo-cult them),
-  * every such knob routes through here and is a NO-OP unless the session
-  * opts in with `spark.graft.fixturePartitioning=true` — Verify, Bench and
-  * the test session set it; a production session inherits its source
-  * partitioning untouched.
+  *  - [[spread]] fixes a scan that plans fewer partitions than the session
+  *    has cores. A single small or unsplittable file scans as one task, so
+  *    per-row expression-heavy work (shingling, simhash votes, codecs)
+  *    would run serially. A scan that already fills the cores — every
+  *    multi-file table at scale — is returned untouched.
+  *  - [[withSourceWidth]] sizes `spark.sql.shuffle.partitions` for work
+  *    whose shuffled frames track a source far smaller than the session is
+  *    built for: iterative loops over node- or vocabulary-sized frames,
+  *    distinct-value histograms, sketch cells, stream state. The width is
+  *    one partition per 16 MB of source, at least 4, never above the
+  *    session's own width. At sf0.01–sf0.1 that is 4, where the fixed
+  *    per-task cost of shuffling kilobytes dominates (one PageRank round at
+  *    sf0.1: 0.42–0.50 s at width 32 vs 0.25–0.31 s at width 8; stateful
+  *    streams ~2× faster at state width 4). From ~16 MB × session width of
+  *    source up it equals the session width, which is what the session
+  *    would run anyway.
   */
 object Tuning {
 
-  /** Session opt-in flag for the fixture partition-sizing knobs. */
-  val Key = "spark.graft.fixturePartitioning"
+  private val BytesPerPartition = 16L << 20
+  private val MinWidth = 4L
+  private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
 
-  private def enabled(df: DataFrame): Boolean =
-    df.sparkSession.conf.get(Key, "false").toBoolean
-
-  /** Spread per-row expression-heavy work across all cores (the
-    * single-row-group test files scan as one task). No-op unless the
-    * session sets [[Key]]. */
-  def spread(df: DataFrame): DataFrame =
-    if (enabled(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    else df
-
-  /** Compact to a few fat partitions (per-bucket work at test SF is tiny,
-    * so task overhead dominates otherwise). No-op unless the session sets
-    * [[Key]]. */
-  def compact(df: DataFrame, n: Int = 8): DataFrame =
-    if (enabled(df)) df.coalesce(n) else df
-
-  /** Stateful-streaming state-partition sizing. The state-store instance
-    * count per stateful operator is pinned to `spark.sql.shuffle.partitions`
-    * at a query's FIRST micro-batch and baked into its checkpoint, so it is
-    * a per-query launch-time decision, independent of the batch session's
-    * shuffle width. At fixture scale, 32 partitions means 32 store commits
-    * (×4 for a stream-stream join: two sides × key/index stores) per
-    * micro-batch over kilobytes of state — pure overhead. Measured on
-    * q_stream_join at sf0.1: 8.5 s → 2.9 s steady-state by sizing to 4;
-    * every stateful q_stream_* drops ~2×. At 100 TB you size this UP with
-    * state volume and throughput (and it must stay fixed for the life of
-    * the checkpoint — which is why each graft stream run takes a fresh
-    * one). Runs `f` with the conf temporarily lowered; restores after the
-    * started query terminates. No-op unless the session opts in via
-    * [[Key]] (a production session keeps its own sizing).
-    */
-  def withStreamStatePartitions[T](spark: org.apache.spark.sql.SparkSession,
-                                   n: Int = 4)(f: => T): T =
-    withShufflePartitions(spark, n)(f)
-
-  /** Iterative-graph shuffle sizing (r18, measured): a PageRank/BFS/label
-    * -prop round shuffles NODE-sized frames (ranks, frontiers, labels —
-    * 16k rows at sf0.1), yet every per-round exchange inherits the
-    * session's CPU-count width (32), so each of the K rounds schedules
-    * 32 tasks per stage over kilobytes of data and the fixed per-task
-    * cost (shuffle block files, task setup, fresh-codegen warmup)
-    * dominates — the measured 8→32-core anti-scaling of the family
-    * (ratios 0.71–0.82, VERDICT r17). Probe (EdgeProbe, sf0.1, steady
-    * JIT): one PageRank round over the 1.17M-edge graph takes 0.42–0.50 s
-    * at width 32 vs 0.25–0.31 s at width 8, storage posture a wash.
-    * Shuffle width should track DATA VOLUME, not core count (guide §2.2
-    * "fewer, larger partitions"); at 100 TB these frames are billions of
-    * rows and a production session sizes the width UP with them — so the
-    * knob is fixture-gated like every other Tuning hook: Verify/Bench/
-    * tests opt in via [[Key]], a production session keeps its own width.
-    * Runs `f` with `spark.sql.shuffle.partitions` temporarily set to `n`;
-    * the iterative queries materialize their result inside `f`, so the
-    * restored width never replans the loop. */
-  def withShufflePartitions[T](spark: org.apache.spark.sql.SparkSession,
-                               n: Int = 8)(f: => T): T =
-    if (!spark.conf.get(Key, "false").toBoolean) f
-    else {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, n.toString)
-      try f finally spark.conf.set(key, prev)
-    }
-
-  /** DATA-sized shuffle width for an iterative loop whose working frames
-    * are derived from the given source files (r18, after the sf1 epoch
-    * caught the fixed-8 pin regressing q_khop_bfs 0.87× one rung up —
-    * "scale-adaptive, not a constant tuned for either local mode or the
-    * cluster"): width = clamp(sourceBytes / 16 MB, 4, session default
-    * parallelism). At sf0.1 (25 MB of fact parquet) that is 4 — the
-    * measured optimum band; at sf1 (250 MB) ~15; at sf10+ it saturates at
-    * the session's parallelism, i.e. exactly the pre-r18 behavior where
-    * the data genuinely fills every core. Consulted only under the
-    * fixture flag (the wrapper it feeds is a production no-op). */
-  def dataSizedShufflePartitions(spark: org.apache.spark.sql.SparkSession,
-                                 sourcePaths: Seq[String],
-                                 bytesPerPartition: Long = 16L << 20,
-                                 min: Int = 4): Int = {
-    val sessionWidth = spark.sparkContext.defaultParallelism
-    if (!spark.conf.get(Key, "false").toBoolean) sessionWidth
-    else {
-      def sizeOf(p: String): Long = {
-        def walk(f: java.io.File): Long =
-          if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-          else f.length()
-        walk(new java.io.File(p))
-      }
-      val bytes = sourcePaths.map(sizeOf).sum
-      math.max(min, math.min(sessionWidth, (bytes / bytesPerPartition).toInt + 1))
-    }
+  /** `df` repartitioned to `defaultParallelism` when it plans fewer
+    * partitions than that (see [[RelationStats.plannedPartitions]]); `df`
+    * itself otherwise. */
+  def spread(df: DataFrame): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (RelationStats.plannedPartitions(df) < cores) df.repartition(cores) else df
   }
+
+  /** Shuffle width for work sized by `sourceBytes`:
+    * `min(session width, max(4, sourceBytes / 16 MB + 1))`. */
+  def shuffleWidth(spark: SparkSession, sourceBytes: Long): Int =
+    math.min(spark.sessionState.conf.numShufflePartitions.toLong,
+      math.max(MinWidth, sourceBytes / BytesPerPartition + 1)).toInt
+
+  /** Runs `f` with `spark.sql.shuffle.partitions` set to
+    * [[shuffleWidth]] and restores the session's width after. The width
+    * reaches only what `f` plans: the iterative loops materialize their
+    * result inside `f`, and a stream fixes its state-store count at its
+    * first micro-batch (and keeps it for the life of its checkpoint), so
+    * callers start and drain streams inside `f`. */
+  def withSourceWidth[T](spark: SparkSession, sourceBytes: Long)(f: => T): T = {
+    val prev = spark.conf.get(ShufflePartitionsKey)
+    spark.conf.set(ShufflePartitionsKey, shuffleWidth(spark, sourceBytes).toString)
+    try f finally spark.conf.set(ShufflePartitionsKey, prev)
+  }
+
+  /** [[withSourceWidth]] sized by the files under `paths` (see
+    * [[RelationStats.sourceBytes]]). */
+  def withSourceWidth[T](spark: SparkSession, paths: Seq[String])(f: => T): T =
+    withSourceWidth(spark, RelationStats.sourceBytes(spark, paths))(f)
 
   /** Production state-store posture for the STATEFUL streaming family
     * (sessionize / stream-stream joins / dedup) — the configuration a

@@ -137,9 +137,10 @@ object Bpe {
   /** Registered query: the first [[Rounds]] merges learned from the
     * documents corpus. */
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =
-    // fixture-gated vocabulary-sized shuffle width for the K merge rounds
-    // (graft.Tuning.withShufflePartitions; the merge table is driver-local)
-    graft.Tuning.withShufflePartitions(spark) {
+    // the K merge rounds shuffle vocabulary-sized frames: shuffle width
+    // from the documents source (graft.Tuning.withSourceWidth; the merge
+    // table is driver-local)
+    graft.Tuning.withSourceWidth(spark, Seq(s"$dir/documents.parquet")) {
       train(vocabulary(spark, dir), Rounds)
     }
 
@@ -151,10 +152,11 @@ object Bpe {
     * the corpus stream (one row per word occurrence) joins the per-word
     * token count on the word key — one shuffle join (broadcastable when
     * the vocabulary is dimension-sized) + one hash agg per source. */
-  def bpeEncode(spark: SparkSession, dir: String): DataFrame = graft.Tuning.withShufflePartitions(spark) {
-    // fixture-gated vocabulary-sized shuffle width (graft.Tuning) — every
-    // frame below the corpus histogram is vocab-sized, and the K merge
-    // rounds each pay an explode+agg+TakeOrdered over it
+  def bpeEncode(spark: SparkSession, dir: String): DataFrame =
+    graft.Tuning.withSourceWidth(spark, Seq(s"$dir/documents.parquet")) {
+    // shuffle width from the documents source (graft.Tuning.withSourceWidth)
+    // — every frame below the corpus histogram is vocab-sized, and the K
+    // merge rounds each pay an explode+agg+TakeOrdered over it
     import spark.implicits._
     // ONE corpus scan (r17; was 2): the (source, word) histogram feeds both
     // the vocabulary (sum over sources) and the per-source audit (occ-
@@ -291,8 +293,10 @@ object Bpe {
     * [[bpeEncode]] — the corpus is never re-tokenized per word
     * occurrence. Emits the same per-source fertility/compression audit
     * columns as `q_bpe_encode` for a direct BPE-vs-WordPiece readout. */
-  def wordpiece(spark: SparkSession, dir: String): DataFrame = graft.Tuning.withShufflePartitions(spark) {
-    // fixture-gated vocabulary-sized shuffle width (graft.Tuning)
+  def wordpiece(spark: SparkSession, dir: String): DataFrame =
+    graft.Tuning.withSourceWidth(spark, Seq(s"$dir/documents.parquet")) {
+    // vocabulary-sized frames at the documents source's shuffle width
+    // (graft.Tuning.withSourceWidth)
     import spark.implicits._
     // ONE corpus scan (r17; was 2) — same histogram derivation as
     // [[bpeEncode]]: words = per-source histogram summed over sources,

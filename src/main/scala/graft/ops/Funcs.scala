@@ -273,9 +273,10 @@ object Funcs {
     * lower)` — the identical IEEE expression `percentile()` evaluates, so
     * the result (and the DuckDB `quantile_cont` oracle) is bit-unchanged
     * while the shuffle carries distinct values instead of rows. */
-  def winsorize(spark: SparkSession, dir: String): DataFrame = graft.Tuning.withShufflePartitions(spark) {
-    // fixture-gated histogram-sized shuffle width (graft.Tuning) — every
-    // exchange below carries distinct values, not rows
+  def winsorize(spark: SparkSession, dir: String): DataFrame =
+    graft.Tuning.withSourceWidth(spark, Seq(s"$dir/lineitem.parquet")) {
+    // shuffle width from the lineitem source (graft.Tuning.withSourceWidth)
+    // — every exchange below carries distinct values, not rows
     import spark.implicits._
     val c = Tables.lineitem(spark, dir)
       .select($"l_returnflag", round($"l_extendedprice" * 100).cast("long").as("price_c"))

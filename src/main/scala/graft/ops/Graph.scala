@@ -49,12 +49,13 @@ object Graph {
       buckets = spark.sessionState.conf.numShufflePartitions,
       sourcePaths = Seq(s"$dir/lineitem.parquet", s"$dir/orders.parquet"))(build))
 
-  /** Data-sized iterative shuffle width for the graph loops — derived
-    * from the fact-table source bytes the edge tables are built from
-    * (see graft.Tuning.dataSizedShufflePartitions; fixture-gated). */
-  private def iterWidth(spark: SparkSession, dir: String): Int =
-    graft.Tuning.dataSizedShufflePartitions(spark,
-      Seq(s"$dir/lineitem.parquet", s"$dir/orders.parquet"))
+  /** Runs a graph loop at the shuffle width of the fact tables its edge
+    * tables are built from (graft.Tuning.withSourceWidth): every round
+    * shuffles node-sized frames, so at sf0.1 (13.5 MB of lineitem +
+    * orders) the loop runs 4 tasks per stage instead of one per core. */
+  private def atEdgeSourceWidth[T](spark: SparkSession, dir: String)(f: => T): T =
+    graft.Tuning.withSourceWidth(spark,
+      Seq(s"$dir/lineitem.parquet", s"$dir/orders.parquet"))(f)
 
   /** One synchronous PageRank round over an edge list that already carries
     * `outdeg` on the source: ranks shuffle on the join key, contributions
@@ -240,10 +241,9 @@ object Graph {
     * contribution aggregate (hot dst keys split at runtime). */
   def pageRankQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Fixture-gated node-sized shuffle width for the whole loop (see
-    // graft.Tuning.withShufflePartitions — production sessions keep their
-    // own width). The loop materializes its result inside the wrapper.
-    graft.Tuning.withShufflePartitions(spark, iterWidth(spark, dir)) {
+    // The whole loop runs at the edge source's width (atEdgeSourceWidth);
+    // it materializes its result inside the wrapper.
+    atEdgeSourceWidth(spark, dir) {
       pageRank(interactionEdgeTable(spark, dir), iters = 5, completeGraph = true)
     }.select($"node", ($"node" % 2).cast("int").as("node_type"),
         expr("node div 2").as("entity_id"), $"r".as("rank_micros"))
@@ -389,7 +389,7 @@ object Graph {
     * RULE, not just the final ranks. */
   def pageRankConvQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (ranks, iters) = graft.Tuning.withShufflePartitions(spark, iterWidth(spark, dir)) {
+    val (ranks, iters) = atEdgeSourceWidth(spark, dir) {
       pageRankConverged(coSupplierSymTable(spark, dir),
         eps = 10000L, maxIters = 30)
     }
@@ -523,7 +523,7 @@ object Graph {
     * the 10%-of-suppliers seed set (s_suppkey % 10 == 0 — 10 seeds at the driver gate SF, 100 at sf0.1), reported as the
     * per-distance growth curve (node count + exact id sum per BFS layer —
     * the id sum pins layer MEMBERSHIP under the hash, not just size). */
-  def kHopQuery(spark: SparkSession, dir: String): DataFrame = graft.Tuning.withShufflePartitions(spark, iterWidth(spark, dir)) {
+  def kHopQuery(spark: SparkSession, dir: String): DataFrame = atEdgeSourceWidth(spark, dir) {
     import spark.implicits._
     // The edge frame is re-joined on src every round: pre-hash-partition
     // it ONCE before caching so the cached partitioning satisfies each
@@ -657,7 +657,7 @@ object Graph {
   /** Registered query: triangle census of the supplier co-occurrence
     * graph — per supplier its co-occurrence degree and the number of
     * supplier triangles (cliques of mutual co-occurrence) through it. */
-  def triangleQuery(spark: SparkSession, dir: String): DataFrame = graft.Tuning.withShufflePartitions(spark, iterWidth(spark, dir)) {
+  def triangleQuery(spark: SparkSession, dir: String): DataFrame = atEdgeSourceWidth(spark, dir) {
     import spark.implicits._
     triangleCounts(coSupplierPairsFromTable(spark, dir))
       .select($"node".as("suppkey"), $"degree", $"n_tri")
@@ -745,7 +745,7 @@ object Graph {
   /** Registered query: communities of the bulk co-supplier graph — the
     * final (node, community) labeling plus each community's size as a
     * join-back. */
-  def labelPropQuery(spark: SparkSession, dir: String): DataFrame = graft.Tuning.withShufflePartitions(spark, iterWidth(spark, dir)) {
+  def labelPropQuery(spark: SparkSession, dir: String): DataFrame = atEdgeSourceWidth(spark, dir) {
     import spark.implicits._
     val labels = labelPropagationSym(coSupplierSymTable(spark, dir), iters = 3)
     val sizes = labels.groupBy($"label").agg(count(lit(1)).as("community_size"))

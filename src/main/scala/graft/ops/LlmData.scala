@@ -404,9 +404,9 @@ object LlmData {
     import spark.implicits._
     // hash the NORMALIZED text in a separate projection — the k-gram lambda
     // re-evaluates its input per window (same trap as shingling).
-    // repartition: the per-row winnowing math dominates and the
-    // single-row-group test file scans as one task (a cluster scan is
-    // already thousands of tasks — there the repartition is removable).
+    // spread: the per-row winnowing math dominates, and a one-file scan
+    // plans a single task (a scan that already fills the cores passes
+    // through untouched).
     Tuning.spread(Tables.documents(spark, dir))
       .select($"doc_id", Text.normalized($"text").as("norm"))
       .select($"doc_id",

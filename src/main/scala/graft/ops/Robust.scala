@@ -59,8 +59,10 @@ object Robust {
     * Shape: two histogram passes (values, then deviations) + one
     * broadcast join-back of the O(groups) stats — the same two-pass
     * contract as every winsorizer. */
-  def madOutliers(spark: SparkSession, dir: String): DataFrame = graft.Tuning.withShufflePartitions(spark) {
-    // fixture-gated histogram-sized shuffle width (graft.Tuning)
+  def madOutliers(spark: SparkSession, dir: String): DataFrame =
+    graft.Tuning.withSourceWidth(spark, Seq(s"$dir/orders.parquet")) {
+    // histogram-sized frames at the orders source's shuffle width
+    // (graft.Tuning.withSourceWidth)
     import spark.implicits._
     val c = Tables.orders(spark, dir).select($"o_orderstatus".as("g"),
       round($"o_totalprice" * 100).cast("long").as("v"))
@@ -136,8 +138,10 @@ object Robust {
     * O(groups) broadcast — the [[Funcs.winsorize]] scale argument applies
     * unchanged. (`ntile` itself is covered as a window function in
     * q_window_funcs.) */
-  def quantileBucket(spark: SparkSession, dir: String): DataFrame = graft.Tuning.withShufflePartitions(spark) {
-    // fixture-gated histogram-sized shuffle width (graft.Tuning)
+  def quantileBucket(spark: SparkSession, dir: String): DataFrame =
+    graft.Tuning.withSourceWidth(spark, Seq(s"$dir/customer.parquet")) {
+    // histogram-sized frames at the customer source's shuffle width
+    // (graft.Tuning.withSourceWidth)
     import spark.implicits._
     val c = Tables.customer(spark, dir).select($"c_mktsegment".as("seg"),
       round($"c_acctbal" * 100).cast("long").as("bal_c"))

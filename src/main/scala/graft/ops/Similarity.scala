@@ -144,10 +144,10 @@ object Similarity {
     // the banded join in an InMemoryRelation de-optimizes it — measured
     // 75 s vs 8 s for the same stage — so the explode form is the fix.)
     // The materializing count below stays OUTSIDE
-    // graft.Tuning.withShufflePartitions, so corpus work runs at corpus
-    // width and only the loop runs at loop width (the first action under
-    // the pin used to drag the whole upstream through loop-sized
-    // exchanges: two 8-task stages × 417 MB shuffle, ~10 s apiece).
+    // graft.Tuning.withSourceWidth, so corpus work runs at corpus width
+    // and only the loop runs at loop width (the first action under the
+    // pin used to drag the whole upstream through loop-sized exchanges:
+    // two 8-task stages × 417 MB shuffle, ~10 s apiece).
     val pre = edges.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
@@ -191,16 +191,16 @@ object Similarity {
       }
       return parent.keysIterator.map(k => (k, find(k))).toSeq.toDF("doc_id", "cluster")
     }
-    graft.Tuning.withShufflePartitions(edges.sparkSession) {
-    // Fixture-gated CANDIDATE-GRAPH-sized shuffle width for the loop
-    // (graft.Tuning.withShufflePartitions): every frame the loop touches —
-    // sym edges, labels, neighbor minima — is LSH-candidate-graph-sized,
+    graft.Tuning.withSourceWidth(edges.sparkSession, edgeCount * 16L) {
+    // CANDIDATE-GRAPH-sized shuffle width for the loop, from the edge
+    // count just taken at 16 B per (src, dst) pair
+    // (graft.Tuning.withSourceWidth): every frame the loop touches — sym
+    // edges, labels, neighbor minima — is LSH-candidate-graph-sized,
     // orders of magnitude below the corpus by construction, yet each of
     // the O(log diameter) rounds used to schedule session-width
     // (CPU-count) tasks per stage over kilobytes (stage profile r18 on
     // q_minhash_det_transitive_dist: 50 stages, ≤27 KB shuffled each).
-    // Production sessions keep their own width; the local fast path above
-    // is width-independent.
+    // The local fast path above is width-independent.
     // symmetric edge list, cached ON THE PER-ROUND JOIN KEY (r18): the
     // loop joins `sym("dst") === labels("doc_id")` every round, but
     // distinct() leaves the cache partitioned on (src, dst), so each round
@@ -326,18 +326,14 @@ object Similarity {
   }
 
   /** Registered rows-only query: kept documents after MinHash dedup.
-    * The corpus is coalesced to a few fat partitions first — the LSH
-    * explode/self-join is per-bucket tiny at test SF, so task overhead
-    * dominates at 32 shuffle partitions; at 100 TB the same code runs with
-    * production partitioning (no coalesce) and the bucket join is the
-    * scalable path. */
+    * The corpus goes through [[graft.Tuning.spread]]: a scan that plans
+    * fewer partitions than the session has cores (one small file is ONE
+    * task) would run the shingle+HashingTF vectorization and the LSH hash
+    * evaluation serially (stage profile r18: 1.4 s + 0.7 s single-task
+    * stages); a scan that fills the cores passes through. The bucket-join
+    * shuffle width stays session-sized. */
   def minhashDedupQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // spread, not compact (r18): the single-row-group test scan is ONE
-    // task, and compact/coalesce can never RAISE parallelism — the
-    // shingle+HashingTF vectorization and the LSH hash evaluation ran
-    // serially (stage profile: 1.4 s + 0.7 s single-task stages). The
-    // bucket-join shuffle width stays session-sized.
     minhashDedup(Tuning.spread(Tables.documents(spark, dir)))
       .select($"doc_id", $"source", $"n_chars")
   }
@@ -462,12 +458,10 @@ object Similarity {
   }
 
   /** Registered FULLY-ORACLED query: kept documents after deterministic
-    * MinHash banded dedup. Unlike the MLlib LSH queries (coalesced — their
-    * cost is bucket-join task overhead), the det pipeline's cost is the
-    * per-row shingle/signature math, and the single-row-group test file
-    * scans as ONE task — repartition to spread the scalar work across
-    * cores (at 100 TB the scan is already thousands of tasks and the
-    * repartition is a no-op to remove). */
+    * MinHash banded dedup. The det pipeline's cost is the per-row
+    * shingle/signature math, and a one-file scan plans ONE task —
+    * [[graft.Tuning.spread]] repartitions it across the cores (a scan that
+    * already fills them, as every table at 100 TB does, passes through). */
   def minhashDetDedupQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     minhashDetDedup(Tuning.spread(Tables.documents(spark, dir)))
@@ -633,11 +627,12 @@ object Similarity {
     dropByIds(docs, cand.select(col("doc_b").as("doc_id")).distinct(), release)
   }
 
-  /** Registered rows-only query: kept documents after SimHash dedup (same
-    * partition-sizing note as [[minhashDedupQuery]]). */
+  /** Registered rows-only query: kept documents after SimHash dedup, over
+    * the documents scan as it plans (one simhash per row is cheap next to
+    * the banded self-join). */
   def simhashDedupQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    simhashDedup(Tuning.compact(Tables.documents(spark, dir)))
+    simhashDedup(Tables.documents(spark, dir))
       .select($"doc_id", $"source", $"n_chars")
   }
 

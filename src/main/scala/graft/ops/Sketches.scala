@@ -795,8 +795,10 @@ object Sketches {
     * and the cumulative window runs over those sketch-sized partitions.
     * The exact side (a distinct-value histogram, the winsorize pattern)
     * is the VERIFICATION audit, not the production shape. */
-  def quantileSketch(spark: SparkSession, dir: String): DataFrame = graft.Tuning.withShufflePartitions(spark) {
-    // fixture-gated sketch/histogram-sized shuffle width (graft.Tuning)
+  def quantileSketch(spark: SparkSession, dir: String): DataFrame =
+    graft.Tuning.withSourceWidth(spark, Seq(s"$dir/lineitem.parquet")) {
+    // sketch/histogram-sized frames at the lineitem source's shuffle width
+    // (graft.Tuning.withSourceWidth)
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     def bucketWidth(col: String) =

@@ -1,12 +1,17 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
-/** Driver-side relation statistics from PARQUET FOOTER METADATA — no Spark
-  * job, no scan.
+/** Driver-side relation statistics from FILE LISTINGS, PARQUET FOOTERS and
+  * PHYSICAL PLANS — no Spark job, no scan. [[sourceBytes]] and
+  * [[plannedPartitions]] feed [[graft.Tuning]]'s partition sizing; the
+  * footer row count is described below.
   *
   * The adaptive ANN family sizes its signature width from the corpus row
   * count (`bits ≈ log₂ n`, [[graft.ops.Similarity.adaptiveSignBits]]). An
@@ -66,8 +71,7 @@ object RelationStats {
       case _ => None
     }
     relation(df.queryExecution.optimizedPlan).flatMap { rel =>
-      val statuses = rel.location.listFiles(Nil, Nil).flatMap(_.files)
-        .sortBy(_.getPath.toString)
+      val statuses = listed(rel.location).sortBy(_.getPath.toString)
       val files = statuses.map(_.getPath.toString)
       val key = {
         val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -103,6 +107,37 @@ object RelationStats {
           case scala.util.control.NonFatal(_) => None
         } finally pool.shutdown()
       }
+    }
+  }
+
+  /** Every file a FileIndex lists (all partitions, no pruning). */
+  private def listed(index: FileIndex) = index.listFiles(Nil, Nil).flatMap(_.files)
+
+  /** Bytes of the files under `paths`, listed through Hadoop `FileSystem`
+    * by the same FileIndex a scan of those paths builds — so a `file:` URI
+    * and the plain path agree, a remote filesystem works, and hidden or
+    * metadata files (`_SUCCESS`, `.crc`) are skipped as a scan skips them.
+    * A missing path lists nothing and counts 0. */
+  def sourceBytes(spark: SparkSession, paths: Seq[String]): Long =
+    listed(new InMemoryFileIndex(spark, paths.map(new Path(_)), Map.empty, None))
+      .map(_.getLen).sum
+
+  /** Partitions `df` plans, read off its physical plan: the plan's output
+    * partitioning when an exchange fixes it, otherwise the sum over the
+    * plan's leaves — a file scan's split count (its FileIndex listing cut
+    * by `maxPartitionBytes`), any other leaf's RDD partitions. Planning
+    * lists files and builds RDDs on the driver; it runs no job. */
+  def plannedPartitions(df: DataFrame): Int = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    plan.outputPartitioning.numPartitions match {
+      case 0 => plan.collectLeaves().map {
+        case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions
+        case leaf => leaf.execute().getNumPartitions
+      }.sum
+      case n => n
     }
   }
 }

@@ -33,23 +33,24 @@ object StreamSessionize {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private val ProviderConfKey = "spark.sql.streaming.stateStore.providerClass"
 
-  /** Launch a stream inside [[graft.Tuning.withStreamStatePartitions]] —
+  /** Launch a stream inside [[graft.Tuning.withSourceWidth]] sized by its
+    * `source` files, and block until the AvailableNow trigger drains. The
     * state-store count is pinned to `spark.sql.shuffle.partitions` at the
-    * query's first batch, so fixture runs size it to the state volume
-    * (kilobytes here), not the batch session's shuffle width — and block
-    * until the AvailableNow trigger drains. Measured: q_stream_join
-    * 8.5 → 2.9 s steady-state; every stateful q_stream_* ~2×. No-op
-    * resize in a session without the [[graft.Tuning.Key]] opt-in.
+    * query's first batch, so it is decided here, at query start, from the
+    * input the stream will read: kilobyte-to-megabyte fixture state gets 4
+    * stores, not one per core (measured: q_stream_join 8.5 → 2.9 s
+    * steady-state; every stateful q_stream_* ~2×), and a source of
+    * 16 MB × session width or more gets the session's own width.
     *
     * Honors [[StateStoreKey]]: the provider class is swapped in only for
     * the query's start-to-drain span and restored after, so batch work in
     * the same session never sees a mutated conf. Safe per query because
     * every run gets a FRESH checkpoint ([[freshRun]]) — a provider is
     * sticky per checkpoint, never changed under a live one. */
-  private def startDrained(spark: SparkSession)(
+  private def startDrained(spark: SparkSession, source: String)(
       start: => org.apache.spark.sql.streaming.StreamingQuery)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.Tuning.withStreamStatePartitions(spark) {
+    graft.Tuning.withSourceWidth(spark, Seq(source)) {
       val useRocks = spark.conf.getOption(StateStoreKey).exists(_.equalsIgnoreCase("rocksdb"))
       val prior = spark.conf.getOption(ProviderConfKey)
       if (useRocks) spark.conf.set(ProviderConfKey, RocksDbProviderClass)
@@ -84,11 +85,12 @@ object StreamSessionize {
     * fbsink's sink deliberately survives across runs because cross-run
     * idempotent redelivery is the thing it demonstrates.) */
   private def drainToParquet(spark: SparkSession, kind: String,
-                             fixtureRoot: String, dir: String, ckpt: String)(
+                             fixtureRoot: String, dir: String, ckpt: String,
+                             source: String)(
       stream: DataFrame): DataFrame = {
     val outDir = new java.io.File(s"$fixtureRoot/${kind}_sink_${tag(dir)}")
     rm(outDir)
-    startDrained(spark)(stream.writeStream
+    startDrained(spark, source)(stream.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
         ()
@@ -294,7 +296,7 @@ object StreamSessionize {
 
     val stream = spark.readStream.schema(ev.schema).parquet(inDir)
       .as[Event]
-    val sessions = drainToParquet(spark, "stream_sess", fixtureRoot, dir, ckpt)(
+    val sessions = drainToParquet(spark, "stream_sess", fixtureRoot, dir, ckpt, inDir)(
       sessionize(stream, gapSeconds, watermarkDelay = "0 seconds").toDF())
 
     // shape to the batch sessionize schema; session_seq re-derived from the
@@ -341,7 +343,7 @@ object StreamSessionize {
     }
 
     val stream = spark.readStream.schema(ev.schema).parquet(inDir)
-    startDrained(spark)(stream
+    startDrained(spark, inDir)(stream
       .withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), s"$windowSeconds seconds"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -386,7 +388,7 @@ object StreamSessionize {
     }
 
     val stream = spark.readStream.schema(ev.schema).parquet(inDir)
-    startDrained(spark)(stream
+    startDrained(spark, inDir)(stream
       .withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), s"$windowSeconds seconds", s"$slideSeconds seconds"),
         col("event_type"))
@@ -435,7 +437,7 @@ object StreamSessionize {
     // agg state) in Complete mode, so the memory sink holds one row per
     // event_type — result-sized, never corpus-sized, the shape that
     // survives an unbounded stream on a real cluster.
-    startDrained(spark)(dedupStream(stream, Seq("event_id"), watermarkDelay = "1 hour")
+    startDrained(spark, inDir)(dedupStream(stream, Seq("event_id"), watermarkDelay = "1 hour")
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(round($"value" * 100).cast("long")).as("sum_value_c"),
@@ -487,7 +489,7 @@ object StreamSessionize {
       .select($"event_id".as("purchase_id"), $"user_id".as("p_user"),
         $"ts".as("purchase_ts"), $"value")
       .withWatermark("purchase_ts", "0 seconds")
-    drainToParquet(spark, "stream_join", fixtureRoot, dir, ckpt)(
+    drainToParquet(spark, "stream_join", fixtureRoot, dir, ckpt, inDir)(
       clicks.join(purchases,
         $"c_user" === $"p_user" &&
           $"purchase_ts" >= $"click_ts" &&
@@ -542,7 +544,7 @@ object StreamSessionize {
       .select($"event_id".as("purchase_id"), $"user_id".as("p_user"),
         $"ts".as("purchase_ts"), $"value")
       .withWatermark("purchase_ts", "0 seconds")
-    drainToParquet(spark, "stream_join_outer", fixtureRoot, dir, ckpt)(
+    drainToParquet(spark, "stream_join_outer", fixtureRoot, dir, ckpt, inDir)(
       clicks.join(purchases,
         $"c_user" === $"p_user" &&
           $"purchase_ts" >= $"click_ts" &&
@@ -581,7 +583,7 @@ object StreamSessionize {
     val src = spark.readStream.schema(ev.schema).parquet(inDir)
     val dim = broadcast(graft.Tables.customer(spark, dir)
       .select($"c_custkey", $"c_mktsegment", $"c_nationkey"))
-    drainToParquet(spark, "stream_enrich", fixtureRoot, dir, ckpt)(
+    drainToParquet(spark, "stream_enrich", fixtureRoot, dir, ckpt, inDir)(
       src.join(dim, src("user_id") === dim("c_custkey"), "left")
         .select($"event_id", $"user_id",
           coalesce($"c_mktsegment", lit("UNKNOWN")).as("segment"),
@@ -623,7 +625,7 @@ object StreamSessionize {
 
     val src = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val query = startDrained(spark)(src.writeStream
+    val query = startDrained(spark, inDir)(src.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
         ()

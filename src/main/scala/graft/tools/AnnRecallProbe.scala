@@ -49,7 +49,6 @@ object AnnRecallProbe {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config(graft.Tuning.Key, "true")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.{SparkEntry, Tuning}
+import graft.SparkEntry
 
 /** Registry determinism double-run gate (r7 verdict item 8): run every
   * ORACLED query twice in one session — cache cleared between runs — and
@@ -39,7 +39,6 @@ object DeterminismCheck {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config(Tuning.Key, "true")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

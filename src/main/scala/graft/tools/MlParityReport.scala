@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.Tuning
 
 /** ML parity reporter (r5 verdict #8): regenerates the engine-vs-baseline
   * metric table every round instead of leaving it in round notes. Runs the
@@ -36,7 +35,6 @@ object MlParityReport {
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
-      .config(Tuning.Key, "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

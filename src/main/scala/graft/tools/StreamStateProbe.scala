@@ -38,7 +38,6 @@ object StreamStateProbe {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config(graft.Tuning.Key, "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

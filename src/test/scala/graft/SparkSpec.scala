@@ -20,7 +20,6 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config(Tuning.Key, "true")  // test-SF partition sizing (see graft.Tuning)
       .getOrCreate()
     // reliable-checkpoint store: lets suites exercise the same checkpoint
     // path connectedComponents takes under Verify/Bench; per-process temp

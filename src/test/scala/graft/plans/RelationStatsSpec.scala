@@ -9,22 +9,38 @@ package graft.plans
 class RelationStatsSpec extends graft.SparkSpec {
   import spark.implicits._
 
+  /** `body`'s result and the number of Spark jobs submitted while it ran.
+    * The listener bus is async, so it is drained before registering (no
+    * earlier job leaks in) and before reading the counter (ADVICE r11: a
+    * fixed sleep races under CI load). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(sc)
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body` run with the session's shuffle width set to `width`. */
+  private def atSessionWidth[T](width: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, width.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
   test("footerRowCount: exact on a plain parquet table read, with zero Spark jobs") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val expected = emb.count()
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val n = try {
-      val n = RelationStats.footerRowCount(emb)
-      // listener bus is async; drain deterministically before reading the
-      // counter (ADVICE r11: a fixed sleep races under CI load)
-      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      n
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (n, jobs) = jobsDuring(RelationStats.footerRowCount(emb))
     assert(jobs == 0, s"footerRowCount ran $jobs Spark jobs — it must be metadata-only")
     assert(n.contains(expected))
   }
@@ -67,18 +83,68 @@ class RelationStatsSpec extends graft.SparkSpec {
     // byte-identical (same n either way; corpusCount's contract).
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     RelationStats.footerRowCount(emb) // warm the memo so the assert below is pure sizing
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val k = try {
-      val k = graft.ops.Similarity.autoQuantizerK(emb)
-      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      k
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (k, jobs) = jobsDuring(graft.ops.Similarity.autoQuantizerK(emb))
     assert(jobs == 0, s"auto-k sizing ran $jobs Spark jobs — it must be metadata-only")
     assert(k == math.max(16L, emb.count() / 2000L).toInt)
+  }
+
+  // ------------------------------------------- graft.Tuning partition sizing
+
+  test("Tuning.shuffleWidth: one partition per 16 MB, at least 4, capped at the session width") {
+    val mb = 1L << 20
+    atSessionWidth(32) {
+      assert(graft.Tuning.shuffleWidth(spark, 0L) == 4)
+      assert(graft.Tuning.shuffleWidth(spark, 16 * mb - 1) == 4)
+      assert(graft.Tuning.shuffleWidth(spark, 100 * mb) == 7)
+      assert(graft.Tuning.shuffleWidth(spark, 1L << 50) == 32)
+      // the wrapper applies the width inside and restores the session's after
+      assert(graft.Tuning.withSourceWidth(spark, 100 * mb)(
+        spark.conf.get("spark.sql.shuffle.partitions")) == "7")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "32")
+    }
+    // the floor of 4 never widens a narrower session
+    atSessionWidth(2) {
+      assert(graft.Tuning.shuffleWidth(spark, 0L) == 2)
+      assert(graft.Tuning.shuffleWidth(spark, 1L << 50) == 2)
+    }
+  }
+
+  test("RelationStats.sourceBytes lists through Hadoop FileSystem: a file: URI equals the plain path") {
+    val plain = "/root/testdata/sf0.01/lineitem.parquet"
+    val bytes = RelationStats.sourceBytes(spark, Seq(plain))
+    assert(bytes > 0)
+    assert(bytes == new java.io.File(plain).length)
+    assert(RelationStats.sourceBytes(spark, Seq(s"file://$plain")) == bytes)
+    assert(RelationStats.sourceBytes(spark, Seq("/root/testdata/sf0.01/no_such_table.parquet")) == 0L)
+  }
+
+  test("Tuning.shuffleWidth for the graph-loop source is the same at sf0.01 and sf0.1") {
+    def width(sf: String): Int = graft.Tuning.shuffleWidth(spark, RelationStats.sourceBytes(spark,
+      Seq(s"/root/testdata/$sf/lineitem.parquet", s"/root/testdata/$sf/orders.parquet")))
+    atSessionWidth(32) {
+      assert(width("sf0.01") == width("sf0.1"))
+      assert(width("sf0.1") == 4)
+    }
+  }
+
+  test("Tuning.spread repartitions a one-file scan to defaultParallelism, running no job to decide") {
+    val cores = spark.sparkContext.defaultParallelism
+    val path = "/root/testdata/sf0.01/documents.parquet"
+    // explicit schema: the read itself runs no schema-inference job
+    val scan = spark.read.schema(spark.read.parquet(path).schema).parquet(path)
+    val (spread, jobs) = jobsDuring(graft.Tuning.spread(scan))
+    assert(jobs == 0, s"spread ran $jobs Spark jobs to decide — it must read the plan only")
+    assert(RelationStats.plannedPartitions(scan) == 1)
+    assert(spread ne scan)
+    assert(RelationStats.plannedPartitions(spread) == cores)
+    assert(spread.collect().toSet == scan.collect().toSet)
+  }
+
+  test("Tuning.spread returns a frame that already fills the cores as the same object") {
+    val cores = spark.sparkContext.defaultParallelism
+    val wide = graft.Tables.documents(spark, "/root/testdata/sf0.01").repartition(cores)
+    assert(graft.Tuning.spread(wide) eq wide)
+    val wider = spark.range(0, 1000, 1, cores * 2).toDF("id")
+    assert(graft.Tuning.spread(wider) eq wider)
   }
 }
