@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Tables, VerifiedQuery}
-import graft.functions.Text
+import graft.functions.{Text, cents}
 
 /** Product/behavioral analytics over the events stream — the classic
   * query shapes an analytics engine is asked for daily: ordered funnel
@@ -111,7 +111,7 @@ object Analytics {
   def histogram(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.orders(spark, dir)
-      .select((round($"o_totalprice" * 100).cast("long")).as("price_c"))
+      .select(cents($"o_totalprice").as("price_c"))
       .groupBy(expr("price_c div 5000000").as("bin"))
       .agg(count(lit(1)).as("n"),
         (sum($"price_c") / lit(100.0)).as("total"))
@@ -205,7 +205,7 @@ object Analytics {
     import spark.implicits._
     val ev = Tables.events(spark, dir)
       .select($"user_id", to_date($"ts").as("day"),
-        round($"value" * 100).cast("long").as("value_c"))
+        cents($"value").as("value_c"))
     val refDay = ev.agg(max($"day").as("ref_day"))
     ev.crossJoin(broadcast(refDay))
       .select($"user_id", $"day", $"value_c",

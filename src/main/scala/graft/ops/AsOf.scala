@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Tables, VerifiedQuery}
+import graft.functions.cents
 
 /** As-of (nearest-prior) join and range join — operators Spark lacks as
   * primitives, composed Spark-first from existing operators (preference
@@ -65,7 +66,7 @@ object AsOf {
       .select($"event_id", (pmod($"user_id", lit(100))).as("k"), to_date($"ts").as("d"))
     val ord = Tables.orders(spark, dir)
       .select(pmod($"o_custkey", lit(100)).as("k"), to_date($"o_orderdate").as("d"),
-        round($"o_totalprice" * 100).cast("long").as("price_c"))
+        cents($"o_totalprice").as("price_c"))
       .groupBy($"k", $"d").agg(max($"price_c").as("price_c"))
     asofJoin(ev, ord, "k", "d", "price_c")
       .select($"event_id", $"k",
@@ -100,7 +101,7 @@ object AsOf {
     ev.join(broadcast(bands), $"value" >= $"lo" && $"value" < $"hi", "left")
       .groupBy($"band")
       .agg(count(lit(1)).as("n"),
-        (sum(round($"value" * 100).cast("long")) / lit(100.0)).as("sum_value"))
+        (sum(cents($"value")) / lit(100.0)).as("sum_value"))
   }
 
   private val rangeJoinSql =
@@ -132,7 +133,7 @@ object AsOf {
     import spark.implicits._
     val ev = Tables.events(spark, dir)
       .select($"event_type", $"ts", $"event_id",
-        round($"value" * 100).cast("long").as("v_c"))
+        cents($"value").as("v_c"))
       .withColumn("hr", floorDiv(unix_timestamp($"ts"), 3600L))
     val wLast = Window.partitionBy($"event_type", $"hr")
       .orderBy($"ts".desc, $"event_id".desc)
@@ -198,7 +199,7 @@ object AsOf {
     Tables.events(spark, dir)
       .select($"event_id", $"user_id",
         unix_timestamp($"ts").as("ts_s"),
-        round($"value" * 100).cast("long").as("v_c"))
+        cents($"value").as("v_c"))
       .select($"event_id", $"user_id", $"ts_s",
         count(lit(1)).over(w).as("roll_n"),
         sum($"v_c").over(w).as("roll_sum_c"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Tables, VerifiedQuery}
 import graft.etl.{TaxiFeatures, WeatherClean}
+import graft.functions.cents
 
 /** Verified queries exercising the ETL-parity modules (etl.TaxiFeatures /
   * etl.WeatherClean) over the driver's test corpus: the full
@@ -47,8 +48,6 @@ object Etl {
     * process, so a regenerated dir would otherwise keep serving fixtures
     * built from the old data. Normal Verify/Bench runs never need this. */
   private[graft] def clearFixtureCache(): Unit = builtFixtures.clear()
-
-  private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
 
   // -------------------------------------------------------- taxi-analog ETL
 

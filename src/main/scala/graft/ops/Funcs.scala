@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Tables, VerifiedQuery}
+import graft.functions.cents
 
 /** Extended scalar/aggregate SQL surface beyond the reference (SURVEY
   * §2.10 "what the reference does NOT have"): string functions, array
@@ -93,7 +94,7 @@ object Funcs {
       .withColumn("p", from_json($"props", org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.IntegerType)))))
       .withColumn("rec", struct($"event_id", $"p.k".as("k"),
-        round($"value" * 100).cast("long").as("v_c")))
+        cents($"value").as("v_c")))
       .groupBy($"user_id")
       .agg(sort_array(collect_list($"rec")).as("recs"),
         count(lit(1)).as("n_events"))
@@ -160,7 +161,7 @@ object Funcs {
         Seq(Seq($"o_orderstatus", $"o_orderpriority"), Seq($"o_orderstatus"), Seq()),
         $"o_orderstatus", $"o_orderpriority")
       .agg(grouping_id().cast("int").as("gid"), count(lit(1)).as("n"),
-        (sum(round($"o_totalprice" * 100).cast("long")) / lit(100.0)).as("total"))
+        (sum(cents($"o_totalprice")) / lit(100.0)).as("total"))
       .select(coalesce($"o_orderstatus", lit("ALL")).as("status"),
         coalesce($"o_orderpriority", lit("ALL")).as("priority"),
         $"gid", $"n", $"total")
@@ -279,7 +280,7 @@ object Funcs {
     // — every exchange below carries distinct values, not rows
     import spark.implicits._
     val c = Tables.lineitem(spark, dir)
-      .select($"l_returnflag", round($"l_extendedprice" * 100).cast("long").as("price_c"))
+      .select($"l_returnflag", cents($"l_extendedprice").as("price_c"))
     // ONE corpus scan (r17): the clip/sum pass used to re-scan lineitem and
     // join every ROW against the bounds; every output quantity is a
     // cnt-weighted aggregate over the distinct-value histogram the bounds
@@ -389,7 +390,7 @@ object Funcs {
     val wRows = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_orderstatus",
-        round($"o_totalprice" * 100).cast("long").as("price_c"))
+        cents($"o_totalprice").as("price_c"))
       .select($"o_orderkey", $"o_orderstatus",
         percent_rank().over(w).as("pr"),
         cume_dist().over(w).as("cd"),
@@ -480,7 +481,7 @@ object Funcs {
     val topk = udaf(graft.functions.TopKByPrice)
     Tables.orders(spark, dir)
       .groupBy($"o_orderpriority")
-      .agg(topk(round($"o_totalprice" * 100).cast("long"), $"o_orderkey").as("top"))
+      .agg(topk(cents($"o_totalprice"), $"o_orderkey").as("top"))
       .select($"o_orderpriority", posexplode($"top"))
       .select($"o_orderpriority", ($"pos" + 1).cast("long").as("rank"),
         $"col.key".as("o_orderkey"), ($"col.cents" / lit(100.0)).as("price"))

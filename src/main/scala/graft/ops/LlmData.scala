@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Tables, Tuning, VerifiedQuery}
-import graft.functions.Text
+import graft.functions.{Text, cents}
 
 /** LLM-training-data pipeline operators over `documents` and `events`
   * (north-star surface beyond the reference, SURVEY §2.10/§7.1): text
@@ -1626,7 +1626,7 @@ object LlmData {
     import spark.implicits._
     Tables.events(spark, dir)
       .select($"user_id", date_trunc("second", $"ts").as("ts"),
-        round($"value" * 100).cast("long").as("v_c"))
+        cents($"value").as("v_c"))
       .groupBy($"user_id", session_window($"ts", s"$gapSeconds seconds"))
       .agg(count(lit(1)).as("n_events"),
         (sum($"v_c") / lit(100.0)).as("sum_value"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Tables, VerifiedQuery}
+import graft.functions.cents
 
 /** Data reconciliation + drift monitoring — the operational tier of a
   * pipeline that re-ingests snapshots: diff two versions of a table
@@ -30,7 +31,7 @@ object Reconcile {
   def datasetDiff(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = Tables.orders(spark, dir)
-      .select($"o_orderkey".as("k"), round($"o_totalprice" * 100).cast("long").as("price_c"))
+      .select($"o_orderkey".as("k"), cents($"o_totalprice").as("price_c"))
     val cur = base.filter($"k" % 89 =!= 0)
     val old = base.filter($"k" % 97 =!= 0)
       .select($"k", when($"k" % 13 === 0, $"price_c" + 1000L).otherwise($"price_c").as("price_c"))
@@ -85,7 +86,7 @@ object Reconcile {
     import spark.implicits._
     def binned(lo: String, hi: String) = Tables.orders(spark, dir)
       .filter($"o_orderdate" >= lo && $"o_orderdate" < hi)
-      .select((round($"o_totalprice" * 100).cast("long")).as("price_c"))
+      .select(cents($"o_totalprice").as("price_c"))
       .groupBy(expr("price_c div 5000000").as("bin"))
       .agg(count(lit(1)).as("n"))
     // O(bins) frames, each consumed twice (bin join + totals) — cached so

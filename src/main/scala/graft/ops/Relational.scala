@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import graft.{Tables, VerifiedQuery}
+import graft.functions.cents
 
 /** Relational operator library: every scan/filter/projection/join/aggregate/
   * sort/window/set-op family from SURVEY §2 (the reference's operator
@@ -26,9 +27,6 @@ import graft.{Tables, VerifiedQuery}
   *    bit-comparable to the DuckDB oracle.
   */
 object Relational {
-
-  /** l_extendedprice etc. have 2-decimal precision; integer cents are exact. */
-  private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
 
   // ---------------------------------------------------------------- flagship
 
@@ -290,10 +288,13 @@ object Relational {
       .filter($"o_orderdate".between(lit("1997-01-01").cast("date"), lit("1997-06-30").cast("date")))
       .select($"o_orderkey",
         date_format($"o_orderdate", "yyyy-MM-dd").as("odate"),
-        // round(0.9*price, 2) half-up, done on exact integer cents: Spark's
-        // round() (BigDecimal over the binary value) and DuckDB's (multiply-
-        // shift) disagree on ties, so neither is used on computed doubles.
-        (expr("(CAST(round(o_totalprice*100) AS BIGINT) * 9 + 5) DIV 10") / lit(100.0)).as("disc_price"),
+        // round(0.9*price, 2) half-up on exact integers: (cents × 9 + 5)
+        // DIV 10. Neither engine's round() runs on the computed 0.9*price,
+        // because Spark's (BigDecimal of Double.toString) and DuckDB's
+        // (multiply-shift) disagree on its ties. Only the stored price is
+        // rounded, by graft_cents, which the oracle spells as
+        // CAST(round(o_totalprice*100) AS BIGINT).
+        (call_function("div", cents($"o_totalprice") * 9 + 5, lit(10)) / lit(100.0)).as("disc_price"),
         $"o_orderpriority")
   }
 
@@ -645,7 +646,7 @@ object Relational {
     * order-dependent double summation. */
   private def revE4(price: org.apache.spark.sql.Column,
                     disc: org.apache.spark.sql.Column) =
-    cents(price) * (lit(100L) - round(disc * 100).cast("long"))
+    cents(price) * (lit(100L) - cents(disc))
 
   /** TPC-H Q3-shape shipping priority: segment-filtered customers ×
     * date-filtered orders × lineitem, top-10 open orders by discounted
@@ -743,10 +744,10 @@ object Relational {
   def unpivotMeasures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.lineitem(spark, dir)
-      .select(round($"l_quantity" * 100).cast("long").as("qty_c"),
-        round($"l_extendedprice" * 100).cast("long").as("price_c"),
-        round($"l_discount" * 100).cast("long").as("disc_c"),
-        round($"l_tax" * 100).cast("long").as("tax_c"))
+      .select(cents($"l_quantity").as("qty_c"),
+        cents($"l_extendedprice").as("price_c"),
+        cents($"l_discount").as("disc_c"),
+        cents($"l_tax").as("tax_c"))
       .unpivot(Array.empty, Array($"qty_c", $"price_c", $"disc_c", $"tax_c"),
         "measure", "value_c")
       .groupBy($"measure")

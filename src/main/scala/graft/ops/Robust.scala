@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Tables, VerifiedQuery}
+import graft.functions.cents
 
 /** Robust statistics — the outlier tier of data curation: exact per-group
   * median / MAD (median absolute deviation) outlier detection and
@@ -65,7 +66,7 @@ object Robust {
     // (graft.Tuning.withSourceWidth)
     import spark.implicits._
     val c = Tables.orders(spark, dir).select($"o_orderstatus".as("g"),
-      round($"o_totalprice" * 100).cast("long").as("v"))
+      cents($"o_totalprice").as("v"))
     // ONE corpus scan (r17; was 3 — value histogram, deviation histogram,
     // outlier agg each re-read orders). Every downstream quantity is a
     // cnt-weighted aggregate over the distinct-value histogram: the
@@ -144,7 +145,7 @@ object Robust {
     // (graft.Tuning.withSourceWidth)
     import spark.implicits._
     val c = Tables.customer(spark, dir).select($"c_mktsegment".as("seg"),
-      round($"c_acctbal" * 100).cast("long").as("bal_c"))
+      cents($"c_acctbal").as("bal_c"))
     // ONE corpus scan (r17): bucket assignment and the per-bucket stats are
     // cnt-weighted aggregates over the same distinct-value histogram the
     // bounds need — cache it and derive both (the winsorize pattern).

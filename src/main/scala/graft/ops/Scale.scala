@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Tables, VerifiedQuery}
+import graft.functions.cents
 
 /** Scale-technique operators: bucketed co-located joins and salted skew
   * aggregation — the two patterns that decide whether a 100 TB join/agg
@@ -47,8 +48,8 @@ object Scale {
       .groupBy(col("o_orderpriority"))
       .agg(
         count(lit(1)).as("n_items"),
-        (sum(round(col("l_extendedprice") * 100).cast("long") *
-          (lit(100) - round(col("l_discount") * 100).cast("long"))) / lit(10000.0)).as("revenue"))
+        (sum(cents(col("l_extendedprice")) *
+          (lit(100) - cents(col("l_discount")))) / lit(10000.0)).as("revenue"))
   }
 
   private val bucketedJoinSql =
@@ -72,7 +73,7 @@ object Scale {
       .groupBy($"l_returnflag", $"salt")
       .agg(
         count(lit(1)).as("pn"),
-        sum(round($"l_extendedprice" * 100).cast("long")).as("psum_c"),
+        sum(cents($"l_extendedprice")).as("psum_c"),
         max($"l_quantity").as("pmax_q"))
       .groupBy($"l_returnflag")
       .agg(
@@ -113,7 +114,7 @@ object Scale {
       .groupBy(col("n_name"))
       .agg(
         count(lit(1)).as("n_rows"),
-        (sum(round(col("l_extendedprice") * 100).cast("long")) / lit(100.0)).as("sum_price"))
+        (sum(cents(col("l_extendedprice"))) / lit(100.0)).as("sum_price"))
   }
 
   private val skewJoinSql =
@@ -147,7 +148,7 @@ object Scale {
       .groupBy($"n_name")
       .agg(
         count(lit(1)).as("n_rows"),
-        (sum(round($"l_extendedprice" * 100).cast("long")) / lit(100.0)).as("sum_price"))
+        (sum(cents($"l_extendedprice")) / lit(100.0)).as("sum_price"))
   }
 
   private val saltedJoinSql = skewJoinSql // identical semantics by design

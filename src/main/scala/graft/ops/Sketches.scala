@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Tables, VerifiedQuery}
+import graft.functions.cents
 
 /** Deterministic sketch tier — the approximate data structures a 100 TB
   * pipeline uses for frequency / membership / cardinality questions
@@ -603,7 +604,7 @@ object Sketches {
       .agg(count(lit(1)).as("n_candidates"),
         sum(coalesce($"matched", lit(0L))).as("n_joined"),
         sum(when($"matched".isNull, 1L).otherwise(0L)).as("n_pruned_fp"),
-        sum(when($"matched" === 1L, round($"o_totalprice" * 100).cast("long"))
+        sum(when($"matched" === 1L, cents($"o_totalprice"))
           .otherwise(0L)).as("revenue_c"))
   }
 
@@ -805,7 +806,7 @@ object Sketches {
       s"shiftleft(cast(1 as bigint), greatest(length(bin($col)) - 1 - $QsBits, 0))"
     val vals = Tables.lineitem(spark, dir)
       .select($"l_returnflag".as("scope"),
-        round($"l_extendedprice" * 100).cast("long").as("v"))
+        cents($"l_extendedprice").as("v"))
     // ONE corpus scan (r17; was 2 — the sketch and the exact audit each
     // re-scanned lineitem). This REGISTERED query always carries the exact
     // distinct-value histogram as its verification audit, so the sketch's

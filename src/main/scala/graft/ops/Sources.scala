@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Tables, VerifiedQuery}
+import graft.functions.cents
 
 /** Additional source/sink formats beyond parquet/CSV: JSON-lines and ORC
   * round-trips, each verified by reading back and aggregating against the
@@ -22,7 +23,7 @@ object Sources {
     val path = s"$fixtureRoot/json_${tag(dir)}"
     Tables.supplier(spark, dir)
       .select($"s_suppkey", $"s_name", $"s_nationkey",
-        round($"s_acctbal" * 100).cast("long").as("bal_c"))
+        cents($"s_acctbal").as("bal_c"))
       .write.mode("overwrite").json(path)
     val schema = StructType(Seq(
       StructField("s_suppkey", LongType), StructField("s_name", StringType),
@@ -45,7 +46,7 @@ object Sources {
     import spark.implicits._
     val path = s"$fixtureRoot/orc_${tag(dir)}"
     Tables.part(spark, dir)
-      .select($"p_partkey", $"p_brand", round($"p_retailprice" * 100).cast("long").as("price_c"))
+      .select($"p_partkey", $"p_brand", cents($"p_retailprice").as("price_c"))
       .write.mode("overwrite").orc(path)
     spark.read.orc(path)
       .groupBy($"p_brand")
@@ -68,7 +69,7 @@ object Sources {
     val path = s"$fixtureRoot/csv_${tag(dir)}"
     Tables.customer(spark, dir)
       .select($"c_custkey", $"c_mktsegment", $"c_nationkey",
-        round($"c_acctbal" * 100).cast("long").as("bal_c"))
+        cents($"c_acctbal").as("bal_c"))
       .write.mode("overwrite").option("header", "true").csv(path)
     val schema = StructType(Seq(
       StructField("c_custkey", LongType), StructField("c_mktsegment", StringType),
@@ -100,7 +101,7 @@ object Sources {
     val path = s"$fixtureRoot/evo_${tag(dir)}"
     val base = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_orderstatus",
-        round($"o_totalprice" * 100).cast("long").as("price_c"))
+        cents($"o_totalprice").as("price_c"))
     base.filter($"o_orderkey" % 2 === 0)
       .select($"o_orderkey", $"price_c") // v1 schema: no status column
       .write.mode("overwrite").parquet(s"$path/v=1")

@@ -13,229 +13,123 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_dot`",
-              "expectedNum" -> "2",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        // accept array<float>/array<int> inputs by upcasting here (the
-        // expression itself requires array<double>)
-        def asDouble(e: Expression): Expression = e.dataType match {
-          case ArrayType(DoubleType, _) => e
-          case _ => Cast(e, ArrayType(DoubleType))
-        }
-        DotProduct(asDouble(exprs.head), asDouble(exprs(1)))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_kgrams"),
-      new ExpressionInfo(classOf[KgramHashes].getName, "graft_kgrams"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_kgrams`",
-              "expectedNum" -> "2",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        KgramHashes(exprs.head, exprs(1))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimhashDet].getName, "graft_simhash"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_simhash`",
-              "expectedNum" -> "1",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        SimhashDet(exprs.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_sign_key"),
-      new ExpressionInfo(classOf[SignBucketKey].getName, "graft_sign_key"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 3 && exprs.length != 4) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_sign_key`",
-              "expectedNum" -> "3",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        // plane matrix, width and widen pairs are structural parameters,
-        // not per-row data — they must fold at analysis time
-        // (lit(Array[Double]), lit(Int), lit(Array[Int])). ADVICE r10: an
-        // AnalysisException (same error path as the arity check), not a
-        // bare require, so a non-foldable argument surfaces as an analysis
-        // error rather than an IllegalArgumentException from plan rewrite.
-        // ADVICE r11: pair each param with ITS type — a non-foldable
-        // planes/widenPairs used to produce an error claiming INT
-        val params = Seq("planes" -> "\"ARRAY<DOUBLE>\"", "bits" -> "\"INT\"",
-          "widenPairs" -> "\"ARRAY<INT>\"")
-        exprs.drop(1).zip(params).foreach { case (e, (name, tpe)) =>
-          if (!e.foldable) {
-            throw new AnalysisException(
-              errorClass = "NON_FOLDABLE_ARGUMENT",
-              messageParameters = Map(
-                "funcName" -> "`graft_sign_key`",
-                "paramName" -> s"`$name`",
-                "paramType" -> tpe))
-          }
-        }
-        val planes = exprs(1).eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-        val bits = exprs(2).eval() match {
-          case i: java.lang.Integer => i.intValue()
-          // ADVICE r10: a Long literal was silently truncated with toInt —
-          // accept only values that survive the Int round-trip
-          case l: java.lang.Long if l.longValue() == l.longValue().toInt => l.intValue()
-          case other => throw new IllegalArgumentException(
-            s"graft_sign_key bits literal must be a 32-bit integer, got: $other")
-        }
-        val pairs = exprs.lift(3).map(_.eval()
-            .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray())
-          .getOrElse(Array.empty[Int])
-        def asDouble(e: Expression): Expression = e.dataType match {
-          case ArrayType(DoubleType, _) => e
-          case _ => Cast(e, ArrayType(DoubleType))
-        }
-        SignBucketKey(asDouble(exprs.head), planes, bits, pairs)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(classOf[Normalize].getName, "graft_normalize"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_normalize`",
-              "expectedNum" -> "1",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        Normalize(exprs.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinhashSig].getName, "graft_minhash_sig"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 3) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_minhash_sig`",
-              "expectedNum" -> "3",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        MinhashSig(exprs.head, exprs(1), exprs(2))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_kgram_stats"),
-      new ExpressionInfo(classOf[KgramStats].getName, "graft_kgram_stats"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_kgram_stats`",
-              "expectedNum" -> "2",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        KgramStats(exprs.head, exprs(1))
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_md5_long"),
-      new ExpressionInfo(classOf[Md5Long].getName, "graft_md5_long"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_md5_long`",
-              "expectedNum" -> "1",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        Md5Long(exprs.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_md5_chunks"),
-      new ExpressionInfo(classOf[Md5Chunks].getName, "graft_md5_chunks"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_md5_chunks`",
-              "expectedNum" -> "1",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        Md5Chunks(exprs.head)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_token_stats"),
-      new ExpressionInfo(classOf[TokenStats].getName, "graft_token_stats"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_token_stats`",
-              "expectedNum" -> "2",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        // the dictionary list is a structural parameter, not per-row data
-        if (!exprs(1).foldable) {
+    def register(name: String, cls: Class[_], arity: Int*)(
+        build: Seq[Expression] => Expression): Unit =
+      extensions.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (exprs: Seq[Expression]) => {
+          GraftExtensions.checkArity(name, exprs, arity)
+          build(exprs)
+        }))
+
+    // array inputs are upcast here (the expressions themselves require
+    // array<double>), so array<float>/array<int> columns work directly
+    def asDouble(e: Expression): Expression = e.dataType match {
+      case ArrayType(DoubleType, _) => e
+      case _ => Cast(e, ArrayType(DoubleType))
+    }
+
+    register("graft_dot", classOf[DotProduct], 2) { exprs =>
+      DotProduct(asDouble(exprs.head), asDouble(exprs(1)))
+    }
+    register("graft_kgrams", classOf[KgramHashes], 2) { exprs =>
+      KgramHashes(exprs.head, exprs(1))
+    }
+    register("graft_simhash", classOf[SimhashDet], 1) { exprs =>
+      SimhashDet(exprs.head)
+    }
+    register("graft_sign_key", classOf[SignBucketKey], 3, 4) { exprs =>
+      // plane matrix, width and widen pairs are structural parameters,
+      // not per-row data — they must fold at analysis time
+      // (lit(Array[Double]), lit(Int), lit(Array[Int])). ADVICE r10: an
+      // AnalysisException (same error path as the arity check), not a
+      // bare require, so a non-foldable argument surfaces as an analysis
+      // error rather than an IllegalArgumentException from plan rewrite.
+      // ADVICE r11: pair each param with ITS type — a non-foldable
+      // planes/widenPairs used to produce an error claiming INT
+      val params = Seq("planes" -> "\"ARRAY<DOUBLE>\"", "bits" -> "\"INT\"",
+        "widenPairs" -> "\"ARRAY<INT>\"")
+      exprs.drop(1).zip(params).foreach { case (e, (name, tpe)) =>
+        if (!e.foldable) {
           throw new AnalysisException(
             errorClass = "NON_FOLDABLE_ARGUMENT",
             messageParameters = Map(
-              "funcName" -> "`graft_token_stats`",
-              "paramName" -> "`dicts`",
-              "paramType" -> "\"ARRAY<ARRAY<STRING>>\""))
+              "funcName" -> "`graft_sign_key`",
+              "paramName" -> s"`$name`",
+              "paramType" -> tpe))
         }
-        val dicts = exprs(1).eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        val seqs = (0 until dicts.numElements()).map { d =>
-          val words = dicts.getArray(d)
-          (0 until words.numElements())
-            .map(w => words.getUTF8String(w).toString).toSeq
-        }.toSeq
-        TokenStats(exprs.head, seqs)
-      }))
-    extensions.injectFunction((
-      new FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[Simhash64].getName, "graft_simhash64"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1) {
-          throw new AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_simhash64`",
-              "expectedNum" -> "1",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        }
-        Simhash64(exprs.head)
-      }))
+      }
+      val planes = exprs(1).eval()
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
+      val bits = exprs(2).eval() match {
+        case i: java.lang.Integer => i.intValue()
+        // ADVICE r10: a Long literal was silently truncated with toInt —
+        // accept only values that survive the Int round-trip
+        case l: java.lang.Long if l.longValue() == l.longValue().toInt => l.intValue()
+        case other => throw new IllegalArgumentException(
+          s"graft_sign_key bits literal must be a 32-bit integer, got: $other")
+      }
+      val pairs = exprs.lift(3).map(_.eval()
+          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray())
+        .getOrElse(Array.empty[Int])
+      SignBucketKey(asDouble(exprs.head), planes, bits, pairs)
+    }
+    register("graft_normalize", classOf[Normalize], 1) { exprs =>
+      Normalize(exprs.head)
+    }
+    register("graft_minhash_sig", classOf[MinhashSig], 3) { exprs =>
+      MinhashSig(exprs.head, exprs(1), exprs(2))
+    }
+    register("graft_kgram_stats", classOf[KgramStats], 2) { exprs =>
+      KgramStats(exprs.head, exprs(1))
+    }
+    register("graft_md5_long", classOf[Md5Long], 1) { exprs =>
+      Md5Long(exprs.head)
+    }
+    register("graft_md5_chunks", classOf[Md5Chunks], 1) { exprs =>
+      Md5Chunks(exprs.head)
+    }
+    register("graft_token_stats", classOf[TokenStats], 2) { exprs =>
+      // the dictionary list is a structural parameter, not per-row data
+      if (!exprs(1).foldable) {
+        throw new AnalysisException(
+          errorClass = "NON_FOLDABLE_ARGUMENT",
+          messageParameters = Map(
+            "funcName" -> "`graft_token_stats`",
+            "paramName" -> "`dicts`",
+            "paramType" -> "\"ARRAY<ARRAY<STRING>>\""))
+      }
+      val dicts = exprs(1).eval()
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val seqs = (0 until dicts.numElements()).map { d =>
+        val words = dicts.getArray(d)
+        (0 until words.numElements())
+          .map(w => words.getUTF8String(w).toString).toSeq
+      }.toSeq
+      TokenStats(exprs.head, seqs)
+    }
+    register("graft_simhash64", classOf[Simhash64], 1) { exprs =>
+      Simhash64(exprs.head)
+    }
+    register("graft_cents", classOf[Cents], 1) { exprs =>
+      Cents(exprs.head)
+    }
   }
+}
+
+object GraftExtensions {
+
+  /** Spark's own arity error unless `exprs` has one of the `allowed`
+    * lengths; the message names the first. */
+  private def checkArity(name: String, exprs: Seq[Expression], allowed: Seq[Int]): Unit =
+    if (!allowed.contains(exprs.length)) {
+      throw new AnalysisException(
+        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+        messageParameters = Map(
+          "functionName" -> s"`$name`",
+          "expectedNum" -> allowed.head.toString,
+          "actualNum" -> exprs.length.toString,
+          "docroot" -> "https://spark.apache.org/docs/latest"))
+    }
 }

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.functions.cents
 
 /** Structured Streaming surface (beyond-reference, SURVEY §2.10): the
   * streaming twin of [[graft.ops.LlmData.sessionize]] — gap-based sessions
@@ -347,7 +348,7 @@ object StreamSessionize {
       .withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), s"$windowSeconds seconds"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("sum_value_c"))
+        sum(cents(col("value"))).as("sum_value_c"))
       .select(col("window.start").as("w_start"), col("event_type"),
         col("n"), col("sum_value_c"))
       .writeStream.format("memory").queryName(sinkName)
@@ -393,7 +394,7 @@ object StreamSessionize {
       .groupBy(window(col("ts"), s"$windowSeconds seconds", s"$slideSeconds seconds"),
         col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("sum_value_c"))
+        sum(cents(col("value"))).as("sum_value_c"))
       .select(col("window.start").as("w_start"), col("event_type"),
         col("n"), col("sum_value_c"))
       .writeStream.format("memory").queryName(sinkName)
@@ -440,7 +441,7 @@ object StreamSessionize {
     startDrained(spark, inDir)(dedupStream(stream, Seq("event_id"), watermarkDelay = "1 hour")
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
-        sum(round($"value" * 100).cast("long")).as("sum_value_c"),
+        sum(cents($"value")).as("sum_value_c"),
         min($"event_id").as("min_event_id"),
         max($"event_id").as("max_event_id"))
       .writeStream.format("memory").queryName(sinkName)
@@ -496,7 +497,7 @@ object StreamSessionize {
           $"purchase_ts" <= $"click_ts" + expr(s"INTERVAL $horizonSeconds SECONDS")))
       .select($"click_id", $"purchase_id", $"c_user".as("user_id"),
         (unix_timestamp($"purchase_ts") - unix_timestamp($"click_ts")).as("delay_s"),
-        round($"value" * 100).cast("long").as("value_c"))
+        cents($"value").as("value_c"))
   }
 
   /** Watermarked stream-stream LEFT OUTER join — [[availableNowStreamJoin]]
@@ -553,7 +554,7 @@ object StreamSessionize {
       .filter($"click_id" >= 0)
       .select($"click_id", $"purchase_id", $"c_user".as("user_id"),
         (unix_timestamp($"purchase_ts") - unix_timestamp($"click_ts")).as("delay_s"),
-        round($"value" * 100).cast("long").as("value_c"))
+        cents($"value").as("value_c"))
   }
 
   /** Stream-static enrich: the streaming fact joined to a static
@@ -588,7 +589,7 @@ object StreamSessionize {
         .select($"event_id", $"user_id",
           coalesce($"c_mktsegment", lit("UNKNOWN")).as("segment"),
           coalesce($"c_nationkey", lit(-1L)).as("nation_key"),
-          round($"value" * 100).cast("long").as("value_c")))
+          cents($"value").as("value_c")))
   }
 
   /** foreachBatch idempotent sink — exactly-once parquet output on top of
@@ -652,7 +653,7 @@ object StreamSessionize {
     spark.read.parquet(outDir)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
-        (sum(round($"value" * 100).cast("long")) / lit(100.0)).as("sum_value"),
+        (sum(cents($"value")) / lit(100.0)).as("sum_value"),
         min($"event_id").as("min_event_id"),
         max($"event_id").as("max_event_id"))
   }

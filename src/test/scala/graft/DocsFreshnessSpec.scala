@@ -106,4 +106,52 @@ class DocsFreshnessSpec extends AnyFunSuite {
     assert(claimed == actual,
       s"README claims $claimed scalatest cases but sources register $actual")
   }
+
+  /** Engine-side inline cents rules in Scala source `src`: the Column form
+    * `round(… * 100).cast("long")` anywhere, and the SQL form
+    * `CAST(round(…*100) AS BIGINT)` outside DuckDB oracle strings. Comments
+    * are skipped; an oracle string is one inside an object member whose
+    * name ends in `Sql` (every oracle in the tree is `private val xSql`). */
+  private def inlineCents(src: String): Seq[String] = {
+    val noBlocks = """(?s)/\*.*?\*/""".r.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
+    val lines = noBlocks.split("\n", -1).map(l => if (l.trim.startsWith("//")) "" else l)
+    val arg = """(?:[^()]|\([^()]*\))*"""
+    val columnForm = s"""round\\($arg\\*\\s*100(?:\\.0)?\\s*\\)\\s*\\.cast\\(\\s*"(?:long|bigint)"\\s*\\)""".r
+    val sqlForm = s"""(?i)CAST\\s*\\(\\s*round\\s*\\($arg\\*\\s*100(?:\\.0)?\\s*\\)\\s*AS\\s+BIGINT""".r
+    val member = """^  (?:(?:private|protected|override|final)(?:\[\w+\])?\s+)*(?:lazy\s+)?(?:val|def)\s+(\w+)""".r
+    var owner = ""
+    lines.indices.flatMap { i =>
+      member.findFirstMatchIn(lines(i)).foreach(m => owner = m.group(1))
+      val hits = columnForm.findAllIn(lines(i)).toSeq ++
+        (if (owner.endsWith("Sql")) Nil else sqlForm.findAllIn(lines(i)).toSeq)
+      hits.map(h => s"line ${i + 1}: $h")
+    }
+  }
+
+  test("no src/main file computes cents inline: graft.functions.cents owns the rule") {
+    // the detector itself: each inline form is caught, oracle SQL is not
+    val q3 = "\"\"\""
+    val probe = Seq(
+      "object P {",
+      """  def q(spark: SparkSession) = t.select(round($"p" * 100).cast("long"),""",
+      """    expr("(CAST(round(p*100) AS BIGINT) * 9 + 5) DIV 10"))""",
+      "  private val qSql =",
+      s"    ${q3}SELECT CAST(round(p*100) AS BIGINT) AS c FROM t$q3",
+      """  // round($"p" * 100).cast("long") in a comment is fine""",
+      "}").mkString("\n")
+    assert(inlineCents(probe).map(_.takeWhile(_ != ':')) == Seq("line 2", "line 3"),
+      inlineCents(probe))
+    // sbt forks the test JVM with cwd = project base
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val offenders = scalaFiles(root).flatMap { f =>
+      inlineCents(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+        .map(h => s"${f.getPath} $h")
+    }
+    assert(offenders.isEmpty,
+      s"inline cents rule in src/main (use graft.functions.cents): ${offenders.mkString("; ")}")
+  }
 }

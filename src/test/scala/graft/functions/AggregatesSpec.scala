@@ -7,7 +7,11 @@ class AggregatesSpec extends SparkSpec {
   import spark.implicits._
 
   test("ExactMoneySum equals exact cents math regardless of partitioning") {
-    val vals = (1 to 5000).map(i => (i % 7, i * 0.01 + (i % 3) * 10.0))
+    // plus negative cent ties: -0.125 * 100 is exactly -12.5, which the
+    // cents rule rounds half away from zero to -13
+    val ties = Seq(-0.125, -1.125, -0.005, 0.125)
+    val vals = (1 to 5000).map(i => (i % 7, i * 0.01 + (i % 3) * 10.0)) ++
+      ties.map(v => (7, v))
     val moneySum = udaf(ExactMoneySum)
     Seq(1, 4, 32).foreach { parts =>
       val df = vals.toDF("k", "v").repartition(parts)
@@ -18,6 +22,8 @@ class AggregatesSpec extends SparkSpec {
         .as[(Int, Double)].collect().toMap
       assert(got == exact, s"mismatch at $parts partitions")
     }
+    val one = Seq(-0.125).toDF("v").agg(moneySum($"v")).as[Double].head()
+    assert(one == -0.13, s"ExactMoneySum(-0.125) = $one, the cents rule gives -0.13")
   }
 
   test("sketch aggregates land within tolerance of exact answers") {

@@ -1,12 +1,13 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.functions.{Text, Vectors => V}
+import graft.functions.{Text, cents, Vectors => V}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Generator-driven bit-equality fuzz for the five native Catalyst
+/** Generator-driven bit-equality fuzz for the native Catalyst
   * expressions (r13 verdict item 3) — the one place in the repo where a
   * wrong answer could hide outside SQL's reach, because each replaces an
   * interpreted HOF/composed form with hand-written codegen.
@@ -318,5 +319,88 @@ class NativeExprPropertySpec extends SparkSpec {
         s"sign key diverges on row $i (emb=${embs(i).map(_.take(4).mkString(","))}): $c vs $f")
     }
     assert(rows.map(_._2).distinct.length > 8, "fixture degenerate: keys barely vary")
+  }
+
+  // ------------------------------------------------------------------ cents
+
+  private def withAnsi[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, on.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  test("fuzz: graft_cents == round(x * 100).cast(long) over 2000+ doubles, ANSI on and off") {
+    def around(x: Double, k: Int): Seq[Double] =
+      Iterator.iterate(x)(Math.nextUp).take(k + 1).toSeq ++
+        Iterator.iterate(x)(Math.nextDown).slice(1, k + 1).toSeq
+    // (n + 0.5)/100 lands on, just above or just below the cent tie once
+    // multiplied back; nextUp/nextDown push it off on purpose
+    val tie: Gen[Double] = for {
+      n <- Gen.frequency(4 -> Gen.choose(0L, 100000L), 2 -> Gen.choose(0L, 1L << 40),
+        1 -> Gen.choose(0L, (1L << 52) - 1))
+      sign <- Gen.oneOf(1.0, -1.0)
+      step <- Gen.oneOf(-1, 0, 0, 1)
+    } yield {
+      val t = sign * (n + 0.5) / 100
+      if (step > 0) Math.nextUp(t) else if (step < 0) Math.nextDown(t) else t
+    }
+    val randomD: Gen[Double] = Gen.frequency(
+      6 -> Gen.chooseNum(-1e6, 1e6),
+      2 -> Gen.chooseNum(-1e13, 1e13),
+      1 -> Gen.chooseNum(Long.MinValue, Long.MaxValue).map(java.lang.Double.longBitsToDouble))
+    val twoTo52 = math.pow(2, 52)
+    val edges = Seq(0.0, -0.0, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.MaxValue, Double.MinValue, Double.MinPositiveValue) ++
+      Seq(twoTo52 / 100, -twoTo52 / 100, Long.MaxValue.toDouble / 100,
+        Long.MinValue.toDouble / 100).flatMap(around(_, 4))
+    val xs: Seq[Option[Double]] =
+      (samples(randomD, 900, 101L) ++ samples(tie, 1200, 102L) ++ edges).map(Some(_)) :+ None
+    val df = viaParquet(xs.zipWithIndex.toDF("x", "i"))
+    def pair(frame: DataFrame): Array[(Int, Option[Long], Option[Long])] =
+      frame.select($"i", round($"x" * 100).cast("long"), cents($"x"))
+        .as[(Int, Option[Long], Option[Long])].collect()
+    def assertPairs(rows: Array[(Int, Option[Long], Option[Long])], mode: String): Unit =
+      rows.foreach { case (i, c, n) =>
+        assert(c == n, s"ANSI $mode: cents diverge on x=${xs(i)}: composed=$c native=$n")
+      }
+
+    withAnsi(on = false) {
+      val rows = pair(df)
+      assert(rows.length == xs.length)
+      assertPairs(rows, "off")
+    }
+    // ANSI on: |x| < 1e14 cannot overflow a long, so those rows compare in
+    // one job; every other row runs alone so each side's error is its own
+    val safe = (x: Option[Double]) => x.forall(v => math.abs(v) < 1e14)
+    withAnsi(on = true) {
+      val rows = pair(df.filter($"x".isNull || abs($"x") < 1e14))
+      assert(rows.length == xs.count(safe))
+      assertPairs(rows, "on")
+      var bothThrew = 0
+      xs.indices.filterNot(i => safe(xs(i))).foreach { i =>
+        val one = df.filter($"i" === i)
+        val c = scala.util.Try(one.select(round($"x" * 100).cast("long")).as[Long].head())
+        val n = scala.util.Try(one.select(cents($"x")).as[Long].head())
+        assert(c.isFailure == n.isFailure && c.toOption == n.toOption,
+          s"ANSI on: cents diverge on x=${xs(i)}: composed=$c native=$n")
+        if (c.isFailure) bothThrew += 1
+      }
+      assert(bothThrew >= 5, s"fixture degenerate: only $bothThrew ANSI overflow rows")
+    }
+    val exactTies = xs.flatten.count(x => math.abs(x * 100) % 1 == 0.5)
+    assert(exactTies > 200, s"fixture degenerate: only $exactTies exact cent ties")
+  }
+
+  test("graft_cents takes exactly one double argument, checked at analysis") {
+    val df = Seq((1, 1.5f, 1.5)).toDF("i", "f", "d")
+    Seq($"i", $"f").foreach { c =>
+      val e = intercept[AnalysisException](df.select(cents(c)))
+      assert(e.getMessage.contains("graft_cents requires a double input"), e.getMessage)
+    }
+    val arity = intercept[AnalysisException](df.select(call_function("graft_cents", $"d", $"d")))
+    assert(arity.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+    assert(arity.getMessageParameters.get("expectedNum") == "1")
+    assert(arity.getMessageParameters.get("actualNum") == "2")
   }
 }
