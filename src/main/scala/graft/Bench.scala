@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 object Bench {
 
@@ -10,28 +8,6 @@ object Bench {
     * included the fold's own JIT. bench_delta refuses to normalize
     * calib ratios across differing protocol numbers. */
   private[graft] val CalibProtocol = 2
-
-  /** Force FULL evaluation of every output column. A `count()` action lets
-    * Catalyst prune the projection list, so expression-heavy narrow queries
-    * (regex/string/array work) would be timed without ever running their
-    * expressions. The checksum aggregate hashes every row's full struct —
-    * one codegen'd pass, nothing escapes evaluation, and the driver
-    * receives a single long. `bit_xor` (not `sum`) because summing uniform
-    * 64-bit hashes overflows a partial sum within a few rows under Spark 4's
-    * ANSI mode, aborting the job and silently re-evaluating the query via a
-    * fallback — doubling its timed cost. XOR is order-independent and cannot
-    * overflow. The row-wise fallback exists ONLY for output types xxhash64
-    * rejects at analysis time (e.g. VectorUDT); genuine runtime failures
-    * propagate to the timing loop and are reported, never swallowed. */
-  private def force(df: DataFrame): Unit = {
-    val checksummed =
-      try Some(df.select(xxhash64(struct(df.columns.toIndexedSeq.map(col): _*)).as("h")))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    checksummed match {
-      case Some(h) => h.agg(expr("bit_xor(h)")).collect()
-      case None    => df.foreach(_ => ())
-    }
-  }
 
   private[graft] def jStr(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
@@ -83,32 +59,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Loader contract (Tables.scala): every graft session pins UTC so the
-      // NTZ→TimestampType cast for events.ts yields host-independent instants.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Reliable-checkpoint store for iterative operators (HDFS/S3 on a
-    // cluster): per-process temp dir, deleted on exit — a fixed path would
-    // accumulate one UUID subdir per run
-    val ckptRoot = java.nio.file.Files.createTempDirectory("graft-ckpt-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(ckptRoot)
-    }))
-    spark.sparkContext.setCheckpointDir(ckptRoot.getAbsolutePath)
+    val spark = GraftSession.create(cpus)
     // Contention gate (r7 verdict item 1): a bench started on a busy host
     // records numbers that overstate every query (r7's committed artifact:
     // start load 4.3 → +4% vs the same-HEAD solo run). Wait, bounded, for
@@ -187,6 +140,17 @@ object Bench {
     // failure is reported in the JSON and via exit code — never silently
     // recorded as a healthy number.
     val failures = scala.collection.mutable.Map[String, String]()
+    def timed(name: String, run: => org.apache.spark.sql.DataFrame): Double = {
+      val t0 = System.nanoTime()
+      try Fingerprint(run)
+      catch { case e: Throwable =>
+        failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+          .linesIterator.take(1).mkString.take(300)
+      }
+      val dt = (System.nanoTime() - t0) / 1e9
+      perQuery(name) = perQuery(name) :+ dt
+      dt
+    }
     // Per-iteration load average: host contention on a shared box hits some
     // iterations and not others; raw per-iteration rows (below) plus the
     // load trace make a contaminated run self-diagnosing without a re-run.
@@ -208,17 +172,7 @@ object Bench {
       spark.catalog.clearCache()
       val wall0 = System.nanoTime()
       val cpu0 = procBean.map(_.getProcessCpuTime)
-      val t = queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try force(fn(spark, sfDir))
-        catch { case e: Throwable =>
-          failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .linesIterator.take(1).mkString.take(300)
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        perQuery(name) = perQuery(name) :+ dt
-        dt
-      }.sum
+      val t = queries.map { case (name, fn) => timed(name, fn(spark, sfDir)) }.sum
       val load = osBean.getSystemLoadAverage
       iterLoadAvg += load
       iterExternalLoad += procBean.map { b =>
@@ -244,16 +198,7 @@ object Bench {
       val slowSet = slowNames.toSet
       (1 to slowIters).foreach { _ =>
         spark.catalog.clearCache()
-        queries.foreach { case (name, fn) if slowSet(name) =>
-          val t0 = System.nanoTime()
-          try force(fn(spark, sfDir))
-          catch { case e: Throwable =>
-            failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-              .linesIterator.take(1).mkString.take(300)
-          }
-          perQuery(name) = perQuery(name) :+ (System.nanoTime() - t0) / 1e9
-        case _ => ()
-        }
+        queries.foreach { case (name, fn) => if (slowSet(name)) timed(name, fn(spark, sfDir)) }
       }
     }
     val medians = queries.map { case (name, _) => name -> median(perQuery(name)) }
@@ -285,7 +230,7 @@ object Bench {
     } catch { case _: Throwable => () } // reporting must not fail the bench
     spark.stop()
     println(compactSummary(total, sfDir, iters, queries.size,
-      iterTotals, iterLoadAvg.toSeq, failures.keys.toSeq, nCpus, cpus,
+      iterTotals, iterLoadAvg.toSeq, failures.keys.toSeq, nCpus, cpus.toString,
       startLoad, maxLoad, loadWaited, iterExternalLoad.toSeq, calibSec))
     if (failures.nonEmpty) {
       System.err.println(s"BENCH: ${failures.size} quer${if (failures.size == 1) "y" else "ies"} FAILED: ${failures.keys.toSeq.sorted.mkString(", ")}")

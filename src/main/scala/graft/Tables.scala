@@ -90,8 +90,18 @@ object Tables {
     readNormalized(spark, s"$dir/orders.parquet", Seq("o_orderdate"), castNtz = false)
   def lineitem(spark: SparkSession, dir: String): DataFrame =
     readNormalized(spark, s"$dir/lineitem.parquet", Seq("l_shipdate"), castNtz = false)
-  def events(spark: SparkSession, dir: String): DataFrame =
+  /** Rejects a session whose time zone is not UTC: the NTZ → TimestampType
+    * cast reads the wall clock in the SESSION zone, so any other zone (a
+    * spark-shell at the host zone) would silently shift every instant. */
+  def events(spark: SparkSession, dir: String): DataFrame = {
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    if (org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(zone).normalized() !=
+        java.time.ZoneOffset.UTC)
+      throw new IllegalStateException(
+        s"Tables.events needs spark.sql.session.timeZone=UTC (this session has $zone): " +
+          "events.ts wall-clock values are read as UTC instants")
     readNormalized(spark, s"$dir/events.parquet", Seq("ts"), castNtz = true)
+  }
   /** `documents` contract: BIGINT `doc_id`/`n_chars` (an INT32-encoded
     * regeneration degrades to a cast — same drift rationale as the
     * timestamp and embedding columns; today's INT64 files pass through

@@ -63,8 +63,8 @@ object Tuning {
 
   /** Production state-store posture for the STATEFUL streaming family
     * (sessionize / stream-stream joins / dedup) — the configuration a
-    * 100 TB deployment sets, pinned in code because the r10 StreamStateProbe
-    * MEASURED the failure mode it prevents (SCALE.md "Streaming state
+    * 100 TB deployment sets, pinned in code because the r10 state-volume
+    * probe MEASURED the failure mode it prevents (SCALE.md "Streaming state
     * volume at 100×"): key-population state grows ×100 with the corpus and
     * q_stream_dedup's key state reached **1.73 GB of executor heap** under
     * the default HDFS-backed provider at sf10, vs 48 MB heap + 195 MB SST
@@ -80,5 +80,6 @@ object Tuning {
     * StreamStateStoreParitySpec pins output equality across both backends
     * via this constant, so the posture swap can never change results. */
   def scaleStreamingConf: Map[String, String] = Map(
-    graft.streaming.StreamSessionize.StateStoreKey -> "rocksdb")
+    "spark.sql.streaming.stateStore.providerClass" ->
+      graft.streaming.StreamSessionize.RocksDbProviderClass)
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,30 +11,7 @@ object Verify {
       case Some(pats) => n => pats.split(',').exists(n.contains)
       case None       => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Reliable-checkpoint store for iterative operators (connectedComponents
-    // checkpoints every few rounds; HDFS/S3 on a cluster). Per-process
-    // temp dir, deleted on exit — a fixed path would accumulate one UUID
-    // subdir per run, and a concurrent Verify/Bench could race on cleanup.
-    val ckptRoot = java.nio.file.Files.createTempDirectory("graft-ckpt-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(ckptRoot)
-    }))
-    spark.sparkContext.setCheckpointDir(ckptRoot.getAbsolutePath)
+    val spark = GraftSession.create(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (nameFilter(name)) {

@@ -41,7 +41,7 @@ object Graph {
                              (build: => DataFrame): DataFrame =
     // Bucket count = the session's shuffle partitions (r12 hardcoded 32,
     // which kept the planner's repartition($"src") elision tied to one
-    // lucky SPARK_GRAFT_CPUS value). The bucket spec is part of the table
+    // lucky core count). The bucket spec is part of the table
     // name (Materialize), so sessions sized differently coexist: each
     // reads/builds the table whose bucketing its own planner can elide.
     spark.table(Materialize.ensureBucketedTable(spark,

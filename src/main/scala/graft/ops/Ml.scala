@@ -163,13 +163,13 @@ object Ml {
       rowsOnly = Some(graft.RowsOnlyContract(
         reason = "learned floats: RF probabilities depend on MLlib's internal RNG/threading",
         columns = Seq("kind", "name", "value"),
-        test = "MlPipelineSpec (AUC/accuracy floors) + tools/MlParityReport",
+        test = "MlPipelineSpec (AUC/accuracy floors)",
         exactRowsSql = Some("SELECT 15")))), // 5 evaluator metrics + top-10 importances
     VerifiedQuery("q_rf_delay", rfDelay, None,
       rowsOnly = Some(graft.RowsOnlyContract(
         reason = "learned floats (same RF family, delay label)",
         columns = Seq("kind", "name", "value"),
-        test = "MlPipelineSpec floors + tools/MlParityReport",
+        test = "MlPipelineSpec floors",
         exactRowsSql = Some("SELECT 15")))),
     VerifiedQuery("q_gbt_congestion", gbtCongestion, None,
       rowsOnly = Some(graft.RowsOnlyContract(

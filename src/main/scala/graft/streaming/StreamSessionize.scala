@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.GraftSession
 import graft.functions.cents
 
 /** Structured Streaming surface (beyond-reference, SURVEY §2.10): the
@@ -19,20 +20,18 @@ import graft.functions.cents
   */
 object StreamSessionize {
 
-  /** Session conf key selecting the state-store backend for every stream
-    * this object launches: unset/"hdfs" = Spark's default in-memory
-    * HDFS-backed provider (right for the kilobyte-state fixture runs);
-    * "rocksdb" = [[RocksDbProviderClass]], the production choice once
-    * state outgrows executor heap (100 TB-scale sessionization holds one
-    * entry per active user — RocksDB keeps that off-heap with changelog
-    * checkpointing). Set it on the builder
-    * (`.config(StateStoreKey, "rocksdb")`) or at runtime via
-    * `spark.conf.set` — it is read at each query start.
-    * StreamStateStoreParitySpec pins output equality across backends. */
-  val StateStoreKey = "graft.stream.stateStore"
+  /** The production state-store provider once state outgrows executor
+    * heap (100 TB-scale sessionization holds one entry per active user —
+    * RocksDB keeps that off-heap with changelog checkpointing). Spark's
+    * own `spark.sql.streaming.stateStore.providerClass` selects it
+    * ([[graft.Tuning.scaleStreamingConf]]); unset, streams run Spark's
+    * default in-memory HDFS-backed provider, right for the kilobyte-state
+    * fixture runs. Every run gets a FRESH checkpoint ([[freshRun]]), and a
+    * provider is sticky only per checkpoint, so the key may change
+    * between runs. StreamStateStoreParitySpec pins output equality
+    * across backends. */
   val RocksDbProviderClass =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderConfKey = "spark.sql.streaming.stateStore.providerClass"
 
   /** Launch a stream inside [[graft.Tuning.withSourceWidth]] sized by its
     * `source` files, and block until the AvailableNow trigger drains. The
@@ -41,28 +40,14 @@ object StreamSessionize {
     * input the stream will read: kilobyte-to-megabyte fixture state gets 4
     * stores, not one per core (measured: q_stream_join 8.5 → 2.9 s
     * steady-state; every stateful q_stream_* ~2×), and a source of
-    * 16 MB × session width or more gets the session's own width.
-    *
-    * Honors [[StateStoreKey]]: the provider class is swapped in only for
-    * the query's start-to-drain span and restored after, so batch work in
-    * the same session never sees a mutated conf. Safe per query because
-    * every run gets a FRESH checkpoint ([[freshRun]]) — a provider is
-    * sticky per checkpoint, never changed under a live one. */
+    * 16 MB × session width or more gets the session's own width. */
   private def startDrained(spark: SparkSession, source: String)(
       start: => org.apache.spark.sql.streaming.StreamingQuery)
       : org.apache.spark.sql.streaming.StreamingQuery =
     graft.Tuning.withSourceWidth(spark, Seq(source)) {
-      val useRocks = spark.conf.getOption(StateStoreKey).exists(_.equalsIgnoreCase("rocksdb"))
-      val prior = spark.conf.getOption(ProviderConfKey)
-      if (useRocks) spark.conf.set(ProviderConfKey, RocksDbProviderClass)
-      try {
-        val query = start
-        query.awaitTermination()
-        query
-      } finally if (useRocks) prior match {
-        case Some(p) => spark.conf.set(ProviderConfKey, p)
-        case None    => spark.conf.unset(ProviderConfKey)
-      }
+      val query = start
+      query.awaitTermination()
+      query
     }
 
   /** Drain a ROW-stream query (output ∝ input, not an aggregate) into
@@ -90,7 +75,7 @@ object StreamSessionize {
                              source: String)(
       stream: DataFrame): DataFrame = {
     val outDir = new java.io.File(s"$fixtureRoot/${kind}_sink_${tag(dir)}")
-    rm(outDir)
+    GraftSession.deleteTree(outDir)
     startDrained(spark, source)(stream.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
@@ -114,22 +99,10 @@ object StreamSessionize {
     * suffix, so two sessions (e.g. a Verify and a Bench running
     * concurrently) never delete each other's in-flight input or
     * checkpoint dirs. Within one JVM repeated calls reuse the root — the
-    * per-call rm-then-rewrite below is single-process-safe. A shutdown
-    * hook deletes the whole tree on exit (`deleteOnExit` would silently
-    * fail on a non-empty directory and leak the corpus copies). Tests
-    * can still override via the `fixtureRoot` parameter. */
-  private lazy val defaultFixtureRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-stream-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rm(d)))
-    d.getAbsolutePath
-  }
-
-  /** Recursive delete, shared by the fixture builders and the shutdown
-    * hook. */
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-    f.delete()
-  }
+    * per-call rm-then-rewrite below is single-process-safe. The whole
+    * tree is deleted on exit. Tests can still override via the
+    * `fixtureRoot` parameter. */
+  private lazy val defaultFixtureRoot: String = GraftSession.scratchDir("graft-stream-")
 
   /** Checkpoint + sink name for one AvailableNow query run: the
     * CHECKPOINT is fresh per call (a stale checkpoint would mark the
@@ -141,7 +114,7 @@ object StreamSessionize {
                        dir: String): (String, String) = {
     val t = tag(dir)
     val ckpt = s"$fixtureRoot/${kind}_ckpt_$t"
-    rm(new java.io.File(ckpt))
+    GraftSession.deleteTree(new java.io.File(ckpt))
     (ckpt, s"${kind}_out_${t.replace(".", "_")}")
   }
 
@@ -186,7 +159,7 @@ object StreamSessionize {
                        (build: String => Unit): String =
     builtInputs.getOrElseUpdate(s"$fixtureRoot|$key|$dir", {
       val inDir = s"$fixtureRoot/${key}_in_${tag(dir)}"
-      rm(new java.io.File(inDir))
+      GraftSession.deleteTree(new java.io.File(inDir))
       build(inDir)
       inDir
     })
@@ -648,7 +621,7 @@ object StreamSessionize {
     Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
       .filter(_.getName.stripPrefix("batch_id=").toLong >= nBatches)
-      .foreach(rm)
+      .foreach(GraftSession.deleteTree)
 
     spark.read.parquet(outDir)
       .groupBy($"event_type")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for the headline queries into
   * PLANS.md — the plan-audit artifact backing the scale claims (what is
@@ -108,15 +107,8 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    // a fixed width, so the dumped plans do not depend on the host's cores
+    val spark = graft.GraftSession.create(4)
 
     val qs = graft.SparkEntry.queries
     // Full-registry audit: every oracled query not already covered by a

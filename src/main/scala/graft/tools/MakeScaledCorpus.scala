@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Materialize an N× ("sf1") copy of a testdata directory for the
   * FULL-REGISTRY scale probe (r6 verdict item 4) — the same synthesis
@@ -79,13 +79,7 @@ object MakeScaledCorpus {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dest = args.lift(1).getOrElse("/root/repo/target/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(GraftSession.cpus)
     build(spark, src, dest, copies)
     spark.stop()
     println(s"[make-sf] wrote $copies-fold corpus to $dest")

@@ -154,4 +154,41 @@ class DocsFreshnessSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"inline cents rule in src/main (use graft.functions.cents): ${offenders.mkString("; ")}")
   }
+
+  /** Lines of Scala source `src` where a Spark session builder call
+    * starts, comments skipped. */
+  private def sessionBuilders(src: String): Seq[String] = {
+    val code = """(?s)/\*.*?\*/""".r
+      .replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
+      .split("\n", -1).map(_.replaceFirst("//.*", "")).mkString("\n")
+    """SparkSession\s*\.\s*builder\b""".r.findAllMatchIn(code)
+      .map(m => s"line ${code.take(m.start).count(_ == '\n') + 1}").toSeq
+  }
+
+  test("no session is built outside graft.GraftSession") {
+    // the detector itself, on a fixed snippet (the call is spelled in
+    // pieces so this file does not match its own scan)
+    val builder = "SparkSession" + ".builder()"
+    val probe = Seq(
+      "object P {",
+      s"  val s = $builder.master(\"local[2]\").getOrCreate()",
+      s"  // $builder in a comment is fine",
+      s"  /* and in a block: $builder */",
+      "  val t = SparkSession",
+      "    .builder().getOrCreate()",
+      "}").mkString("\n")
+    assert(sessionBuilders(probe) == Seq("line 2", "line 5"), sessionBuilders(probe))
+    // sbt forks the test JVM with cwd = project base
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val roots = Seq("src/main/scala", "src/test/scala").map(new java.io.File(_))
+    roots.foreach(r => assert(r.isDirectory, s"no source tree at ${r.getAbsolutePath}"))
+    val offenders = roots.flatMap(scalaFiles).filter(_.getName != "GraftSession.scala").flatMap { f =>
+      sessionBuilders(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+        .map(h => s"${f.getPath} $h")
+    }
+    assert(offenders.isEmpty,
+      s"session built outside GraftSession.create: ${offenders.mkString("; ")}")
+  }
 }

@@ -103,11 +103,7 @@ class EventsSchemaDriftSpec extends SparkSpec {
       df.select(col("event_id"), unix_micros(col("ts")))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
     } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(root)
+      GraftSession.deleteTree(root)
     }
   }
 
@@ -128,6 +124,20 @@ class EventsSchemaDriftSpec extends SparkSpec {
     assert(fromNanos == expected, "NANOS path drifted")
     assert(fromNtz == expected, "MICROS-NTZ path drifted")
     assert(fromUtc == expected, "MICROS-UTC path drifted")
+  }
+
+  test("Tables.events rejects a session whose time zone is not UTC") {
+    val key = "spark.sql.session.timeZone"
+    val prior = spark.conf.get(key)
+    try {
+      Seq("Etc/UTC", "+00:00").foreach { zone => // other spellings of UTC pass
+        spark.conf.set(key, zone)
+        Tables.events(spark, "/root/testdata/sf0.001")
+      }
+      spark.conf.set(key, "America/New_York")
+      val e = intercept[IllegalStateException](Tables.events(spark, "/root/testdata/sf0.001"))
+      assert(e.getMessage.contains(key), e.getMessage)
+    } finally spark.conf.set(key, prior)
   }
 
   test("Tables.embeddings survives a double-encoded regeneration and passes float through today") {
@@ -160,11 +170,7 @@ class EventsSchemaDriftSpec extends SparkSpec {
         (0L, List(0.5f, -1.25f, 2.0f), 3),
         (1L, List(1.0f, 0.75f, -0.5f), 7)))
     } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(root)
+      GraftSession.deleteTree(root)
     }
   }
 
@@ -187,11 +193,7 @@ class EventsSchemaDriftSpec extends SparkSpec {
       assert(df.select("doc_id", "n_chars").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         == Set((1L, 5L), (2L, 3L)))
     } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(root)
+      GraftSession.deleteTree(root)
     }
   }
 
@@ -237,11 +239,7 @@ class EventsSchemaDriftSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
       assert(got == micros.zipWithIndex.map { case (us, i) => (i.toLong, us) })
     } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(root)
+      GraftSession.deleteTree(root)
     }
   }
 }

@@ -67,14 +67,7 @@ class BpeRobustUrlSpec extends SparkSpec {
 
   test("wordpiece: hand-computed greedy longest-match fixture") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-wp-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(dir)
-    }))
+    val dir = new java.io.File(graft.GraftSession.scratchDir("graft-wp-"))
     Seq((1L, "aaaa aaaa aa")).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src1"))
       .withColumn("n_chars", length($"text").cast("long"))

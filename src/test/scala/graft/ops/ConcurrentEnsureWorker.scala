@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Test fixture main, launched by [[GraphEdgeTableSpec]] as a SEPARATE
@@ -18,14 +17,7 @@ import org.apache.spark.sql.functions._
 object ConcurrentEnsureWorker {
   def main(args: Array[String]): Unit = {
     val Array(warehouse, srcParquet, barrier, workerTag, outFile) = args
-    val spark = SparkSession.builder().master("local[2]")
-      .appName(s"graft-conc-$workerTag")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create(2, warehouse)
     // session is up: tell the spec, then hold at the barrier — session
     // startup skew (seconds) must not decide the race before it starts
     java.nio.file.Files.writeString(

@@ -17,14 +17,7 @@ class CorpusOpsSpec extends SparkSpec {
     * registered query bodies (which read Tables.documents(dir)) run
     * unmodified against it. */
   private def docsDir(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-corpus-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(dir)
-    }))
+    val dir = new java.io.File(graft.GraftSession.scratchDir("graft-corpus-"))
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src1"))
       .withColumn("n_chars", length($"text").cast("long"))
@@ -182,11 +175,7 @@ class CorpusOpsSpec extends SparkSpec {
     ranges.zip(ranges.tail).foreach { case ((_, hi), (lo2, _)) =>
       assert(lo2 >= hi, s"file z-ranges overlap: hi=$hi lo2=$lo2")
     }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-      f.delete()
-    }
-    rm(tmp)
+    graft.GraftSession.deleteTree(tmp)
   }
 
   // ------------------------------------------------------- streaming join
@@ -258,14 +247,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("dsirSelect: target-like raw doc outranks target-unlike; target docs never selected") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsir-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(dir)
-    }))
+    val dir = new java.io.File(graft.GraftSession.scratchDir("graft-dsir-"))
     Seq(
       // target corpus (en): vocabulary {alpha, beta, gamma}
       (1L, "alpha beta gamma alpha beta gamma", "en"),
@@ -291,14 +273,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("temperatureMix: hand-computed integer rates on a two-source fixture") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tmix-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(dir)
-    }))
+    val dir = new java.io.File(graft.GraftSession.scratchDir("graft-tmix-"))
     // srcA: 1 doc × 100 tokens → w = floor(sqrt(100)) = 10
     // srcB: 1 doc × 400 tokens → w = 20; total_w 30 →
     // rates 10·10^6/30 = 333333 and 20·10^6/30 = 666666 (exact integer div)

@@ -141,12 +141,8 @@ class GraphEdgeTableSpec extends graft.SparkSpec {
     spark.sql(s"DROP TABLE $nameNew")
     // external-table DROP keeps files; the next run's fresh fingerprint
     // would GC them, but don't rely on a next run existing
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-      f.delete()
-    }
-    rm(new java.io.File(wh, nameNew))
-    rm(srcDir)
+    graft.GraftSession.deleteTree(new java.io.File(wh, nameNew))
+    graft.GraftSession.deleteTree(srcDir)
   }
 
   test("a strict-SUBSET bucket directory is rebuilt, never re-declared (two-sided id check)") {
@@ -184,12 +180,8 @@ class GraphEdgeTableSpec extends graft.SparkSpec {
       s"subset directory must be REBUILT to all 8 buckets, found ${files.length}")
     assert(spark.table(name2).count() == 100)
     spark.sql(s"DROP TABLE $name2")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-      f.delete()
-    }
-    rm(loc)
-    rm(srcDir)
+    graft.GraftSession.deleteTree(loc)
+    graft.GraftSession.deleteTree(srcDir)
   }
 
   test("legitimately EMPTY buckets reuse across JVMs via the publish manifest") {
@@ -232,12 +224,8 @@ class GraphEdgeTableSpec extends graft.SparkSpec {
         s"before=$partsBefore after=${parts()}")
     assert(spark.table(name2).count() == 30)
     spark.sql(s"DROP TABLE $name2")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-      f.delete()
-    }
-    rm(loc)
-    rm(srcDir)
+    graft.GraftSession.deleteTree(loc)
+    graft.GraftSession.deleteTree(srcDir)
   }
 
   test("corrupted _graft_buckets manifest triggers a conservative REBUILD, not a crash") {
@@ -283,12 +271,8 @@ class GraphEdgeTableSpec extends graft.SparkSpec {
     corrupt(dropCrc = false) // unreadable-file (ChecksumException) path
     val name2 = cycle(afterParse)
     spark.sql(s"DROP TABLE $name2")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-      f.delete()
-    }
-    rm(loc)
-    rm(srcDir)
+    graft.GraftSession.deleteTree(loc)
+    graft.GraftSession.deleteTree(srcDir)
   }
 
   test("orphan GC: subtree-mtime liveness with a hard cap for crashed _temporary dirs") {
@@ -309,10 +293,6 @@ class GraphEdgeTableSpec extends graft.SparkSpec {
     val name = ensure()
     val wh = new java.io.File(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-      f.delete()
-    }
     // plant fake orphaned build dirs of THIS base, with a part file and a
     // `_temporary` subtree, every mtime pinned to the scenario's age
     def plant(suffix: String, ageMs: Long, withTemporary: Boolean): java.io.File = {
@@ -338,7 +318,7 @@ class GraphEdgeTableSpec extends graft.SparkSpec {
     val staleNoT  = plant("plain", 2 * hour, withTemporary = false) // past grace
     // force the build path (GC runs there): delete the published table
     spark.sql(s"DROP TABLE $name")
-    rm(new java.io.File(wh, name))
+    graft.GraftSession.deleteTree(new java.io.File(wh, name))
     Materialize.resetForTests()
     val name2 = ensure()
     assert(name2 == name)
@@ -350,8 +330,8 @@ class GraphEdgeTableSpec extends graft.SparkSpec {
     assert(!staleNoT.exists(),
       "stale dir without `_temporary` must be collected at the grace window")
     spark.sql(s"DROP TABLE $name2")
-    Seq(fresh, reprieved, new java.io.File(wh, name)).foreach(rm)
-    rm(srcDir)
+    Seq(fresh, reprieved, new java.io.File(wh, name)).foreach(graft.GraftSession.deleteTree)
+    graft.GraftSession.deleteTree(srcDir)
   }
 
   test("destroyUnlessReusable restores a complete table it grabbed, removes debris") {
@@ -387,11 +367,7 @@ class GraphEdgeTableSpec extends graft.SparkSpec {
     assert(!Materialize.destroyUnlessReusable(
       fs, new org.apache.hadoop.fs.Path(debris.getAbsolutePath), 2))
     assert(!debris.exists(), "debris must be gone after the destroy")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-      f.delete()
-    }
-    rm(work)
+    graft.GraftSession.deleteTree(work)
   }
 
   test("two CONCURRENT writer JVMs over one warehouse publish exactly one build") {
@@ -475,11 +451,7 @@ class GraphEdgeTableSpec extends graft.SparkSpec {
         "published table must be the one-file-per-bucket layout")
     } finally {
       pa.destroyForcibly(); pb.destroyForcibly()
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(work)
+      graft.GraftSession.deleteTree(work)
     }
   }
 }

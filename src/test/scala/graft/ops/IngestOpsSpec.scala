@@ -15,17 +15,7 @@ class IngestOpsSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def tmpDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(dir)
-    }))
-    dir.getAbsolutePath
-  }
+  private def tmpDir(): String = graft.GraftSession.scratchDir("graft-ingest-")
 
   // --------------------------------------------------------- epoch shuffle
 

@@ -28,6 +28,10 @@ class MiscParitySpec extends SparkSpec {
   test("engine sessions run with AQE enabled and the pinned UTC timezone") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.sparkContext.getConf.getOption("spark.serializer")
+      .contains("org.apache.spark.serializer.KryoSerializer"))
+    assert(spark.sparkContext.getCheckpointDir.isDefined)
+    assert(spark.sql("SELECT graft_cents(CAST(1.25 AS DOUBLE))").head().getLong(0) == 125L)
   }
 
   test("na.drop any/all modes") {

@@ -286,14 +286,7 @@ class PlanShapeSpec extends SparkSpec {
     // scale): a selective dim filter on the partition key must prune
     // partitions at RUNTIME via DPP — without it, a 100 TB fact scan
     // reads every partition to discover most join nothing.
-    val root = java.nio.file.Files.createTempDirectory("graft-dpp-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rm) }
-        f.delete()
-      }
-      rm(root)
-    }))
+    val root = new java.io.File(graft.GraftSession.scratchDir("graft-dpp-"))
     val factPath = s"${root.getAbsolutePath}/fact"
     val dimPath = s"${root.getAbsolutePath}/dim"
     graft.Tables.events(spark, dir)

