@@ -23,12 +23,26 @@ import graft.plans.RelationStats
   *    streams ~2× faster at state width 4). From ~16 MB × session width of
   *    source up it equals the session width, which is what the session
   *    would run anyway.
+  *  - Below one 16 MB unit of source, [[withSourceWidth]] also plans the
+  *    scope as a small job: adaptive query execution and whole-stage
+  *    codegen are off inside it. Such work is a handful of kilobyte-sized
+  *    stages whose cost is fixed per stage: AQE re-plans between them (one
+  *    3-round label propagation over 1,000 nodes ran as 12 jobs), and every
+  *    stage compiles a fused class that Spark's 100-entry codegen cache,
+  *    keyed by class loader, does not keep across a pass. Measured on the
+  *    `llm_corpus` benchmark (sf0.1, 4-vCPU VM, 10 alternated pairs, faster
+  *    in all 10): query p50 1.41 → 1.06 s, pass p50 5.48 → 4.33 s, and
+  *    that loop 12 jobs → 1. SCALE.md has the registry-wide runs, where
+  *    two sf0.1 queries read slower. At one unit and above (sf1 fact
+  *    tables and up) both settings are left to the session.
   */
 object Tuning {
 
   private val BytesPerPartition = 16L << 20
   private val MinWidth = 4L
   private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
+  private val AdaptiveKey = "spark.sql.adaptive.enabled"
+  private val WholeStageKey = "spark.sql.codegen.wholeStage"
 
   /** `df` repartitioned to `defaultParallelism` when it plans fewer
     * partitions than that (see [[RelationStats.plannedPartitions]]); `df`
@@ -45,15 +59,20 @@ object Tuning {
       math.max(MinWidth, sourceBytes / BytesPerPartition + 1)).toInt
 
   /** Runs `f` with `spark.sql.shuffle.partitions` set to
-    * [[shuffleWidth]] and restores the session's width after. The width
-    * reaches only what `f` plans: the iterative loops materialize their
-    * result inside `f`, and a stream fixes its state-store count at its
-    * first micro-batch (and keeps it for the life of its checkpoint), so
-    * callers start and drain streams inside `f`. */
+    * [[shuffleWidth]] and, for a source below one 16 MB unit, with AQE and
+    * whole-stage codegen off; restores the session's values after. The
+    * settings reach only what `f` plans: the iterative loops materialize
+    * their result inside `f`, and a stream copies the session's settings
+    * when it starts and fixes its state-store count at its first
+    * micro-batch (and keeps it for the life of its checkpoint), so callers
+    * start and drain streams inside `f`. */
   def withSourceWidth[T](spark: SparkSession, sourceBytes: Long)(f: => T): T = {
-    val prev = spark.conf.get(ShufflePartitionsKey)
-    spark.conf.set(ShufflePartitionsKey, shuffleWidth(spark, sourceBytes).toString)
-    try f finally spark.conf.set(ShufflePartitionsKey, prev)
+    val scoped = Seq(ShufflePartitionsKey -> shuffleWidth(spark, sourceBytes).toString) ++
+      (if (sourceBytes < BytesPerPartition) Seq(AdaptiveKey -> "false", WholeStageKey -> "false")
+       else Nil)
+    val prev = scoped.map { case (k, _) => k -> spark.conf.get(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   /** [[withSourceWidth]] sized by the files under `paths` (see

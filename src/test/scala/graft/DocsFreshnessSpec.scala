@@ -96,9 +96,6 @@ class DocsFreshnessSpec extends AnyFunSuite {
       val local = new java.io.File("src/test/scala")
       if (local.exists()) local else new java.io.File("/root/repo/src/test/scala")
     }
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val actual = scalaFiles(root).map { f =>
       scala.io.Source.fromFile(f, "UTF-8").getLines()
         .count(l => reg.findFirstIn(l).isDefined)
@@ -144,9 +141,6 @@ class DocsFreshnessSpec extends AnyFunSuite {
     // sbt forks the test JVM with cwd = project base
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val offenders = scalaFiles(root).flatMap { f =>
       inlineCents(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
         .map(h => s"${f.getPath} $h")
@@ -155,15 +149,30 @@ class DocsFreshnessSpec extends AnyFunSuite {
       s"inline cents rule in src/main (use graft.functions.cents): ${offenders.mkString("; ")}")
   }
 
-  /** Lines of Scala source `src` where a Spark session builder call
-    * starts, comments skipped. */
-  private def sessionBuilders(src: String): Seq[String] = {
+  /** Lines of Scala source `src` where `pattern` matches, comments
+    * skipped. */
+  private def codeMatches(src: String, pattern: scala.util.matching.Regex): Seq[String] = {
     val code = """(?s)/\*.*?\*/""".r
       .replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
       .split("\n", -1).map(_.replaceFirst("//.*", "")).mkString("\n")
-    """SparkSession\s*\.\s*builder\b""".r.findAllMatchIn(code)
+    pattern.findAllMatchIn(code)
       .map(m => s"line ${code.take(m.start).count(_ == '\n') + 1}").toSeq
   }
+
+  private def scalaFiles(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+
+  /** Lines of Scala source `src` where a Spark session builder call
+    * starts, comments skipped. */
+  private def sessionBuilders(src: String): Seq[String] =
+    codeMatches(src, """SparkSession\s*\.\s*builder\b""".r)
+
+  /** Lines of Scala source `src` that name one of the three plan-shaping
+    * session settings (by key or by `SQLConf` entry), comments skipped. */
+  private def planKnobs(src: String): Seq[String] =
+    codeMatches(src, ("""spark\.sql\.(?:shuffle\.partitions|adaptive\.enabled|codegen\.wholeStage)\b|""" +
+      """SQLConf\.(?:SHUFFLE_PARTITIONS|ADAPTIVE_EXECUTION_ENABLED|WHOLESTAGE_CODEGEN_ENABLED)\b""").r)
 
   test("no session is built outside graft.GraftSession") {
     // the detector itself, on a fixed snippet (the call is spelled in
@@ -179,9 +188,6 @@ class DocsFreshnessSpec extends AnyFunSuite {
       "}").mkString("\n")
     assert(sessionBuilders(probe) == Seq("line 2", "line 5"), sessionBuilders(probe))
     // sbt forks the test JVM with cwd = project base
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val roots = Seq("src/main/scala", "src/test/scala").map(new java.io.File(_))
     roots.foreach(r => assert(r.isDirectory, s"no source tree at ${r.getAbsolutePath}"))
     val offenders = roots.flatMap(scalaFiles).filter(_.getName != "GraftSession.scala").flatMap { f =>
@@ -190,5 +196,31 @@ class DocsFreshnessSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"session built outside GraftSession.create: ${offenders.mkString("; ")}")
+  }
+
+  test("only Tuning and GraftSession set shuffle width, AQE or whole-stage codegen") {
+    // the detector itself, on a fixed snippet: string keys and SQLConf
+    // entries are caught, comments are not
+    val probe = Seq(
+      "object P {",
+      """  spark.conf.set("spark.sql.adaptive.enabled", "false")""",
+      """  // spark.conf.set("spark.sql.shuffle.partitions", "8") in a comment is fine""",
+      """  /* and in a block: spark.sql.codegen.wholeStage */""",
+      """  spark.sql("SET spark.sql.shuffle.partitions=8")""",
+      """  spark.conf.set(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key, false)""",
+      """  spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")""",
+      "}").mkString("\n")
+    assert(planKnobs(probe) == Seq("line 2", "line 5", "line 6"), planKnobs(probe))
+    // sbt forks the test JVM with cwd = project base: Tuning sets them at
+    // run time, GraftSession at build time, nothing else in src/main
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
+    val owners = Set("Tuning.scala", "GraftSession.scala")
+    val offenders = scalaFiles(root).filterNot(f => owners(f.getName)).flatMap { f =>
+      planKnobs(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+        .map(h => s"${f.getPath} $h")
+    }
+    assert(offenders.isEmpty,
+      s"plan-shaping setting outside graft.Tuning/GraftSession: ${offenders.mkString("; ")}")
   }
 }

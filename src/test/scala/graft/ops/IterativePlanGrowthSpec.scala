@@ -91,6 +91,32 @@ class IterativePlanGrowthSpec extends SparkSpec {
     }
   }
 
+  test("labelPropagationSym materializes a sub-unit source as ONE job, without AQE or codegen") {
+    // the registered query's scope (Graph.atEdgeSourceWidth): sf0.01's
+    // lineitem + orders are far below one 16 MB unit, so Tuning plans the
+    // loop without AQE re-planning between stages and without a fused
+    // class per stage
+    val dir = "/root/testdata/sf0.01"
+    val sym = Graph.coSupplierSymTable(spark, dir) // built before counting
+    val (labels, jobs) = jobsDuring(graft.Tuning.withSourceWidth(spark,
+      Seq(s"$dir/lineitem.parquet", s"$dir/orders.parquet")) {
+      Graph.labelPropagationSym(sym, iters = 3)
+    })
+    try {
+      assert(jobs == 1, s"labelPropagationSym materialized in $jobs jobs")
+      val cached = labels.queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.cachedPlan
+      }
+      assert(cached.isDefined, "labelPropagationSym returned an uncached frame")
+      val plan = cached.get.treeString
+      assert(plan.contains("Exchange"), plan)
+      assert(!plan.contains("AdaptiveSparkPlan"), s"cached loop plan is adaptive:\n$plan")
+      // the simple-string rendering marks whole-stage-codegen spans `*(n)`
+      assert(!plan.contains("WholeStageCodegen") && !plan.contains("*("),
+        s"cached loop plan has whole-stage codegen:\n$plan")
+    } finally labels.unpersist()
+  }
+
   test("pageRankConverged grows linearly and RESETS at the checkpoint-every-5 cadence") {
     val edgeList = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 4L), (4L, 1L), (5L, 1L))
     val sym = edgeList.flatMap(e => Seq(e, e.swap)).distinct.toDF("src", "dst")

@@ -226,11 +226,14 @@ class PlanShapeSpec extends SparkSpec {
     // introduce a product join on data-sized inputs or drop the narrow
     // chains out of whole-stage codegen. Plan shape at sf0.001 is identical
     // to production shape (same code paths, same strategies); only sizes
-    // differ. Queries with a DELIBERATE bounded BNLJ (the IVF/LSH
-    // centroid-probe over O(nlist) rows, asserted separately above) are not
-    // in this list, and neither is q_bm25 (its corpus-wide avgdl scalar is a
-    // deliberate single-ROW broadcast nested-loop — O(1) build side by
-    // construction).
+    // differ. The exception is work a query materializes inside
+    // graft.Tuning.withSourceWidth over a source below one 16 MB unit: that
+    // runs without AQE or whole-stage codegen, while the returned frame
+    // checked here is planned with the session's settings. Queries with a
+    // DELIBERATE bounded BNLJ (the IVF/LSH centroid-probe over O(nlist)
+    // rows, asserted separately above) are not in this list, and neither is
+    // q_bm25 (its corpus-wide avgdl scalar is a deliberate single-ROW
+    // broadcast nested-loop — O(1) build side by construction).
     val gated = Seq(
       "q_minhash_det_dedup",      // banded self-join dedup — keyed bucket joins only
       "q_minhash_det_transitive", // + connected components closure

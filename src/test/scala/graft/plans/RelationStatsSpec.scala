@@ -9,26 +9,6 @@ package graft.plans
 class RelationStatsSpec extends graft.SparkSpec {
   import spark.implicits._
 
-  /** `body`'s result and the number of Spark jobs submitted while it ran.
-    * The listener bus is async, so it is drained before registering (no
-    * earlier job leaks in) and before reading the counter (ADVICE r11: a
-    * fixed sleep races under CI load). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val result = body
-      org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(sc)
-      (result, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** `body` run with the session's shuffle width set to `width`. */
   private def atSessionWidth[T](width: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
@@ -102,6 +82,21 @@ class RelationStatsSpec extends graft.SparkSpec {
         spark.conf.get("spark.sql.shuffle.partitions")) == "7")
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "32")
     }
+    // below one 16 MB unit the scope also runs without AQE and whole-stage
+    // codegen; at one unit and above both stay the session's
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+      "spark.sql.codegen.wholeStage")
+    def scoped(bytes: Long): Seq[String] =
+      graft.Tuning.withSourceWidth(spark, bytes)(keys.map(spark.conf.get))
+    val session = keys.map(spark.conf.get)
+    assert(session.tail == Seq("true", "true"))
+    assert(scoped(16 * mb - 1) == Seq("4", "false", "false"))
+    assert(scoped(16 * mb) == Seq("4", "true", "true"))
+    assert(keys.map(spark.conf.get) == session)
+    // and they come back when the scope throws
+    intercept[IllegalStateException](
+      graft.Tuning.withSourceWidth(spark, 0L)(throw new IllegalStateException("in scope")))
+    assert(keys.map(spark.conf.get) == session)
     // the floor of 4 never widens a narrower session
     atSessionWidth(2) {
       assert(graft.Tuning.shuffleWidth(spark, 0L) == 2)
