@@ -23,22 +23,35 @@ import graft.plans.RelationStats
   *    streams ~2× faster at state width 4). From ~16 MB × session width of
   *    source up it equals the session width, which is what the session
   *    would run anyway.
-  *  - Below one 16 MB unit of source, [[withSourceWidth]] also plans the
-  *    scope as a small job: adaptive query execution and whole-stage
-  *    codegen are off inside it. Such work is a handful of kilobyte-sized
-  *    stages whose cost is fixed per stage: AQE re-plans between them (one
+  *  - Below [[SmallJobBytes]] of source, [[withSourceWidth]] also plans
+  *    the scope as a small job: adaptive query execution and whole-stage
+  *    codegen are off inside it. Such work is a handful of small stages
+  *    whose cost is fixed per stage: AQE re-plans between them (one
   *    3-round label propagation over 1,000 nodes ran as 12 jobs), and every
   *    stage compiles a fused class that Spark's 100-entry codegen cache,
   *    keyed by class loader, does not keep across a pass. Measured on the
   *    `llm_corpus` benchmark (sf0.1, 4-vCPU VM, 10 alternated pairs, faster
   *    in all 10): query p50 1.41 → 1.06 s, pass p50 5.48 → 4.33 s, and
-  *    that loop 12 jobs → 1. SCALE.md has the registry-wide runs, where
-  *    two sf0.1 queries read slower. At one unit and above (sf1 fact
-  *    tables and up) both settings are left to the session.
+  *    that loop 12 jobs → 1.
+  *
+  * [[SmallJobBytes]] is placed by PageRank, the scope that lost from the
+  * rule at sf1: each round joins and aggregates its whole edge list, which
+  * grows with the source. With the rule forced on at every size
+  * (`tools/run_scale_epochs.sh`, 4 cores, median of warm iterations,
+  * SCALE.md), `q_pagerank` ran 2.7 s against 4.1 s at 13.5 MB of
+  * lineitem + orders (sf0.1), but 3.8 vs 3.4 s at 31 MB, 4.8 vs 4.3 s at
+  * 46 MB and 15.2 vs 13.7 s at 153 MB (sf1). So the cut lies between the
+  * 13.5 MB that gains and the 31 MB that no longer does.
+  * At sf1 most other scopes still gained from the rule (label propagation
+  * 1.9 vs 3.1 s); a byte cut cannot keep those gains without PageRank's
+  * loss, because both size by the same fact tables.
   */
 object Tuning {
 
   private val BytesPerPartition = 16L << 20
+  /** Sources below this run their [[withSourceWidth]] scope without AQE and
+    * whole-stage codegen (the measurement behind it is above). */
+  private[graft] val SmallJobBytes = 16L << 20
   private val MinWidth = 4L
   private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
   private val AdaptiveKey = "spark.sql.adaptive.enabled"
@@ -59,8 +72,8 @@ object Tuning {
       math.max(MinWidth, sourceBytes / BytesPerPartition + 1)).toInt
 
   /** Runs `f` with `spark.sql.shuffle.partitions` set to
-    * [[shuffleWidth]] and, for a source below one 16 MB unit, with AQE and
-    * whole-stage codegen off; restores the session's values after. The
+    * [[shuffleWidth]] and, for a source below [[SmallJobBytes]], with AQE
+    * and whole-stage codegen off; restores the session's values after. The
     * settings reach only what `f` plans: the iterative loops materialize
     * their result inside `f`, and a stream copies the session's settings
     * when it starts and fixes its state-store count at its first
@@ -68,7 +81,7 @@ object Tuning {
     * start and drain streams inside `f`. */
   def withSourceWidth[T](spark: SparkSession, sourceBytes: Long)(f: => T): T = {
     val scoped = Seq(ShufflePartitionsKey -> shuffleWidth(spark, sourceBytes).toString) ++
-      (if (sourceBytes < BytesPerPartition) Seq(AdaptiveKey -> "false", WholeStageKey -> "false")
+      (if (sourceBytes < SmallJobBytes) Seq(AdaptiveKey -> "false", WholeStageKey -> "false")
        else Nil)
     val prev = scoped.map { case (k, _) => k -> spark.conf.get(k) }
     scoped.foreach { case (k, v) => spark.conf.set(k, v) }

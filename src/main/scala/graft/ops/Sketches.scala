@@ -796,10 +796,13 @@ object Sketches {
     * and the cumulative window runs over those sketch-sized partitions.
     * The exact side (a distinct-value histogram, the winsorize pattern)
     * is the VERIFICATION audit, not the production shape. */
-  def quantileSketch(spark: SparkSession, dir: String): DataFrame =
-    graft.Tuning.withSourceWidth(spark, Seq(s"$dir/lineitem.parquet")) {
-    // sketch/histogram-sized frames at the lineitem source's shuffle width
-    // (graft.Tuning.withSourceWidth)
+  def quantileSketch(spark: SparkSession, dir: String): DataFrame = {
+    // No graft.Tuning.withSourceWidth scope: the exact audit's histogram is
+    // row-sized (594 k (flag, cents) cells for 600 k lineitem rows at
+    // sf0.1), so a scope would size, and at sub-unit sources plan without
+    // AQE and whole-stage codegen, a full scan and a row-sized window
+    // rather than small frames (SCALE.md, "Sub-unit scopes run without AQE
+    // and whole-stage codegen").
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     def bucketWidth(col: String) =

@@ -93,8 +93,8 @@ class IterativePlanGrowthSpec extends SparkSpec {
 
   test("labelPropagationSym materializes a sub-unit source as ONE job, without AQE or codegen") {
     // the registered query's scope (Graph.atEdgeSourceWidth): sf0.01's
-    // lineitem + orders are far below one 16 MB unit, so Tuning plans the
-    // loop without AQE re-planning between stages and without a fused
+    // lineitem + orders are far below Tuning.SmallJobBytes, so Tuning plans
+    // the loop without AQE re-planning between stages and without a fused
     // class per stage
     val dir = "/root/testdata/sf0.01"
     val sym = Graph.coSupplierSymTable(spark, dir) // built before counting

@@ -227,7 +227,7 @@ class PlanShapeSpec extends SparkSpec {
     // chains out of whole-stage codegen. Plan shape at sf0.001 is identical
     // to production shape (same code paths, same strategies); only sizes
     // differ. The exception is work a query materializes inside
-    // graft.Tuning.withSourceWidth over a source below one 16 MB unit: that
+    // graft.Tuning.withSourceWidth over a source below SmallJobBytes: that
     // runs without AQE or whole-stage codegen, while the returned frame
     // checked here is planned with the session's settings. Queries with a
     // DELIBERATE bounded BNLJ (the IVF/LSH centroid-probe over O(nlist)

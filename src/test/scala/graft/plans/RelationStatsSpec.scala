@@ -82,16 +82,16 @@ class RelationStatsSpec extends graft.SparkSpec {
         spark.conf.get("spark.sql.shuffle.partitions")) == "7")
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "32")
     }
-    // below one 16 MB unit the scope also runs without AQE and whole-stage
-    // codegen; at one unit and above both stay the session's
+    // below Tuning.SmallJobBytes the scope also runs without AQE and
+    // whole-stage codegen; from there up both stay the session's
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
       "spark.sql.codegen.wholeStage")
     def scoped(bytes: Long): Seq[String] =
       graft.Tuning.withSourceWidth(spark, bytes)(keys.map(spark.conf.get))
     val session = keys.map(spark.conf.get)
     assert(session.tail == Seq("true", "true"))
-    assert(scoped(16 * mb - 1) == Seq("4", "false", "false"))
-    assert(scoped(16 * mb) == Seq("4", "true", "true"))
+    assert(scoped(graft.Tuning.SmallJobBytes - 1) == Seq("4", "false", "false"))
+    assert(scoped(graft.Tuning.SmallJobBytes) == Seq("4", "true", "true"))
     assert(keys.map(spark.conf.get) == session)
     // and they come back when the scope throws
     intercept[IllegalStateException](
