@@ -224,7 +224,7 @@ object Bench {
     // the FINAL stdout line so the driver's tail window always ends with one
     // complete, parseable JSON object carrying the headline number.
     try {
-      val out = java.nio.file.Paths.get("/root/repo/target/bench_full.json")
+      val out = java.nio.file.Paths.get("target/bench_full.json")
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out, (fullLine + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () } // reporting must not fail the bench

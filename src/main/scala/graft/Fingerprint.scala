@@ -20,10 +20,11 @@ object Fingerprint {
     * Output types xxhash64 rejects at analysis time (maps; a UDT such as
     * VectorUDT is hashed through its sqlType) are still fully evaluated,
     * row by row, and fingerprint as (0, 0, rows). Runtime failures
-    * propagate. */
+    * propagate. Column names are quoted, so a dotted or backticked output
+    * name resolves as itself rather than as a struct field. */
   def apply(df: DataFrame): (Long, Long, Long) = {
     val hashed =
-      try Some(df.select(xxhash64(struct(df.columns.toIndexedSeq.map(col): _*)).as("h")))
+      try Some(df.select(xxhash64(struct(df.columns.toIndexedSeq.map(quoted): _*)).as("h")))
       catch { case _: AnalysisException => None }
     hashed match {
       case Some(h) =>
@@ -41,4 +42,6 @@ object Fingerprint {
         (0L, 0L, rows.value)
     }
   }
+
+  private def quoted(name: String) = col("`" + name.replace("`", "``") + "`")
 }

@@ -23,7 +23,7 @@ object Etl {
 
   /** Repo-local scratch root for sink/CSV round-trip fixtures (the driver
     * runs Verify/Bench from arbitrary cwd, so the path is absolute). */
-  private val fixtureRoot = "/root/repo/target/qfixtures"
+  private val fixtureRoot = "target/qfixtures"
 
   private def tag(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
 

@@ -13,7 +13,7 @@ import graft.functions.cents
   */
 object Sources {
 
-  private val fixtureRoot = "/root/repo/target/qfixtures"
+  private val fixtureRoot = "target/qfixtures"
   private def tag(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** JSON-lines sink + explicit-schema scan round-trip over a supplier

@@ -40,14 +40,25 @@ object StreamSessionize {
     * input the stream will read: kilobyte-to-megabyte fixture state gets 4
     * stores, not one per core (measured: q_stream_join 8.5 → 2.9 s
     * steady-state; every stateful q_stream_* ~2×), and a source of
-    * 16 MB × session width or more gets the session's own width. */
-  private def startDrained(spark: SparkSession, source: String)(
+    * 16 MB × session width or more gets the session's own width.
+    *
+    * The stream also starts inside [[graft.Tuning.withStreamRuntime]] for its
+    * checkpoint `ckpt`: a local checkpoint is written through Hadoop's
+    * `FileSystem` API, and the stream's tasks run on the executor's shared
+    * class loader. Without them a run pays a fixed ~1 s that is not a floor
+    * of Structured Streaming: Hadoop's local file system forks ~250
+    * `readlink`/`chmod` processes to commit the checkpoint files (a 1-row
+    * state commit took 0.6–0.9 s), and a class loader of the run's own
+    * recompiles the stream's ~20 generated classes. */
+  private def startDrained(spark: SparkSession, source: String, ckpt: String)(
       start: => org.apache.spark.sql.streaming.StreamingQuery)
       : org.apache.spark.sql.streaming.StreamingQuery =
     graft.Tuning.withSourceWidth(spark, Seq(source)) {
-      val query = start
-      query.awaitTermination()
-      query
+      graft.Tuning.withStreamRuntime(spark, ckpt) {
+        val query = start
+        query.awaitTermination()
+        query
+      }
     }
 
   /** Drain a ROW-stream query (output ∝ input, not an aggregate) into
@@ -76,7 +87,7 @@ object StreamSessionize {
       stream: DataFrame): DataFrame = {
     val outDir = new java.io.File(s"$fixtureRoot/${kind}_sink_${tag(dir)}")
     GraftSession.deleteTree(outDir)
-    startDrained(spark, source)(stream.writeStream
+    startDrained(spark, source, ckpt)(stream.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
         ()
@@ -317,7 +328,7 @@ object StreamSessionize {
     }
 
     val stream = spark.readStream.schema(ev.schema).parquet(inDir)
-    startDrained(spark, inDir)(stream
+    startDrained(spark, inDir, ckpt)(stream
       .withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), s"$windowSeconds seconds"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -362,7 +373,7 @@ object StreamSessionize {
     }
 
     val stream = spark.readStream.schema(ev.schema).parquet(inDir)
-    startDrained(spark, inDir)(stream
+    startDrained(spark, inDir, ckpt)(stream
       .withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), s"$windowSeconds seconds", s"$slideSeconds seconds"),
         col("event_type"))
@@ -411,7 +422,7 @@ object StreamSessionize {
     // agg state) in Complete mode, so the memory sink holds one row per
     // event_type — result-sized, never corpus-sized, the shape that
     // survives an unbounded stream on a real cluster.
-    startDrained(spark, inDir)(dedupStream(stream, Seq("event_id"), watermarkDelay = "1 hour")
+    startDrained(spark, inDir, ckpt)(dedupStream(stream, Seq("event_id"), watermarkDelay = "1 hour")
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(cents($"value")).as("sum_value_c"),
@@ -599,7 +610,7 @@ object StreamSessionize {
 
     val src = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val query = startDrained(spark, inDir)(src.writeStream
+    val query = startDrained(spark, inDir, ckpt)(src.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
         ()

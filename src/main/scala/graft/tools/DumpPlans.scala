@@ -150,7 +150,7 @@ object DumpPlans {
       }
       sb.append("```\n")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"[plans] wrote PLANS.md (${headline.size} curated + ${rest.size} auto sections)")
     spark.stop()
   }

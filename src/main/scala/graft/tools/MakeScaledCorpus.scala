@@ -77,7 +77,7 @@ object MakeScaledCorpus {
 
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val dest = args.lift(1).getOrElse("/root/repo/target/sf1")
+    val dest = args.lift(1).getOrElse("target/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val spark = GraftSession.create(GraftSession.cpus)
     build(spark, src, dest, copies)

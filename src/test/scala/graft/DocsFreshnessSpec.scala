@@ -169,10 +169,13 @@ class DocsFreshnessSpec extends AnyFunSuite {
     codeMatches(src, """SparkSession\s*\.\s*builder\b""".r)
 
   /** Lines of Scala source `src` that name one of the three plan-shaping
-    * session settings (by key or by `SQLConf` entry), comments skipped. */
+    * session settings or one of the two stream-runtime settings (by key or
+    * by `SQLConf` entry), comments skipped. */
   private def planKnobs(src: String): Seq[String] =
-    codeMatches(src, ("""spark\.sql\.(?:shuffle\.partitions|adaptive\.enabled|codegen\.wholeStage)\b|""" +
-      """SQLConf\.(?:SHUFFLE_PARTITIONS|ADAPTIVE_EXECUTION_ENABLED|WHOLESTAGE_CODEGEN_ENABLED)\b""").r)
+    codeMatches(src, ("""spark\.sql\.(?:shuffle\.partitions|adaptive\.enabled|codegen\.wholeStage|""" +
+      """streaming\.checkpointFileManagerClass|artifact\.isolation\.enabled)\b|""" +
+      """SQLConf\.(?:SHUFFLE_PARTITIONS|ADAPTIVE_EXECUTION_ENABLED|WHOLESTAGE_CODEGEN_ENABLED|""" +
+      """STREAMING_CHECKPOINT_FILE_MANAGER_CLASS|ARTIFACTS_SESSION_ISOLATION_ENABLED)\b""").r)
 
   test("no session is built outside graft.GraftSession") {
     // the detector itself, on a fixed snippet (the call is spelled in
@@ -209,10 +212,15 @@ class DocsFreshnessSpec extends AnyFunSuite {
       """  spark.sql("SET spark.sql.shuffle.partitions=8")""",
       """  spark.conf.set(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key, false)""",
       """  spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")""",
+      """  .config("spark.sql.streaming.checkpointFileManagerClass", manager)""",
+      """  spark.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")""",
+      """  spark.conf.set("spark.sql.artifact.isolation.alwaysApplyClassloader", "true")""",
+      """  // spark.sql.artifact.isolation.enabled in a comment is fine""",
       "}").mkString("\n")
-    assert(planKnobs(probe) == Seq("line 2", "line 5", "line 6"), planKnobs(probe))
+    assert(planKnobs(probe) == Seq("line 2", "line 5", "line 6", "line 8", "line 9"), planKnobs(probe))
     // sbt forks the test JVM with cwd = project base: Tuning sets them at
-    // run time, GraftSession at build time, nothing else in src/main
+    // run time (the stream-runtime pair around a stream start),
+    // GraftSession at build time, nothing else in src/main
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
     val owners = Set("Tuning.scala", "GraftSession.scala")

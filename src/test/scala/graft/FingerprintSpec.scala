@@ -26,4 +26,12 @@ class FingerprintSpec extends SparkSpec {
     val (x, _, n) = Fingerprint(vectors)
     assert(n == 2 && x != 0L)
   }
+
+  test("dotted and backticked column names are hashed, not sent to the row-wise fallback") {
+    val rows = Seq((1L, "x"), (2L, "y"), (3L, "z"))
+    val plain = Fingerprint(rows.toDF("a", "b"))
+    assert(plain._1 != 0L)
+    // xxhash64 over a struct hashes the values, not the field names
+    assert(Fingerprint(rows.toDF("a.b", "c`d")) == plain)
+  }
 }
