@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 object Bench {
 
   /** Calibration protocol number stamped into BOTH the full record and
@@ -140,7 +142,13 @@ object Bench {
     // failure is reported in the JSON and via exit code — never silently
     // recorded as a healthy number.
     val failures = scala.collection.mutable.Map[String, String]()
+    // Classes Spark compiled during each timed run (the CodegenMetrics
+    // delta): a query that compiles again in a later iteration lost its
+    // classes from Spark's 100-entry codegen cache to the queries between.
+    val perQueryCompiled = scala.collection.mutable.Map[String, Vector[Long]]()
+      .withDefaultValue(Vector.empty)
     def timed(name: String, run: => org.apache.spark.sql.DataFrame): Double = {
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       try Fingerprint(run)
       catch { case e: Throwable =>
@@ -149,6 +157,8 @@ object Bench {
       }
       val dt = (System.nanoTime() - t0) / 1e9
       perQuery(name) = perQuery(name) :+ dt
+      perQueryCompiled(name) = perQueryCompiled(name) :+
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0)
       dt
     }
     // Per-iteration load average: host contention on a shared box hits some
@@ -204,9 +214,11 @@ object Bench {
     val medians = queries.map { case (name, _) => name -> median(perQuery(name)) }
     val qs = medians.map { case (k, v) => jStr(k) + ":" + v }
       .mkString("{", ",", "}")
-    val perIter = queries.map { case (name, _) =>
-      jStr(name) + ":" + perQuery(name).mkString("[", ",", "]")
+    def byQuery(runs: String => Seq[Any]): String = queries.map { case (name, _) =>
+      jStr(name) + ":" + runs(name).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    val perIter = byQuery(perQuery)
+    val compiledJson = byQuery(perQueryCompiled)
     val failJson = failures.toSeq.sortBy(_._1)
       .map { case (k, v) => jStr(k) + ":" + jStr(v) }.mkString("{", ",", "}")
     val total = medians.map(_._2).sum
@@ -214,7 +226,7 @@ object Bench {
     val loadJson = iterLoadAvg.mkString("[", ",", "]")
     val nCpus = Runtime.getRuntime.availableProcessors
     val extJson = iterExternalLoad.mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total_median","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","iters":$iters,"iter_totals":$itJson,"per_query_iters":$perIter,"iter_load_avg":$loadJson,"iter_external_load":$extJson,"calib_sec":$calibSec,"calib_protocol":$CalibProtocol,"start_load_avg":$startLoad,"load_gate_threshold":$maxLoad,"load_waited_sec":$loadWaited,"failed_queries":$failJson,"host_cpus":$nCpus,"load_avg_start_of_report":${osBean.getSystemLoadAverage},"spark_cpus":$cpus,"slow_threshold_sec":$slowSec,"slow_extra_iters":$slowIters,"slow_queries":${slowNames.sorted.map(jStr).mkString("[", ",", "]")}}"""
+    val fullLine = s"""{"metric":"total_median","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","iters":$iters,"iter_totals":$itJson,"per_query_iters":$perIter,"per_query_compiled":$compiledJson,"iter_load_avg":$loadJson,"iter_external_load":$extJson,"calib_sec":$calibSec,"calib_protocol":$CalibProtocol,"start_load_avg":$startLoad,"load_gate_threshold":$maxLoad,"load_waited_sec":$loadWaited,"failed_queries":$failJson,"host_cpus":$nCpus,"load_avg_start_of_report":${osBean.getSystemLoadAverage},"spark_cpus":$cpus,"slow_threshold_sec":$slowSec,"slow_extra_iters":$slowIters,"slow_queries":${slowNames.sorted.map(jStr).mkString("[", ",", "]")}}"""
     println(fullLine)
     // The full line above is ~10 KB (146 queries × per-iteration arrays); the
     // driver's artifact keeps only the last ~2000 chars of stdout, which

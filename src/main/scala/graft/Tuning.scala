@@ -36,6 +36,29 @@ import graft.plans.RelationStats
   *    `llm_corpus` benchmark (sf0.1, 4-vCPU VM, 10 alternated pairs, faster
   *    in all 10): query p50 1.41 → 1.06 s, pass p50 5.48 → 4.33 s, and
   *    that loop 12 jobs → 1.
+  *  - The same scope also builds its projections, predicates and orderings
+  *    interpreted (`spark.sql.codegen.factoryMode=NO_CODEGEN`), so it
+  *    compiles no class. Without whole-stage codegen each operator still
+  *    compiled a class per projection, predicate or ordering. One
+  *    `llm_corpus` pass needs 127 classes, more than the 100 Spark's codegen
+  *    cache keeps, so every steady pass compiled 45–76 of them again, each
+  *    starting un-JITted. With the scopes interpreted, the 76 classes left
+  *    (work outside any scope) fit, and steady passes compile none. Measured
+  *    on the same benchmark (10 alternated pairs, faster in 9): pass p50
+  *    4.21 → 3.30 s, query p50 1.10 → 0.79 s. It costs the scopes that
+  *    evaluate many rows: in sf0.1 registry epochs `q_winsorize` (600 k
+  *    lineitem rows) ran 1.9× slower warm and `q_pagerank` (5 rounds over
+  *    1.17 M edges) 1.6×, while scopes over ≤ 150 k rows gained (SCALE.md).
+  *    No byte cut separates them: label propagation, which gains, declares
+  *    the same source as PageRank. The key is an internal Spark
+  *    conf, documented for tests, but Spark 4.1's
+  *    `CodeGeneratorWithInterpretedFallback.createObject` reads it from
+  *    `SQLConf.get` on every call without a test-mode guard. Tasks get it
+  *    with the rest of the SQL conf, and a stream's cloned session copies it
+  *    when it starts. The cache's size is a static conf, which cannot be
+  *    set on a session graft did not build. If a Spark upgrade stops
+  *    honouring the key, `IterativePlanGrowthSpec` ("a sub-unit scope
+  *    materializes label propagation without compiling a class") fails.
   *
   * [[SmallJobBytes]] is placed by PageRank, the scope that lost from the
   * rule at sf1: each round joins and aggregates its whole edge list, which
@@ -67,12 +90,13 @@ object Tuning {
 
   private val BytesPerPartition = 16L << 20
   /** Sources below this run their [[withSourceWidth]] scope without AQE and
-    * whole-stage codegen (the measurement behind it is above). */
+    * without compiling expressions (the measurements behind it are above). */
   private[graft] val SmallJobBytes = 16L << 20
   private val MinWidth = 4L
   private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
   private val AdaptiveKey = "spark.sql.adaptive.enabled"
   private val WholeStageKey = "spark.sql.codegen.wholeStage"
+  private val FactoryModeKey = "spark.sql.codegen.factoryMode"
   private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
   private val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
   /** Spark's checkpoint manager over the Hadoop `FileSystem` API, used by
@@ -96,15 +120,16 @@ object Tuning {
 
   /** Runs `f` with `spark.sql.shuffle.partitions` set to
     * [[shuffleWidth]] and, for a source below [[SmallJobBytes]], with AQE
-    * and whole-stage codegen off; restores the session's values after. The
-    * settings reach only what `f` plans: the iterative loops materialize
-    * their result inside `f`, and a stream copies the session's settings
-    * when it starts and fixes its state-store count at its first
-    * micro-batch (and keeps it for the life of its checkpoint), so callers
-    * start and drain streams inside `f`. */
+    * and whole-stage codegen off and expressions interpreted; restores the
+    * session's values after. The settings reach only what `f` plans: the
+    * iterative loops materialize their result inside `f`, and a stream
+    * copies the session's settings when it starts and fixes its state-store
+    * count at its first micro-batch (and keeps it for the life of its
+    * checkpoint), so callers start and drain streams inside `f`. */
   def withSourceWidth[T](spark: SparkSession, sourceBytes: Long)(f: => T): T =
     scoped(spark, Seq(ShufflePartitionsKey -> shuffleWidth(spark, sourceBytes).toString) ++
-      (if (sourceBytes < SmallJobBytes) Seq(AdaptiveKey -> "false", WholeStageKey -> "false")
+      (if (sourceBytes < SmallJobBytes)
+         Seq(AdaptiveKey -> "false", WholeStageKey -> "false", FactoryModeKey -> "NO_CODEGEN")
        else Nil))(f)
 
   /** [[withSourceWidth]] sized by the files under `paths` (see

@@ -168,14 +168,15 @@ class DocsFreshnessSpec extends AnyFunSuite {
   private def sessionBuilders(src: String): Seq[String] =
     codeMatches(src, """SparkSession\s*\.\s*builder\b""".r)
 
-  /** Lines of Scala source `src` that name one of the three plan-shaping
-    * session settings or one of the two stream-runtime settings (by key or
-    * by `SQLConf` entry), comments skipped. */
+  /** Lines of Scala source `src` that name one of the four settings
+    * [[graft.Tuning.withSourceWidth]] scopes or one of the two stream-runtime
+    * settings (by key or by `SQLConf` entry), comments skipped. */
   private def planKnobs(src: String): Seq[String] =
     codeMatches(src, ("""spark\.sql\.(?:shuffle\.partitions|adaptive\.enabled|codegen\.wholeStage|""" +
-      """streaming\.checkpointFileManagerClass|artifact\.isolation\.enabled)\b|""" +
+      """codegen\.factoryMode|streaming\.checkpointFileManagerClass|artifact\.isolation\.enabled)\b|""" +
       """SQLConf\.(?:SHUFFLE_PARTITIONS|ADAPTIVE_EXECUTION_ENABLED|WHOLESTAGE_CODEGEN_ENABLED|""" +
-      """STREAMING_CHECKPOINT_FILE_MANAGER_CLASS|ARTIFACTS_SESSION_ISOLATION_ENABLED)\b""").r)
+      """CODEGEN_FACTORY_MODE|STREAMING_CHECKPOINT_FILE_MANAGER_CLASS|""" +
+      """ARTIFACTS_SESSION_ISOLATION_ENABLED)\b""").r)
 
   test("no session is built outside graft.GraftSession") {
     // the detector itself, on a fixed snippet (the call is spelled in
@@ -216,8 +217,11 @@ class DocsFreshnessSpec extends AnyFunSuite {
       """  spark.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")""",
       """  spark.conf.set("spark.sql.artifact.isolation.alwaysApplyClassloader", "true")""",
       """  // spark.sql.artifact.isolation.enabled in a comment is fine""",
+      """  spark.conf.set(SQLConf.CODEGEN_FACTORY_MODE.key, "NO_CODEGEN")""",
+      """  // spark.sql.codegen.factoryMode in a comment is fine""",
       "}").mkString("\n")
-    assert(planKnobs(probe) == Seq("line 2", "line 5", "line 6", "line 8", "line 9"), planKnobs(probe))
+    assert(planKnobs(probe) == Seq("line 2", "line 5", "line 6", "line 8", "line 9", "line 12"),
+      planKnobs(probe))
     // sbt forks the test JVM with cwd = project base: Tuning sets them at
     // run time (the stream-runtime pair around a stream start),
     // GraftSession at build time, nothing else in src/main

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.plans.PlanGrowth
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -114,6 +115,29 @@ class IterativePlanGrowthSpec extends SparkSpec {
       // the simple-string rendering marks whole-stage-codegen spans `*(n)`
       assert(!plan.contains("WholeStageCodegen") && !plan.contains("*("),
         s"cached loop plan has whole-stage codegen:\n$plan")
+    } finally labels.unpersist()
+  }
+
+  test("a sub-unit scope materializes label propagation without compiling a class") {
+    // Below Tuning.SmallJobBytes the scope's projections, predicates and
+    // orderings are built interpreted, so Spark's 100-entry codegen cache
+    // gets nothing from it. This case also pins the Spark behaviour that
+    // rests on: the factory mode is read on every expression build, on the
+    // driver and in the scope's tasks, outside test mode too. A literal no
+    // earlier query used keeps a compiled class from being a cache hit;
+    // node ids are non-negative, so the filter keeps every edge.
+    val dir = "/root/testdata/sf0.01"
+    val sym = Graph.coSupplierSymTable(spark, dir)
+      .where(col("src") =!= lit(-1L - (System.nanoTime() & Long.MaxValue)))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val labels = graft.Tuning.withSourceWidth(spark,
+      Seq(s"$dir/lineitem.parquet", s"$dir/orders.parquet")) {
+      Graph.labelPropagationSym(sym, iters = 3)
+    }
+    try {
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"the sub-unit scope compiled $compiled classes")
+      assert(labels.count() > 0)
     } finally labels.unpersist()
   }
 

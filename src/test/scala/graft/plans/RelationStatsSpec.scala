@@ -83,15 +83,16 @@ class RelationStatsSpec extends graft.SparkSpec {
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "32")
     }
     // below Tuning.SmallJobBytes the scope also runs without AQE and
-    // whole-stage codegen; from there up both stay the session's
+    // whole-stage codegen, and builds its expressions interpreted; from
+    // there up all three stay the session's
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
-      "spark.sql.codegen.wholeStage")
+      "spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
     def scoped(bytes: Long): Seq[String] =
       graft.Tuning.withSourceWidth(spark, bytes)(keys.map(spark.conf.get))
     val session = keys.map(spark.conf.get)
-    assert(session.tail == Seq("true", "true"))
-    assert(scoped(graft.Tuning.SmallJobBytes - 1) == Seq("4", "false", "false"))
-    assert(scoped(graft.Tuning.SmallJobBytes) == Seq("4", "true", "true"))
+    assert(session.tail == Seq("true", "true", "FALLBACK"))
+    assert(scoped(graft.Tuning.SmallJobBytes - 1) == Seq("4", "false", "false", "NO_CODEGEN"))
+    assert(scoped(graft.Tuning.SmallJobBytes) == Seq("4", "true", "true", "FALLBACK"))
     assert(keys.map(spark.conf.get) == session)
     // and they come back when the scope throws
     intercept[IllegalStateException](
