@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Order-independent fingerprint of a frame's full output, computed in one
   * pass that evaluates every column — a `count()` lets Catalyst prune the
-  * projection list, so Bench times queries through this, and
-  * DeterminismCheck compares it across two runs. */
+  * projection list, so Bench times queries through this and compares it
+  * across iterations (`SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01
+  * SPARK_GRAFT_BENCH_ITERS=2 sbt "runMain graft.Bench"`). */
 object Fingerprint {
 
   /** (xor, wrap-around sum, rows) of per-row xxhash64 over the full struct.

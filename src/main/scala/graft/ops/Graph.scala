@@ -91,34 +91,18 @@ object Graph {
     * over the supplier↔customer interaction graph.
     *
     * Scale shape: the edge list (+ out-degrees) is the only re-used frame —
-    * persisted once DISK_ONLY (probe-chosen default; rationale at
-    * [[pageRankPreDeg]]) over the pre-bucketed table, read by every
+    * persisted once DISK_ONLY over the pre-bucketed table, read by every
     * round. Each round is one
     * shuffle join (ranks onto edges by src) + one hash agg (by dst) + one
     * left join back to the node set — no driver round-trips at all for a
     * fixed K, unlike the convergence-tested CC loop. K=5 keeps lineage
-    * ~15 operators deep: no checkpoint needed; a convergence-driven
-    * variant would reuse [[Similarity.connectedComponents]]'s
-    * checkpoint-every-5 cadence. The returned frame is materialized
+    * ~15 operators deep: no checkpoint needed ([[pageRankConverged]] is
+    * the convergence-driven variant). The returned frame is materialized
     * (cache + count) before the working caches are released, so callers
     * get a computed result, not a live dependency on dropped caches. */
   def pageRank(edges: DataFrame, iters: Int = 5,
-               completeGraph: Boolean = false,
-               storage: Option[org.apache.spark.storage.StorageLevel] =
-                 Some(org.apache.spark.storage.StorageLevel.DISK_ONLY)): DataFrame = {
+               completeGraph: Boolean = false): DataFrame = {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    pageRankPreDeg(edges.join(deg, "src"), iters, completeGraph, storage)
-  }
-
-  /** PageRank loop over an edge frame that already carries `outdeg`.
-    * (Kept as the seam the r12 denormalized-outdeg experiment used; the
-    * registered query goes through [[pageRank]] — the per-query degree
-    * aggregation over the bucketed table measured as cheap as reading a
-    * persisted outdeg column, see [[interactionEdgeTable]].) */
-  private[graft] def pageRankPreDeg(withDeg: DataFrame, iters: Int,
-                                    completeGraph: Boolean,
-                                    storage: Option[org.apache.spark.storage.StorageLevel] =
-                                      Some(org.apache.spark.storage.StorageLevel.DISK_ONLY)): DataFrame = {
     // Pre-hash-partition the cached edge frame on src BEFORE caching
     // (kHopQuery's measured pattern, applied here in r11): without this
     // the cache holds the SCAN's partitioning and every round's
@@ -130,27 +114,10 @@ object Graph {
     // shuffles, but partial aggregation collapses it to per-partition
     // partial sums first. Physical layout only — the integer rank math is
     // summation-order-independent, so the oracle hash is untouched
-    // (Verify gates it).
-    // Default storage = DISK_ONLY, chosen on tools/PageRankStorageProbe
-    // evidence (r12 verdict item 2; full tables in SCALE.md round 13).
-    // Steady medians, clearCache protocol, 6 iters:
-    //   sf0.1 (8g heap):  m_a_d 2.1 s | disk_only 2.0 s | none 2.0 s
-    //   sf10 (100g heap): m_a_d 43.5 s band 13.8-82.2 | disk_only 13.4 s
-    //                     flat | none 24.5 s
-    //   sf100 (100g heap): m_a_d 211 s band 154-226 | disk_only 212 s
-    //                     band 188-249 | none 238 s
-    // At sf100 the 5 join rounds' shuffles dominate and the posture is a
-    // wash; at sf10 MEMORY_AND_DISK's deserialized on-heap columnar
-    // batches drive GC churn (3x slower, 6x variance) while DISK_ONLY's
-    // serialized batches ride the OS page cache; at bench scale they tie.
-    // DISK_ONLY is the one posture whose behavior is heap-size-invariant
-    // — on a real cluster the frame is read 5 times and discarded, which
-    // is exactly the page-cache-backed pattern. None = no persistence
-    // (every round re-derives from the bucketed table: scan +
-    // exchange-free deg agg + elided repartition) costs 13-80% and is
-    // kept for callers whose edge frame is cheaper than its cache.
-    val repart = withDeg.repartition(col("src"))
-    val ed = storage.map(repart.persist).getOrElse(repart)
+    // (Verify gates it). DISK_ONLY is the one storage level whose speed
+    // does not depend on heap size (probe tables: SCALE.md round 13).
+    val ed = edges.join(deg, "src").repartition(col("src"))
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val nodes = ed.select(col("src").as("node")).distinct().cache()
     var ranks = nodes.select(col("node"), lit(1000000L).as("r"))
     for (i <- 1 to iters) {
@@ -161,7 +128,7 @@ object Graph {
     }
     val out = ranks.cache()
     out.count() // materialize before releasing the frames it was built from
-    if (storage.isDefined) ed.unpersist()
+    ed.unpersist()
     nodes.unpersist()
     out
   }
@@ -304,25 +271,20 @@ object Graph {
     * with delta < eps" rule, no monotonicity assumption: every computed
     * round's delta is inspected, oldest first), at the price of at most
     * `checkEvery - 1` overshoot iterations of wasted step work. The
-    * frames involved are node-sized, never edge-sized. Lineage is
-    * truncated on [[Similarity.connectedComponents]]'s checkpoint-every-5
-    * cadence, cache-first with a localCheckpoint fallback when the
-    * session has no checkpoint dir (ADVICE r14 — previously a >=5-round
-    * convergence in a dir-less session threw). Returns the converged
+    * frames involved are node-sized, never edge-sized. Each round's ranks
+    * are held through [[Rounds.hold]], the cadence
+    * [[Similarity.connectedComponents]] shares (a dir-less session falls
+    * back to a local checkpoint). Returns the converged
     * ranks (cache-materialized) and the iteration count actually run. */
   private[graft] def pageRankConverged(edges: DataFrame, eps: Long,
-      maxIters: Int,
-      storage: Option[org.apache.spark.storage.StorageLevel] =
-        Some(org.apache.spark.storage.StorageLevel.DISK_ONLY),
-      checkEvery: Int = 2): (DataFrame, Int) = {
+      maxIters: Int, checkEvery: Int = 2): (DataFrame, Int) = {
     // ADVICE r15: 0 would throw ArithmeticException at `it % checkEvery`
     // and a negative value silently disables every mid-loop probe (all
     // runs overshoot to maxIters before the tail runCheck) — reject both
     require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
-    val spark = edges.sparkSession
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val repart = edges.join(deg, "src").repartition(col("src"))
-    val ed = storage.map(repart.persist).getOrElse(repart)
+    val ed = edges.join(deg, "src").repartition(col("src"))
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val nodes = ed.select(col("src").as("node")).distinct().cache()
     var ranks = nodes.select(col("node"), lit(1000000L).as("r"))
     val held = scala.collection.mutable.Buffer.empty[DataFrame]
@@ -354,18 +316,7 @@ object Graph {
       // where every node has an in-edge (same contract as labelProp)
       val next = step(nodes, ed, ranks, completeGraph = true)
       it += 1
-      val cached =
-        if (it % 5 == 0) {
-          if (spark.sparkContext.getCheckpointDir.isDefined) {
-            // cache first: reliable checkpointing runs a SECOND job to
-            // write the files, which would otherwise recompute the
-            // round's join+agg from lineage (the Similarity.cc pattern)
-            next.cache()
-            val cp = next.checkpoint(true)
-            next.unpersist()
-            cp
-          } else next.localCheckpoint(true)
-        } else next.cache()
+      val cached = Rounds.hold(next, it)
       held += cached
       graft.plans.PlanGrowth.record("pageRankConverged", it, cached)
       unchecked += ((it, cached, ranks))
@@ -377,7 +328,7 @@ object Graph {
       if (firstConv >= 0) (convFrame, firstConv) else (ranks, it)
     outRanks.count() // materialize before releasing the working frames
     held.foreach(h => if (h ne outRanks) h.unpersist())
-    if (storage.isDefined) ed.unpersist()
+    ed.unpersist()
     nodes.unpersist()
     (outRanks, itersRun)
   }

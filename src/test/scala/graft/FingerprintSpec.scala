@@ -1,7 +1,8 @@
 package graft
 
 /** [[Fingerprint]], the one force/checksum Bench times queries through and
-  * DeterminismCheck compares across runs. */
+  * compares across iterations (`SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01
+  * SPARK_GRAFT_BENCH_ITERS=2 sbt "runMain graft.Bench"`). */
 class FingerprintSpec extends SparkSpec {
   import spark.implicits._
 

@@ -1,8 +1,8 @@
 #!/bin/bash
-# One scale epoch: a graft.Bench run at one scale factor with the protocol
-# of every tools/bench_baselines/bench_rN_sf* baseline (2 iterations, no
-# slow-tail re-runs), keeping the full record (per-query medians and load
-# traces) as the baseline and the compact summary line in OUT.stdout.
+# One scale epoch: a graft.Bench run at one scale factor (2 iterations by
+# default), keeping its full record (per-query medians, every timed run,
+# classes compiled per run, failed queries) as OUT and Bench's stdout
+# (the determinism lines) in OUT.stdout.
 #
 # Usage: tools/run_scale_epochs.sh SF_DIR OUT [CPUS] [HEAP] [QUERIES]
 #   SF_DIR   scale-factor directory (e.g. target/sf1 from
@@ -26,7 +26,7 @@ qenv=()
 if [ -n "$queries" ]; then qenv=(SPARK_GRAFT_BENCH_QUERIES="$queries"); fi
 echo "[epoch] $sfdir on $cpus cores, -Xmx$heap: start $(date +%T)"
 env SPARK_GRAFT_SF_DIR="$sfdir" SPARK_GRAFT_BENCH_ITERS="${SPARK_GRAFT_BENCH_ITERS:-2}" \
-  SPARK_GRAFT_BENCH_SLOW_ITERS=0 SPARK_GRAFT_CPUS="$cpus" "${qenv[@]}" \
+  SPARK_GRAFT_CPUS="$cpus" "${qenv[@]}" \
   java -Xmx"$heap" $OPENS \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench \
   > "$out.stdout" 2> "$out.stderr"
