@@ -85,40 +85,47 @@ object Bpe {
       .otherwise(transform(sequence(lit(1), size(s) - 1),
         i => struct(element_at(s, i).as("lhs"), element_at(s, i + 1).as("rhs"))))
 
-  /** Run `k` BPE merge rounds over a (word, w, cnt) frame: the learned
-    * merge list plus the final rewritten vocabulary frame (lineage on top
-    * of the cached input — callers release `vocab`'s cache when done).
+  /** Run up to `k` BPE merge rounds over a (word, w, cnt) frame: the
+    * learned merge list plus the final rewritten vocabulary frame (lineage
+    * on top of the cached input — callers release `vocab`'s cache when
+    * done). The loop stops early at the first round with no adjacent pair
+    * left (every word one symbol), keeping the merges learned so far.
     *
     * The input vocabulary is cached once; each round's rewrite is a narrow
     * codegen'd projection stacked on that cache, so round k recomputes k
     * cheap string replaces over a vocab-sized frame instead of paying a
-    * cache materialization per round (K is small and fixed; a
-    * convergence-driven variant at large K would adopt
-    * [[Similarity.connectedComponents]]'s checkpoint-every-5 cadence). */
+    * cache materialization per round. The merge loop has a driver action
+    * per round, so it stays outside the round driver; a convergence-driven
+    * variant at large K would hold its state through
+    * `graft.ops.Rounds.hold`. */
   private def learn(vocab: DataFrame, k: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     val spark = vocab.sparkSession
     import spark.implicits._
     var words = vocab
     val merges = Seq.newBuilder[(Int, String, String, Long)]
-    for (step <- 1 to k) {
+    var exhausted = false
+    for (step <- 1 to k if !exhausted) {
       val pairs = words
         .select(syms($"w").as("s"), $"cnt")
         .select(explode(adjacentPairs($"s")).as("p"), $"cnt")
         .groupBy($"p.lhs".as("lhs"), $"p.rhs".as("rhs"))
         .agg(sum($"cnt").as("c"))
-      val (lhs, rhs, c) = pairs.orderBy($"c".desc, $"lhs", $"rhs").limit(1)
-        .as[(String, String, Long)].head()
-      merges += ((step, lhs, rhs, c))
-      // literal replace: |lhs||rhs| → |lhsrhs| — greedy leftmost by the
-      // double-delimiter construction. Column-based `replace` with lit()
-      // arguments, NOT a string-interpolated expr(): merge symbols are
-      // data-derived, and a quote/backslash in an un-normalized caller
-      // vocabulary must stay a literal byte, never SQL syntax.
-      words = words.withColumn("w",
-        replace($"w", lit(s"|$lhs||$rhs|"), lit(s"|$lhs$rhs|")))
-      // single state reference per round ⇒ linear analyzed-plan growth,
-      // bounded by fixed K (IterativePlanGrowthSpec pins it)
-      graft.plans.PlanGrowth.record("bpeLearn", step, words)
+      pairs.orderBy($"c".desc, $"lhs", $"rhs").limit(1)
+        .as[(String, String, Long)].collect().headOption match {
+        case None => exhausted = true
+        case Some((lhs, rhs, c)) =>
+          merges += ((step, lhs, rhs, c))
+          // literal replace: |lhs||rhs| → |lhsrhs| — greedy leftmost by the
+          // double-delimiter construction. Column-based `replace` with lit()
+          // arguments, NOT a string-interpolated expr(): merge symbols are
+          // data-derived, and a quote/backslash in an un-normalized caller
+          // vocabulary must stay a literal byte, never SQL syntax.
+          words = words.withColumn("w",
+            replace($"w", lit(s"|$lhs||$rhs|"), lit(s"|$lhs$rhs|")))
+          // single state reference per round ⇒ linear analyzed-plan growth,
+          // bounded by fixed K (IterativePlanGrowthSpec pins it)
+          graft.plans.PlanGrowth.record("bpeLearn", step, words)
+      }
     }
     (merges.result(), words)
   }

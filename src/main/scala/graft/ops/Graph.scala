@@ -97,40 +97,38 @@ object Graph {
     * left join back to the node set — no driver round-trips at all for a
     * fixed K, unlike the convergence-tested CC loop. K=5 keeps lineage
     * ~15 operators deep: no checkpoint needed ([[pageRankConverged]] is
-    * the convergence-driven variant). The returned frame is materialized
-    * (cache + count) before the working caches are released, so callers
-    * get a computed result, not a live dependency on dropped caches. */
+    * the convergence-driven variant). [[Rounds.run]] returns the ranks
+    * materialized (cache + count) and has released the working caches. */
   def pageRank(edges: DataFrame, iters: Int = 5,
                completeGraph: Boolean = false): DataFrame = {
+    val (ed, nodes, init) = pageRankInputs(edges)
+    Rounds.run("pageRankFixedK", init, Rounds.Fixed(iters), ed, nodes)(
+      (ranks, _) => step(nodes, ed, ranks, completeGraph))._1
+  }
+
+  /** What both PageRank loops read every round: the edge list with
+    * out-degrees and the node set (the two working frames), plus the
+    * initial ranks.
+    *
+    * The edge frame is pre-hash-partitioned on src BEFORE caching
+    * (kHopQuery's measured pattern, applied here in r11): without this
+    * the cache holds the SCAN's partitioning and every round's
+    * ranks⋈edges join re-shuffles the full edge side — 5 avoidable
+    * edge-sized exchanges per query. (Over the bucketed edge table the
+    * repartition is planner-elided — buckets == shuffle partitions.)
+    * Partitioned on the join key, each round shuffles only the
+    * (node-sized) ranks frame; the per-round dst aggregation still
+    * shuffles, but partial aggregation collapses it to per-partition
+    * partial sums first. Physical layout only — the integer rank math is
+    * summation-order-independent, so the oracle hash is untouched
+    * (Verify gates it). DISK_ONLY is the one storage level whose speed
+    * does not depend on heap size (probe tables: SCALE.md round 13). */
+  private def pageRankInputs(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // Pre-hash-partition the cached edge frame on src BEFORE caching
-    // (kHopQuery's measured pattern, applied here in r11): without this
-    // the cache holds the SCAN's partitioning and every round's
-    // ranks⋈edges join re-shuffles the full edge side — 5 avoidable
-    // edge-sized exchanges per query. (Over the bucketed edge table the
-    // repartition is planner-elided — buckets == shuffle partitions.)
-    // Partitioned on the join key, each round shuffles only the
-    // (node-sized) ranks frame; the per-round dst aggregation still
-    // shuffles, but partial aggregation collapses it to per-partition
-    // partial sums first. Physical layout only — the integer rank math is
-    // summation-order-independent, so the oracle hash is untouched
-    // (Verify gates it). DISK_ONLY is the one storage level whose speed
-    // does not depend on heap size (probe tables: SCALE.md round 13).
     val ed = edges.join(deg, "src").repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val nodes = ed.select(col("src").as("node")).distinct().cache()
-    var ranks = nodes.select(col("node"), lit(1000000L).as("r"))
-    for (i <- 1 to iters) {
-      ranks = step(nodes, ed, ranks, completeGraph)
-      // single state reference per round ⇒ linear analyzed-plan growth,
-      // bounded by fixed K (IterativePlanGrowthSpec pins it)
-      graft.plans.PlanGrowth.record("pageRankFixedK", i, ranks)
-    }
-    val out = ranks.cache()
-    out.count() // materialize before releasing the frames it was built from
-    ed.unpersist()
-    nodes.unpersist()
-    out
+    (ed, nodes, nodes.select(col("node"), lit(1000000L).as("r")))
   }
 
   /** The query graph: lineitem⋈orders distinct (supplier, customer)
@@ -263,74 +261,30 @@ object Graph {
     * identically in engine and oracle).
     *
     * Shape per round: the fixed-K [[step]] plus a node-sized join+max-agg
-    * convergence test — AMORTIZED to one driver round-trip per
-    * `checkEvery` rounds (r14 verdict item 4): rounds accumulate
-    * unchecked, then ONE job computes every pending round's max-delta as
-    * a unioned keyed aggregate and the FIRST qualifying round wins —
-    * byte-identical output to the per-iteration check (same "first `it`
-    * with delta < eps" rule, no monotonicity assumption: every computed
-    * round's delta is inspected, oldest first), at the price of at most
-    * `checkEvery - 1` overshoot iterations of wasted step work. The
-    * frames involved are node-sized, never edge-sized. Each round's ranks
-    * are held through [[Rounds.hold]], the cadence
-    * [[Similarity.connectedComponents]] shares (a dir-less session falls
-    * back to a local checkpoint). Returns the converged
-    * ranks (cache-materialized) and the iteration count actually run. */
+    * convergence probe — AMORTIZED to one driver round-trip per
+    * `checkEvery` rounds (r14 verdict item 4) by [[Rounds.Probe]]: ONE
+    * job computes every pending round's max-delta and the FIRST
+    * qualifying round wins — byte-identical output to the per-iteration
+    * check (same "first `it` with delta < eps" rule, no monotonicity
+    * assumption: every computed round's delta is inspected, oldest
+    * first), at the price of at most `checkEvery - 1` overshoot
+    * iterations of wasted step work. The frames involved are node-sized,
+    * never edge-sized. Returns the converged ranks (cache-materialized)
+    * and the iteration count actually run; at the cap, the capped ranks
+    * and the cap. */
   private[graft] def pageRankConverged(edges: DataFrame, eps: Long,
       maxIters: Int, checkEvery: Int = 2): (DataFrame, Int) = {
-    // ADVICE r15: 0 would throw ArithmeticException at `it % checkEvery`
-    // and a negative value silently disables every mid-loop probe (all
-    // runs overshoot to maxIters before the tail runCheck) — reject both
-    require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val ed = edges.join(deg, "src").repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val nodes = ed.select(col("src").as("node")).distinct().cache()
-    var ranks = nodes.select(col("node"), lit(1000000L).as("r"))
-    val held = scala.collection.mutable.Buffer.empty[DataFrame]
-    // rounds computed since the last convergence probe, oldest first:
-    // (iteration number, that round's ranks, the previous round's ranks)
-    val unchecked = scala.collection.mutable.Buffer.empty[(Int, DataFrame, DataFrame)]
-    var firstConv = -1
-    var convFrame: DataFrame = null
-    var it = 0
-    def runCheck(): Unit = if (firstConv < 0 && unchecked.nonEmpty) {
-      val diffs = unchecked.map { case (i, cur, prv) =>
-        cur.join(prv.select(col("node"), col("r").as("r_prev")), "node")
-          .select(lit(i).as("it"), abs(col("r") - col("r_prev")).as("d"))
-      }.reduce(_.unionByName(_))
-      // max over zero rows is null (empty node set) — read through the
-      // null guard and treat it as delta 0: an empty graph is converged
-      // (ADVICE r14: the old per-round .getLong NPE'd here)
-      val byIt = diffs.groupBy(col("it")).agg(max(col("d")).as("d")).collect()
-        .map(r => r.getInt(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1))).toMap
-      unchecked.foreach { case (i, cur, _) =>
-        if (firstConv < 0 && byIt.getOrElse(i, 0L) < eps) {
-          firstConv = i; convFrame = cur
-        }
-      }
-      unchecked.clear()
+    val (ed, nodes, init) = pageRankInputs(edges)
+    val maxDelta = Rounds.Probe(checkEvery, maxIters, failAtCap = false) { (prev, cur) =>
+      cur.join(prev.select(col("node"), col("r").as("r_prev")), "node")
+        // max over zero rows is null (empty node set): read it as delta 0,
+        // so an empty graph is converged (ADVICE r14)
+        .agg((coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)) < eps).as("passed"))
     }
-    while (it < maxIters && firstConv < 0) {
-      // complete-graph step: the callers feed SYMMETRIZED edge sets,
-      // where every node has an in-edge (same contract as labelProp)
-      val next = step(nodes, ed, ranks, completeGraph = true)
-      it += 1
-      val cached = Rounds.hold(next, it)
-      held += cached
-      graft.plans.PlanGrowth.record("pageRankConverged", it, cached)
-      unchecked += ((it, cached, ranks))
-      ranks = cached
-      if (it % checkEvery == 0) runCheck()
-    }
-    runCheck() // tail rounds when maxIters is not a multiple of checkEvery
-    val (outRanks, itersRun) =
-      if (firstConv >= 0) (convFrame, firstConv) else (ranks, it)
-    outRanks.count() // materialize before releasing the working frames
-    held.foreach(h => if (h ne outRanks) h.unpersist())
-    ed.unpersist()
-    nodes.unpersist()
-    (outRanks, itersRun)
+    // complete-graph step: the callers feed SYMMETRIZED edge sets, where
+    // every node has an in-edge (same contract as labelProp)
+    Rounds.run("pageRankConverged", init, maxDelta, ed, nodes)(
+      (ranks, _) => step(nodes, ed, ranks, completeGraph = true))
   }
 
   /** Registered query: PageRank-to-convergence over the symmetrized bulk
@@ -416,41 +370,20 @@ object Graph {
     * non-minimal discoveries exactly like the Spark-side agg).
     *
     * Scale shape: k fixed ⇒ k shuffle joins + k hash aggs, lineage ~5
-    * ops/round (no checkpoint needed at k ≤ 5; a larger-k variant adopts
-    * [[Similarity.connectedComponents]]'s cadence). The frontier filter
-    * keeps each round's join input at ONE BFS layer, not the cumulative
-    * reachable set.
+    * ops/round. The frontier filter keeps each round's join input at ONE
+    * BFS layer, not the cumulative reachable set. Each round reads `dist`
+    * TWICE (frontier filter + union fold), so the step caches its own
+    * output: the executed side then computes each round once, inside the
+    * one job that materializes the result (r7 verdict item 7: no per-round
+    * action). The analyzed plan still about doubles per round, harmless at
+    * the fixed k = 3 (IterativePlanGrowthSpec pins the bound); a larger-k
+    * variant flattens its state with [[Rounds.flatten]].
     *
-    * Returns (distances, release) — callers invoke `release()` after
-    * materializing/consuming the result to drop the loop's cached rounds. */
+    * Returns the distances materialized; the earlier rounds are released. */
   private[ops] def kHopReachability(edges: DataFrame, seeds: DataFrame,
-                                    k: Int): (DataFrame, () => Unit) = {
-    // Each round reads `dist` TWICE (frontier filter + union fold), so an
-    // uncached loop doubles the lineage per round — 2^k plan blowup
-    // (measured: 10.9 s → 2.6 s at sf0.1 for k=3). cache() fixes the
-    // EXECUTED side of that: the cache manager substitutes one shared
-    // InMemoryRelation per round at PHYSICAL-planning time, so both
-    // consumers scan the same cached RDD and the DAG scheduler computes
-    // each round exactly once even inside a single job. Per the r14
-    // connectedComponents diagnosis, the ANALYZED logical tree is NOT
-    // truncated by cache and still doubles per round — ~2^k nodes of
-    // driver-side tree-walk cost, harmless at the fixed k = 3 (≤ ~8× one
-    // round's plan; IterativePlanGrowthSpec pins that bound) but the
-    // reason a larger-k variant must adopt connectedComponents' per-round
-    // LogicalRDD flatten, not just its checkpoint cadence. The r7 loop
-    // also ran a count() per
-    // round to materialize before releasing the superseded round — one
-    // extra job and a full cache re-read per hop (r7 verdict item 7).
-    // Dropping the per-round action and keeping every round marked until
-    // the CALLER's one terminal action is strictly fewer jobs with
-    // identical per-round work; the held state is k small (node, dist)
-    // frames, released together via the returned thunk. A larger-k
-    // variant would re-introduce a materialize-and-release cadence every
-    // ~5 rounds (connectedComponents') to bound memory and lineage depth.
-    val cached = scala.collection.mutable.Buffer.empty[DataFrame]
-    var dist = seeds.select(col("node"), lit(0).as("dist")).cache()
-    cached += dist
-    for (d <- 1 to k) {
+                                    k: Int): DataFrame = {
+    val init = seeds.select(col("node"), lit(0).as("dist")).cache()
+    Rounds.run("kHopReachability", init, Rounds.Fixed(k)) { (dist, d) =>
       // No `.distinct()` on the frontier expansion (r17): the union-fold's
       // `groupBy(node).min(dist)` already dedupes, and its partial (map-side)
       // aggregation collapses duplicate dst rows before the exchange — the
@@ -460,14 +393,10 @@ object Graph {
       val next = edges.join(dist.filter(col("dist") === d - 1).hint("shuffle_hash"),
           edges("src") === col("node"))
         .select(edges("dst").as("node"), lit(d).as("dist"))
-      val folded = dist.unionByName(next)
+      dist.unionByName(next)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
         .cache()
-      cached += folded
-      graft.plans.PlanGrowth.record("kHopReachability", d, folded)
-      dist = folded
-    }
-    (dist, () => cached.foreach(_.unpersist()))
+    }._1
   }
 
   /** Registered query: 3-hop reachability over the interaction graph from
@@ -489,15 +418,10 @@ object Graph {
       .repartition(col("src")).cache()
     val seeds = edges.select($"src".as("node")).distinct()
       .filter($"node" % 2 === 0 && expr("(node div 2) % 10") === 0)
-    val (dist, release) = kHopReachability(edges, seeds, k = 3)
-    val out = dist
-      .groupBy($"dist")
-      .agg(count(lit(1)).as("n_nodes"), sum($"node").as("sum_node_ids"))
-      .cache()
-    out.count() // the ONE terminal action — materializes every BFS round once
-    release()
+    val dist = kHopReachability(edges, seeds, k = 3)
     edges.unpersist()
-    out
+    dist.groupBy($"dist")
+      .agg(count(lit(1)).as("n_nodes"), sum($"node").as("sum_node_ids"))
   }
 
   private val kHopSql =
@@ -674,23 +598,16 @@ object Graph {
     val spark = sym0.sparkSession
     import spark.implicits._
     val sym = sym0.repartition($"src").cache()
-    var labels = sym.select($"src".as("node")).distinct()
+    val init = sym.select($"src".as("node")).distinct()
       .select($"node", $"node".as("label"))
-    for (i <- 1 to iters) {
-      labels = sym.join(labels.hint("shuffle_hash"), sym("src") === labels("node"))
+    Rounds.run("labelPropagationSym", init, Rounds.Fixed(iters), sym) { (labels, _) =>
+      sym.join(labels.hint("shuffle_hash"), sym("src") === labels("node"))
         .groupBy(sym("dst"), col("label")).agg(count(lit(1)).as("cnt"))
         // mode with smallest-label tie-break: min over (-cnt, label) structs
         .groupBy(col("dst").as("node"))
         .agg(min(struct((-col("cnt")).as("negc"), col("label"))).as("m"))
         .select(col("node"), col("m.label").as("label"))
-      // single state reference per round ⇒ linear analyzed-plan growth,
-      // bounded by the fixed small iters (IterativePlanGrowthSpec pins it)
-      graft.plans.PlanGrowth.record("labelPropagationSym", i, labels)
-    }
-    val out = labels.cache()
-    out.count() // materialize before releasing the edge cache
-    sym.unpersist()
-    out
+    }._1
   }
 
   /** Registered query: communities of the bulk co-supplier graph — the

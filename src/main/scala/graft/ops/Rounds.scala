@@ -1,10 +1,96 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftDatasets}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.storage.StorageLevel
 
-/** The state cadence of the convergence loops
-  * ([[Similarity.connectedComponents]], [[Graph.pageRankConverged]]). */
+/** The one round driver of the iterative graph loops
+  * ([[Graph.pageRank]], [[Graph.pageRankConverged]],
+  * [[Graph.labelPropagationSym]], [[Graph.kHopReachability]],
+  * [[Similarity.connectedComponents]]): Pregel-style supersteps, a
+  * per-round step plus a stop rule. [[run]] owns the round counter and
+  * `PlanGrowth.record`, the [[hold]] cadence, the convergence probes, the
+  * round cap, and the result's materialization before every working cache
+  * is released. Each loop keeps only its step, its stop rule and its own
+  * inputs. */
 private[ops] object Rounds {
+
+  /** How a loop stops: at the latest after `cap` rounds. */
+  sealed abstract class Stop(val cap: Int)
+
+  /** Exactly `rounds` rounds. The state is not held between rounds, so the
+    * loop stays one lazy lineage and materializes in one job; a step that
+    * reads its state more than once caches its own output. */
+  final case class Fixed(rounds: Int) extends Stop(rounds)
+
+  /** Until a round passes its probe, at most `cap` rounds. Every round is
+    * held ([[hold]]). Every `every` rounds, and at the cap, one job checks
+    * all pending rounds, oldest first: `passed(prev, cur)` is a one-row
+    * frame whose one boolean column says whether `cur` converged. The first
+    * round that passes wins; later rounds were overshoot. A loop that
+    * reaches the cap unconverged throws `IllegalStateException` when
+    * `failAtCap`, or else returns the cap's state. */
+  final case class Probe(every: Int, override val cap: Int, failAtCap: Boolean)(
+      val passed: (DataFrame, DataFrame) => DataFrame) extends Stop(cap) {
+    require(every >= 1, s"probe cadence must be >= 1, got $every") // 0 divides by zero
+  }
+
+  /** Runs `step(state, round)` (`round` 1-based) from `init` until `stop`
+    * and returns the result, cached and counted, with the number of rounds
+    * it took. Only then are every earlier round's frame (`init` included)
+    * and every `working` frame released: a cache that depends on a
+    * released one and has not loaded its buffers would be recompiled from
+    * lineage. */
+  def run(op: String, init: DataFrame, stop: Stop, working: DataFrame*)
+         (step: (DataFrame, Int) => DataFrame): (DataFrame, Int) = {
+    val (cap, probe) = (stop.cap, Some(stop).collect { case p: Probe => p })
+    val frames = scala.collection.mutable.ArrayBuffer(init) // frames(i): round i
+    var probed = 0
+    var winner: Option[Int] = None
+    while (winner.isEmpty && frames.size <= cap) {
+      val round = frames.size
+      val stepped = step(frames.last, round)
+      val next = if (probe.isDefined) hold(stepped, round) else stepped
+      graft.plans.PlanGrowth.record(op, round, next)
+      frames += next
+      probe.foreach { p =>
+        if (round % p.every == 0 || round == cap) {
+          winner = firstPassing(p, frames, probed + 1, round)
+          probed = round
+        }
+      }
+    }
+    val done = winner.getOrElse(cap)
+    val result = frames(done)
+    if (winner.isEmpty && probe.exists(_.failAtCap)) {
+      release(frames ++ working)
+      throw new IllegalStateException(
+        s"$op did not converge in $cap rounds: its state at the cap is not a fixpoint")
+    }
+    if (result.storageLevel == StorageLevel.NONE) result.cache()
+    result.count()
+    release((frames ++ working).filterNot(_ eq result))
+    (result, done)
+  }
+
+  /** The first of rounds `from..to` whose probe passes: one job for all. */
+  private def firstPassing(p: Probe, frames: collection.Seq[DataFrame], from: Int, to: Int): Option[Int] = {
+    val passed = (from to to).map(i => p.passed(frames(i - 1), frames(i))
+        .select(lit(i), col("*")).toDF("round", "passed"))
+      .reduce(_.unionByName(_)).collect()
+      .map(r => r.getInt(0) -> (!r.isNullAt(1) && r.getBoolean(1))).toMap
+    (from to to).find(passed)
+  }
+
+  private def release(frames: collection.Seq[DataFrame]): Unit =
+    frames.foreach(f => if (f.storageLevel != StorageLevel.NONE) f.unpersist())
+
+  /** `df` re-rooted on a one-node plan (a `LogicalRDD` leaf) with the same
+    * rows and output partitioning. A step that reads its state several
+    * times per round flattens it: `.cache()` truncates execution but not
+    * the analyzed plan, which would otherwise grow by that factor every
+    * round (the r14 growth class). */
+  def flatten(df: DataFrame): DataFrame = GraftDatasets.flatten(df)
 
   /** Rounds between lineage truncations: plan and RDD lineage never grow
     * past this many rounds' worth, so per-round analysis stays flat. */

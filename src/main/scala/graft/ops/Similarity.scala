@@ -109,9 +109,9 @@ object Similarity {
     * on chains — edges 1–5, 5–3 keep {1, 3} though the component is
     * {1,3,5}; the closure keeps only {1}. Scale: the edge set is LSH
     * candidates (orders of magnitude smaller than the corpus), each round
-    * is a keyed shuffle join, and the per-round driver action reads only a
-    * change counter. Lineage is BOUNDED: the label frame is held through
-    * [[Rounds.hold]], which checkpoints it every
+    * is a keyed shuffle join, and one driver action every two rounds reads
+    * only a change sum. Lineage is BOUNDED: [[Rounds.run]] holds the label
+    * frame through [[Rounds.hold]], which checkpoints it every
     * [[Rounds.CheckpointEvery]] rounds (reliably when the session has a
     * checkpoint dir), so analysis time stays flat.
     *
@@ -202,16 +202,19 @@ object Similarity {
     val sym = pre.repartition(col("dst")).cache()
     sym.count()
     pre.unpersist()
-    var labels = sym.select(col("src").as("doc_id")).distinct()
+    val init = sym.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster", col("doc_id")).cache()
-    // the cache-holding frame behind `labels` (the flattened wrapper the
-    // loop hands around carries no cache entry of its own — see the
-    // plan-flatten note below)
-    var labelsRaw: Option[DataFrame] = Some(labels)
-    var converged = false
-    var prevSum: Option[java.math.BigDecimal] = None
-    var i = 0
-    while (!converged && i < maxIter) {
+    // convergence via Σcluster: labels only ever DECREASE per node (least),
+    // so Σᵢ = Σᵢ₋₁ exactly when round i changed nothing — one one-row
+    // aggregate per round instead of a join+filter+count, probed every 2
+    // rounds. decimal(38,0) keeps the sum exact at any corpus size (a
+    // wrapped long sum could in principle alias a non-fixpoint).
+    val unchanged = Rounds.Probe(every = 2, cap = maxIter, failAtCap = true) { (prev, cur) =>
+      cur.select(col("cluster").cast("decimal(38,0)").as("c"))
+        .unionByName(prev.select((-col("cluster").cast("decimal(38,0)")).as("c")))
+        .agg((coalesce(sum(col("c")), lit(0)) === 0).as("passed"))
+    }
+    Rounds.run("connectedComponents", init, unchanged, sym) { (labels, _) =>
       // SHUFFLE_HASH on the node-sized labels side (r18): the edge side is
       // already partitioned on dst, so the round's join plans zero edge
       // exchanges and no per-round sort of the edge frame
@@ -228,58 +231,14 @@ object Similarity {
       val jumped = prop.as("c").join(prop.as("p"), col("c.cluster") === col("p.doc_id"))
         .select(col("c.doc_id").as("doc_id"),
           least(col("c.cluster"), col("p.cluster")).as("cluster"))
-      val nextRaw = Rounds.hold(jumped, i + 1)
-      // PLAN-flatten every round (r14): cache/checkpoint truncate
-      // EXECUTION, but `.cache()` leaves the LOGICAL plan intact, and the
-      // pointer-jump self-join references `prop` twice (hence `labels`
-      // 4×), so the analyzed plan grew ~4× per round between checkpoints
-      // — Catalyst's per-round tree walks turned exponential in
-      // rounds-since-checkpoint. Invisible at test SF (few rounds), it
-      // made the loop DRIVER-bound on a 27k-edge sf10 candidate graph:
-      // 392 s inside connectedComponents with the main thread at 100%
-      // CPU in TreeNode.foreachUp (bench_r14_sf10 + jstack, SCALE.md
-      // round 14), ~16 s once flattened. Wrapping the materialized RDD
-      // in a fresh DataFrame replaces the plan with a LogicalRDD leaf —
-      // per-round analysis stays O(one round's ops); RDD lineage (fault
-      // tolerance) is untouched and still bounded by the 5-round
-      // checkpoint cadence. Values are unchanged by construction — the
-      // oracle hash gate and Bench's determinism check
-      // (SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 SPARK_GRAFT_BENCH_ITERS=2
-      // sbt "runMain graft.Bench") pin that.
-      val next = sym.sparkSession.createDataFrame(nextRaw.rdd, nextRaw.schema)
-      graft.plans.PlanGrowth.record("connectedComponents", i + 1, next)
-      // convergence via Σcluster: labels only ever DECREASE per node
-      // (least), so the total is strictly monotone until fixpoint — one
-      // aggregate action per round instead of a join+filter+count.
-      // decimal(38,0) keeps the sum exact at any corpus size (a wrapped
-      // long sum could in principle alias a non-fixpoint as converged).
-      val sum = Option(next
-        .agg(org.apache.spark.sql.functions.sum(col("cluster").cast("decimal(38,0)")))
-        .first().get(0).asInstanceOf[java.math.BigDecimal])
-      // unpersist the RAW cached frame: the flattened wrapper holds no
-      // cache entry of its own, so unpersisting it would leak one cached
-      // round per iteration
-      labelsRaw.foreach(_.unpersist())
-      labelsRaw = Some(nextRaw)
-      labels = next
-      converged = sum == prevSum
-      prevSum = sum
-      i += 1
-    }
-    sym.unpersist()
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds — labels would " +
-        "silently under-merge; raise maxIter (rounds needed ≈ log2(component diameter))")
-    // Return the final RAW cached frame, not its flattened wrapper (ADVICE
-    // r14): the wrapper holds no cache entry, so a caller's
-    // `comps.unpersist()` (dropNonMinima, cosineNearDupTransitive,
-    // dedupClusterStats) would silently no-op and the final round's
-    // MEMORY_AND_DISK labels would leak for the session — flattening is
-    // only needed INSIDE the loop to bound per-round analysis cost, and
-    // the one returned frame's plan is a single round's ops over flattened
-    // leaves. (On a checkpoint round the raw frame is the checkpointed one
-    // — no cache entry to release, files owned by the checkpoint dir.)
-    labelsRaw.get
+      // The pointer-jump self-join reads `prop` twice (hence the state 4×),
+      // so an unflattened state's analyzed plan grew ~4× per round and made
+      // the loop DRIVER-bound at sf10: 392 s in Catalyst tree walks on a
+      // 27k-edge candidate graph, ~16 s once flattened (SCALE.md round 14).
+      // The round hands forward a one-node plan; RDD lineage stays bounded
+      // by the driver's checkpoint cadence.
+      Rounds.flatten(jumped)
+    }._1
     }
   }
 

@@ -13,14 +13,16 @@ import org.apache.spark.sql.DataFrame
   * checkpoint cadence; this hook is the machine GUARD that the invariant
   * holds for every iterative operator, forever (r14 verdict item 2).
   *
-  * Each iterative loop calls [[record]] once per round with the frame it
-  * hands to the next round. In production `listener` is `None` and the
-  * call is a volatile read + `Option.foreach` on an empty option — the
-  * analyzed plan is NOT touched (plan analysis stays as lazy as the loop
-  * left it). `IterativePlanGrowthSpec` registers a listener, drives each
-  * loop for enough rounds to expose super-linear growth, and asserts the
-  * per-round analyzed-plan node count stays within each loop's documented
-  * bound (flat for flattened loops, linear-with-checkpoint-reset or
+  * The round driver `graft.ops.Rounds.run` calls [[record]] once per
+  * round of every graph loop with the frame it hands to the next round;
+  * the BPE merge loop, which stays outside the driver, calls it itself.
+  * In production `listener` is `None` and the call is a volatile read +
+  * `Option.foreach` on an empty option — the analyzed plan is NOT touched
+  * (plan analysis stays as lazy as the loop left it).
+  * `IterativePlanGrowthSpec` registers a listener, drives each loop for
+  * enough rounds to expose super-linear growth, and asserts the per-round
+  * analyzed-plan node count stays within each loop's documented bound
+  * (flat for flattened loops, linear-with-checkpoint-reset or
   * bounded-geometric-small-K otherwise).
   */
 object PlanGrowth {

@@ -193,6 +193,43 @@ class DocsFreshnessSpec extends AnyFunSuite {
       s"session built outside GraftSession.create: ${offenders.mkString("; ")}")
   }
 
+  /** Lines of Scala source `src` that record a loop round
+    * (`PlanGrowth.record`), comments skipped. */
+  private def roundRecords(src: String): Seq[String] =
+    codeMatches(src, """PlanGrowth\s*\.\s*record\b""".r)
+
+  /** Lines of Scala source `src` that rebuild a frame from its own RDD
+    * (`createDataFrame(<x>.rdd, …)`), comments skipped. */
+  private def rowRoundTrips(src: String): Seq[String] =
+    codeMatches(src, """createDataFrame\(\s*[\w.()]*\.rdd\b""".r)
+
+  test("only the round driver and the BPE merge loop record rounds; no frame is rebuilt from its RDD") {
+    // the detectors themselves, on a fixed snippet: calls are caught,
+    // comments and an empty-RDD frame are not
+    val probe = Seq(
+      "object P {",
+      """  graft.plans.PlanGrowth.record("op", round, next)""",
+      """  // PlanGrowth.record in a comment is fine""",
+      """  val flat = spark.createDataFrame(raw.rdd, raw.schema)""",
+      """  val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)""",
+      """  /* and in a block: createDataFrame(raw.rdd, raw.schema) */""",
+      """  val flat2 = spark.createDataFrame( held.toDF().rdd, held.schema)""",
+      "}").mkString("\n")
+    assert(roundRecords(probe) == Seq("line 2"), roundRecords(probe))
+    assert(rowRoundTrips(probe) == Seq("line 4", "line 7"), rowRoundTrips(probe))
+    // sbt forks the test JVM with cwd = project base
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
+    val recorders = Set("Rounds.scala", "Bpe.scala")
+    val offenders = scalaFiles(root).flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      (if (recorders(f.getName)) Nil else roundRecords(src).map(h => s"${f.getPath} $h record")) ++
+        rowRoundTrips(src).map(h => s"${f.getPath} $h createDataFrame(rdd)")
+    }
+    assert(offenders.isEmpty,
+      s"round mechanics outside graft.ops.Rounds: ${offenders.mkString("; ")}")
+  }
+
   test("only Tuning and GraftSession set shuffle width, AQE or whole-stage codegen") {
     // the detector itself, on a fixed snippet: string keys and SQLConf
     // entries are caught, comments are not

@@ -56,6 +56,18 @@ class BpeRobustUrlSpec extends SparkSpec {
     assert(got.head === ((1, "a", "a", 11L)))
   }
 
+  test("BPE stops at the first round with no adjacent pair and keeps its merges") {
+    import spark.implicits._
+    // one 5-symbol word has exactly 4 merges in it, whatever k asks for
+    val one = Bpe.train(Seq(("abcde", delimited("abcde"), 1L)).toDF("word", "w", "cnt"), 9)
+      .as[(Int, String, String, Long)].collect().toSeq
+    assert(one === refBpe(Map("abcde" -> 1L), 4))
+    // single-character words have no pair at all
+    val singles = Seq(("a", delimited("a"), 1L), ("b", delimited("b"), 3L))
+      .toDF("word", "w", "cnt")
+    assert(Bpe.train(singles, 2).count() == 0)
+  }
+
   test("BPE on the corpus: 10 steps, positive tie-broken counts, valid symbols") {
     val rows = Bpe.bpeMerges(spark, sf).orderBy("step").collect()
     assert(rows.map(_.getInt(0)).toSeq === (1 to 10))

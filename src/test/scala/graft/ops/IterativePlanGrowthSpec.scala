@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
   * 392 s pre-flatten, 11.8 s after; SCALE.md round 14). The bug lived
   * five rounds because nothing ASSERTED per-round plan size; this spec
   * drives every iterative operator for enough rounds to expose
-  * super-linear growth and pins each loop's documented bound:
+  * super-linear growth and pins each loop's documented bound. The five
+  * graph loops run through the round driver `Rounds.run`, which records
+  * the frame each round hands forward; the BPE merge loop records its own:
   *
-  *  - connectedComponents: FLAT (per-round LogicalRDD flatten) — the r14
+  *  - connectedComponents: FLAT (per-round `Rounds.flatten`) — the r14
   *    fix's regression guard; a revert turns the recorded sizes geometric
   *    and the flatness assert red (the last test demonstrates exactly
   *    that shape on an un-flattened twin of the loop).
@@ -170,9 +172,9 @@ class IterativePlanGrowthSpec extends SparkSpec {
       .toDF("src", "dst")
     val seeds = Seq(1L).toDF("node")
     val rec = capture {
-      val (dist, release) = Graph.kHopReachability(edges, seeds, k = 3)
+      val dist = Graph.kHopReachability(edges, seeds, k = 3)
       dist.count()
-      release()
+      dist.unpersist()
     }
     val s = sizes(rec, "kHopReachability")
     assert(s.size == 3)

@@ -150,7 +150,8 @@ class LlmDataSpec extends SparkSpec {
   test("connectedComponents converges on a deep path graph within the O(log d) round bound") {
     // 200-node path: plain min-label propagation needs 199 rounds; pointer
     // jumping must finish inside maxIter=20 (log2(200) ≈ 7.6 plus slack),
-    // crossing several localCheckpoint boundaries on the way.
+    // crossing a checkpoint round (reliable, to the session's checkpoint
+    // dir) on the way.
     // localThreshold = 0 forces the distributed loop (the code under test).
     val edges = (1L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val comps = Similarity.connectedComponents(edges, localThreshold = 0L)

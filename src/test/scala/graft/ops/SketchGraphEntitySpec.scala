@@ -202,9 +202,9 @@ class SketchGraphEntitySpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (1L, 4L), (3L, 1L))
       .toDF("src", "dst")
     val seeds = Seq(1L).toDF("node")
-    val (distDf, release) = Graph.kHopReachability(edges, seeds, k = 3)
+    val distDf = Graph.kHopReachability(edges, seeds, k = 3)
     val got = distDf.as[(Long, Int)].collect().toMap
-    release()
+    distDf.unpersist()
     assert(got == Map(1L -> 0, 2L -> 1, 4L -> 1, 3L -> 2, 5L -> 2),
       s"BFS distances wrong: $got")
   }
