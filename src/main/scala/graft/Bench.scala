@@ -8,7 +8,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * query returned the same output in every iteration.
   *
   * Settings: `SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1),
-  * `SPARK_GRAFT_BENCH_ITERS` (default 3) and `SPARK_GRAFT_BENCH_QUERIES`
+  * `SPARK_GRAFT_BENCH_ITERS` (default 3, at least 1) and `SPARK_GRAFT_BENCH_QUERIES`
   * (comma-separated exact names, default the whole registry), plus
   * `GraftSession`'s `SPARK_GRAFT_CPUS`.
   *
@@ -63,8 +63,7 @@ object Bench {
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
-    if (s.isEmpty) 0.0
-    else if (s.size % 2 == 1) s(s.size / 2)
+    if (s.size % 2 == 1) s(s.size / 2)
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
@@ -73,7 +72,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
+    val iters = GraftSession.positiveInt(sys.env, "SPARK_GRAFT_BENCH_ITERS", 3)
     val spark = GraftSession.create(cpus)
     // Untimed warmup: JVM/codegen/parquet-reader startup shouldn't be
     // charged to whichever query happens to run first.

@@ -9,7 +9,17 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Local cores for Verify, Bench and the tools: `SPARK_GRAFT_CPUS`, 4 when unset. */
-  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+  lazy val cpus: Int = positiveInt(sys.env, "SPARK_GRAFT_CPUS", 4)
+
+  /** The setting `name` in `env` as an integer of at least 1, `default`
+    * when unset. Any other value fails naming the setting: `0` would reach
+    * Spark as `local[0]`, and a Bench of 0 iterations times nothing and
+    * exits 0. */
+  private[graft] def positiveInt(env: Map[String, String], name: String, default: Int): Int =
+    env.get(name).fold(default) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"$name must be an integer of at least 1, got '$v'"))
+    }
 
   /** `local[cpus]` with as many shuffle partitions; UTC, the loader
     * contract of [[Tables.events]]; the graft native expressions; Kryo;

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Tables, VerifiedQuery}
+import graft.{Fixtures, Tables, VerifiedQuery}
 import graft.etl.{TaxiFeatures, WeatherClean}
 import graft.functions.cents
 
@@ -20,34 +20,6 @@ import graft.functions.cents
   * double summation deterministic.
   */
 object Etl {
-
-  /** Repo-local scratch root for sink/CSV round-trip fixtures (the driver
-    * runs Verify/Bench from arbitrary cwd, so the path is absolute). */
-  private val fixtureRoot = "target/qfixtures"
-
-  private def tag(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  /** Build-once-per-JVM input fixtures (same contract as
-    * streaming.StreamSessionize.inputOnce): for queries whose INPUT is a
-    * derived file-format fixture (the taxi parquet glob, the weather CSV),
-    * re-writing it on every invocation charges fixture I/O to the operator
-    * under measurement — bench iterations 2+ and repeated verify calls
-    * should only READ. The fixture for a given (key, sf dir) is a pure
-    * function of the corpus, hence immutable within a process. NOT used
-    * where the write IS the operator under test (parquetSink, compaction). */
-  private val builtFixtures = scala.collection.concurrent.TrieMap[String, String]()
-  private def fixtureOnce(key: String, dir: String)(build: String => Unit): String =
-    builtFixtures.getOrElseUpdate(s"$key|$dir", {
-      val path = s"$fixtureRoot/${key}_${tag(dir)}"
-      build(path)
-      path
-    })
-
-  /** Escape hatch for harnesses that rewrite a corpus dir in-place within
-    * one JVM (r7 advice): the memo assumes a corpus is immutable per
-    * process, so a regenerated dir would otherwise keep serving fixtures
-    * built from the old data. Normal Verify/Bench runs never need this. */
-  private[graft] def clearFixtureCache(): Unit = builtFixtures.clear()
 
   // -------------------------------------------------------- taxi-analog ETL
 
@@ -168,7 +140,7 @@ object Etl {
     */
   def weatherCsv(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val csvPath = fixtureOnce("weather_csv", dir) { out =>
+    val csvPath = Fixtures.once("weather_csv", dir) { out =>
       val daily = Tables.orders(spark, dir)
         .groupBy(to_date($"o_orderdate").as("date"))
         .agg(
@@ -208,7 +180,7 @@ object Etl {
     */
   def parquetSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = s"$fixtureRoot/sink_${tag(dir)}"
+    val out = Fixtures.path("sink", dir)
     Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_custkey", $"o_totalprice",
         date_format($"o_orderdate", "yyyy-MM-dd").as("odate"), $"o_orderpriority")
@@ -673,7 +645,7 @@ object Etl {
     */
   def compaction(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = s"$fixtureRoot/compact_${tag(dir)}"
+    val out = Fixtures.path("compact", dir)
     def filesPerPartition(root: String): Map[String, Long] = {
       val base = new java.io.File(root)
       val parts = Option(base.listFiles()).getOrElse(Array.empty)
@@ -750,7 +722,7 @@ object Etl {
   def taxiEtl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.events(spark, dir)
-    val path = fixtureOnce("taxi", dir) { out =>
+    val path = Fixtures.once("taxi", dir) { out =>
       val taxi = ev.select(
         $"ts".as("tpep_pickup_datetime"),
         expr("ts + make_interval(0, 0, 0, 0, 0, CAST(event_id % 200 AS INT) + 1, 0)")

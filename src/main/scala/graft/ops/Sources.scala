@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.{Tables, VerifiedQuery}
+import graft.{Fixtures, Tables, VerifiedQuery}
 import graft.functions.cents
 
 /** Additional source/sink formats beyond parquet/CSV: JSON-lines and ORC
@@ -13,14 +13,11 @@ import graft.functions.cents
   */
 object Sources {
 
-  private val fixtureRoot = "target/qfixtures"
-  private def tag(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** JSON-lines sink + explicit-schema scan round-trip over a supplier
     * projection. */
   def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val path = s"$fixtureRoot/json_${tag(dir)}"
+    val path = Fixtures.path("json", dir)
     Tables.supplier(spark, dir)
       .select($"s_suppkey", $"s_name", $"s_nationkey",
         cents($"s_acctbal").as("bal_c"))
@@ -44,7 +41,7 @@ object Sources {
   /** ORC sink + scan round-trip over a part projection. */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val path = s"$fixtureRoot/orc_${tag(dir)}"
+    val path = Fixtures.path("orc", dir)
     Tables.part(spark, dir)
       .select($"p_partkey", $"p_brand", cents($"p_retailprice").as("price_c"))
       .write.mode("overwrite").orc(path)
@@ -66,7 +63,7 @@ object Sources {
     * (`q_parquet_sink`), JSON-lines, ORC, CSV. */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val path = s"$fixtureRoot/csv_${tag(dir)}"
+    val path = Fixtures.path("csv", dir)
     Tables.customer(spark, dir)
       .select($"c_custkey", $"c_mktsegment", $"c_nationkey",
         cents($"c_acctbal").as("bal_c"))
@@ -98,7 +95,7 @@ object Sources {
     * explicitly). */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val path = s"$fixtureRoot/evo_${tag(dir)}"
+    val path = Fixtures.path("evo", dir)
     val base = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_orderstatus",
         cents($"o_totalprice").as("price_c"))

@@ -1,22 +1,32 @@
 package graft.streaming
 
+import java.io.File
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.GraftSession
+import graft.{Fixtures, GraftSession, Tables, Tuning}
 import graft.functions.cents
 
 /** Structured Streaming surface (beyond-reference, SURVEY §2.10): the
   * streaming twin of [[graft.ops.LlmData.sessionize]] — gap-based sessions
   * over an event stream via flatMapGroupsWithState with event-time timeout —
-  * plus a watermarked tumbling-window aggregate.
+  * plus watermarked window aggregates, stream dedup, stream-stream and
+  * stream-static joins and an idempotent `foreachBatch` sink.
   *
   * Scale design: state is one small [[SessionState]] per active user key
   * (partitioned by user_id across the cluster, checkpointed by the state
   * store); the watermark bounds state growth — users idle past
   * watermark+gap are timed out and their session emitted, so state size
   * tracks ACTIVE users, not history.
+  *
+  * The eight `availableNow*` functions run these operators as REGISTERED
+  * BATCH QUERIES (driver gate + bench) through one runner,
+  * [[availableNow]]. Each keeps only its input projection, its stream
+  * transform and its read-back shaping; the runner owns the fresh
+  * checkpoint, the build-once input fixture, the file-source reader, the
+  * source-width and stream-runtime scopes, the `Trigger.AvailableNow` run
+  * and the drain ([[Drain]]).
   */
 object StreamSessionize {
 
@@ -26,154 +36,171 @@ object StreamSessionize {
     * own `spark.sql.streaming.stateStore.providerClass` selects it
     * ([[graft.Tuning.scaleStreamingConf]]); unset, streams run Spark's
     * default in-memory HDFS-backed provider, right for the kilobyte-state
-    * fixture runs. Every run gets a FRESH checkpoint ([[freshRun]]), and a
+    * fixture runs. Every run gets a FRESH checkpoint ([[availableNow]]), and a
     * provider is sticky only per checkpoint, so the key may change
     * between runs. StreamStateStoreParitySpec pins output equality
     * across backends. */
   val RocksDbProviderClass =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Launch a stream inside [[graft.Tuning.withSourceWidth]] sized by its
-    * `source` files, and block until the AvailableNow trigger drains. The
-    * state-store count is pinned to `spark.sql.shuffle.partitions` at the
-    * query's first batch, so it is decided here, at query start, from the
-    * input the stream will read: kilobyte-to-megabyte fixture state gets 4
-    * stores, not one per core (measured: q_stream_join 8.5 → 2.9 s
-    * steady-state; every stateful q_stream_* ~2×), and a source of
-    * 16 MB × session width or more gets the session's own width.
+  /** Where [[availableNow]] drains a stream. */
+  private sealed trait Drain
+
+  /** The memory sink, for AGGREGATE output (windowed, hopping, dedup), whose
+    * size is bounded by the group space. */
+  private final case class Memory(mode: OutputMode) extends Drain
+
+  /** Per-batch parquet dirs, read back as rows, for ROW-proportional output
+    * (sessionize, both joins, enrich). The memory sink appends every output
+    * row into driver heap — the r16 scale audit measured q_stream_enrich
+    * (the full enriched event stream) at solo 4.2 s (sf1) → 60–100 s
+    * (sf10), 14×+ for 10× data with GC-shaped variance; at 100× that sink
+    * is a driver OOM. Executor-side parquet writes are linear in rows and
+    * leave the driver holding nothing (measured post-fix: 2.2 s → 14.3 s,
+    * 6.4×).
     *
-    * The stream also starts inside [[graft.Tuning.withStreamRuntime]] for its
-    * checkpoint `ckpt`: a local checkpoint is written through Hadoop's
+    * The sink dir is cleared at entry: this is per-run transport, so stale
+    * batches from a prior run are structurally impossible. ([[CrossRun]]'s
+    * high-water mark would be WRONG here: stateful queries emit
+    * timeout/eviction rows in the final NO-data micro-batch, which that
+    * trim would delete.) */
+  private case object Parquet extends Drain
+
+  /** [[availableNowForeachBatchSink]]'s sink, the operator that query
+    * tests: per-batch parquet dirs that survive across runs (idempotent
+    * redelivery is cross-run), read one file per trigger so a run has
+    * several batches, and trimmed after the run at its high-water mark. */
+  private case object CrossRun extends Drain
+
+  /** Runs `transform` over a file-source stream of the input fixture
+    * `input` (schema `ev`, written by `write` once per process through
+    * [[graft.Fixtures.once]]) to completion under `Trigger.AvailableNow`,
+    * and returns what `drain` holds afterwards.
+    *
+    * The CHECKPOINT `<kind>_ckpt` is fresh per call: a stale one would mark
+    * the input files already processed and the sink would stay empty. The
+    * memory-sink name is dot-free (temp-view names reject dots; sf dirs
+    * contain them).
+    *
+    * The stream starts inside [[graft.Tuning.withSourceWidth]] sized by the
+    * input files. The state-store count is pinned to
+    * `spark.sql.shuffle.partitions` at the query's first batch, so it is
+    * decided here, at query start, from the input the stream will read:
+    * kilobyte-to-megabyte fixture state gets 4 stores, not one per core
+    * (measured: q_stream_join 8.5 → 2.9 s steady-state; every stateful
+    * q_stream_* ~2×), and a source of 16 MB × session width or more gets
+    * the session's own width.
+    *
+    * It also starts inside [[graft.Tuning.withStreamRuntime]] for its
+    * checkpoint: a local checkpoint is written through Hadoop's
     * `FileSystem` API, and the stream's tasks run on the executor's shared
     * class loader. Without them a run pays a fixed ~1 s that is not a floor
     * of Structured Streaming: Hadoop's local file system forks ~250
     * `readlink`/`chmod` processes to commit the checkpoint files (a 1-row
     * state commit took 0.6–0.9 s), and a class loader of the run's own
     * recompiles the stream's ~20 generated classes. */
-  private def startDrained(spark: SparkSession, source: String, ckpt: String)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.Tuning.withSourceWidth(spark, Seq(source)) {
-      graft.Tuning.withStreamRuntime(spark, ckpt) {
-        val query = start
-        query.awaitTermination()
-        query
-      }
-    }
-
-  /** Drain a ROW-stream query (output ∝ input, not an aggregate) into
-    * per-batch parquet dirs and read the rows back. The memory sink the
-    * row-proportional queries previously used appends every output row
-    * into driver heap — the r16 scale audit measured q_stream_enrich (the
-    * largest such output, the full enriched event stream) at solo 4.2 s
-    * (sf1) → 60–100 s (sf10), 14×+ for 10× data with GC-shaped variance;
-    * at 100× that sink is a driver OOM. Executor-side parquet writes are
-    * linear in rows and leave the driver holding nothing (measured
-    * post-fix: 2.2 s → 14.3 s, 6.4×). Memory sinks remain correct — and
-    * in use — for the AGGREGATE-output stream queries (windowed, hopping,
-    * dedup-summary), whose sink size is bounded by the group space.
-    *
-    * The sink dir is cleared at entry: this is per-run transport, so a
-    * fresh dir makes stale batches from a prior run structurally
-    * impossible. (A numInputRows>0 high-water-mark, as
-    * [[availableNowForeachBatchSink]] uses for its surviving sink, would
-    * be WRONG here: stateful queries emit timeout/eviction rows in the
-    * final NO-data micro-batch, which such a filter would delete.
-    * fbsink's sink deliberately survives across runs because cross-run
-    * idempotent redelivery is the thing it demonstrates.) */
-  private def drainToParquet(spark: SparkSession, kind: String,
-                             fixtureRoot: String, dir: String, ckpt: String,
-                             source: String)(
-      stream: DataFrame): DataFrame = {
-    val outDir = new java.io.File(s"$fixtureRoot/${kind}_sink_${tag(dir)}")
-    GraftSession.deleteTree(outDir)
-    startDrained(spark, source, ckpt)(stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
+  private def availableNow(kind: String, dir: String, ev: DataFrame, input: String,
+                           drain: Drain)(write: String => Unit)(
+      transform: DataFrame => DataFrame): DataFrame = {
+    val spark = ev.sparkSession
+    val ckpt = Fixtures.path(s"${kind}_ckpt", dir)
+    GraftSession.deleteTree(new File(ckpt))
+    val inDir = Fixtures.once(s"${input}_in", dir)(write)
+    val reader = spark.readStream.schema(ev.schema)
+    val stream = transform(
+      (if (drain == CrossRun) reader.option("maxFilesPerTrigger", 1) else reader).parquet(inDir))
+    val sinkName = s"${kind}_out_${Fixtures.tag(dir).replace(".", "_")}"
+    val outDir = Fixtures.path(s"${kind}_sink", dir)
+    if (drain == Parquet) GraftSession.deleteTree(new File(outDir))
+    val writer = drain match {
+      case Memory(mode) => stream.writeStream.format("memory").queryName(sinkName).outputMode(mode)
+      case _ => stream.writeStream.foreachBatch { (batch: Dataset[Row], id: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
         ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start())
-    // Zero committed batches (empty/absent input) leaves outDir never
-    // recreated after the rm above — the memory sink this replaced
-    // returned an empty typed table there, so preserve that contract
-    // instead of surfacing PATH_NOT_FOUND (ADVICE r16).
-    if (!outDir.exists())
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        stream.schema)
-    else spark.read.parquet(outDir.getAbsolutePath).drop("batch_id")
+    }
+    val query = Tuning.withSourceWidth(spark, Seq(inDir)) {
+      Tuning.withStreamRuntime(spark, ckpt) {
+        val q = writer.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        q
+      }
+    }
+    drain match {
+      case Memory(_) => spark.table(sinkName)
+      // Zero committed batches (empty/absent input) leaves outDir never
+      // recreated after the rm above — the memory sink this replaced
+      // returned an empty typed table there, so preserve that contract
+      // instead of surfacing PATH_NOT_FOUND (ADVICE r16).
+      case Parquet if !new File(outDir).exists() =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], stream.schema)
+      case Parquet => spark.read.parquet(outDir).drop("batch_id")
+      case CrossRun =>
+        // Per-batch overwrite makes a REDELIVERED batch idempotent, but it
+        // cannot retire a batch id that this run never produced: if a prior
+        // run into the same sink emitted MORE batches (different file layout
+        // → different batch count), its surplus `batch_id=N` dirs would
+        // silently double-count in the read-back. Drop every batch id at or
+        // above this run's count — in production this is the sink-side
+        // high-water-mark check a foreachBatch parquet sink needs anyway.
+        val nBatches = query.recentProgress.iterator
+          .filter(_.numInputRows > 0).map(_.batchId).reduceOption(_ max _)
+          .map(_ + 1).getOrElse(0L)
+        Option(new File(outDir).listFiles()).getOrElse(Array.empty)
+          .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
+          .filter(_.getName.stripPrefix("batch_id=").toLong >= nBatches)
+          .foreach(GraftSession.deleteTree)
+        spark.read.parquet(outDir)
+    }
   }
 
-  /** Scratch root for the AvailableNow fixtures (input files + stream
-    * checkpoints): under the JVM temp dir with a per-PROCESS unique
-    * suffix, so two sessions (e.g. a Verify and a Bench running
-    * concurrently) never delete each other's in-flight input or
-    * checkpoint dirs. Within one JVM repeated calls reuse the root — the
-    * per-call rm-then-rewrite below is single-process-safe. The whole
-    * tree is deleted on exit. Tests can still override via the
-    * `fixtureRoot` parameter. */
-  private lazy val defaultFixtureRoot: String = GraftSession.scratchDir("graft-stream-")
-
-  /** Checkpoint + sink name for one AvailableNow query run: the
-    * CHECKPOINT is fresh per call (a stale checkpoint would mark the
-    * input files already-processed and the sink would stay empty), the
-    * memory-sink name is dot-free (temp-view names reject dots; sf dirs
-    * contain them). Input dirs are NOT handled here — they are built
-    * once per JVM by [[inputOnce]]. */
-  private def freshRun(kind: String, fixtureRoot: String,
-                       dir: String): (String, String) = {
-    val t = tag(dir)
-    val ckpt = s"$fixtureRoot/${kind}_ckpt_$t"
-    GraftSession.deleteTree(new java.io.File(ckpt))
-    (ckpt, s"${kind}_out_${t.replace(".", "_")}")
-  }
-
-  /** Build-once-per-JVM input fixtures. These queries are registered as
-    * BATCH queries (driver gate + bench), so without memoization every
-    * timed invocation would re-scan the corpus, re-collect the max-ts
-    * scalar and re-write the input parquet — charging fixture I/O to the
-    * streaming operator under measurement (r5 verdict: ~22 s of the
-    * bench total was exactly this). The input for a given
-    * (kind, params, sf dir) is immutable within a process, so the first
-    * caller materializes it and every later call (bench iterations 2+,
-    * repeated verify calls) streams from the same files. Checkpoints are
-    * NOT memoized — each run gets a fresh one via [[freshRun]].
+  /** Parallel fixture write: the corpus spread over the session's full
+    * parallelism, not funneled through one task. The repartition is
+    * harness-side fixture I/O, never part of the measured operator.
     *
-    * NOTE for readers: every query here relies on the whole corpus
-    * (sentinel included) landing in ONE micro-batch, so the watermark
-    * advances once, after all real events are in state. Through r16 that
-    * was pinned with a `coalesce(1)` single-file write — which made
-    * fixture creation a SINGLE-THREADED scan+write of the corpus,
-    * charged to whichever stream query built the fixture first (~9 s at
-    * sf0.1, ~90 s at sf10 — half of it survived the sf10 epoch's
-    * 2-iteration median: q_stream_hopping read 51 s vs its ~10 s steady
-    * state). r17 writes the fixture with normal parallelism instead
-    * ([[fixtureWrite]]): a file-source stream with NO `maxFilesPerTrigger`
-    * has read limit `allAvailable`, so `Trigger.AvailableNow` still
-    * processes every file in ONE batch regardless of file count —
-    * StreamSessionizeSpec pins exactly-one-data-batch over a multi-file
-    * fixture, and every query's output is single-batch order-independent
-    * (aggregates; per-user sort in sessionize; bit-identical dup copies
-    * in dedup). This remains a TEST-HARNESS device — a real pipeline
-    * relies on per-source watermark tracking across batches, not on
-    * one-batch delivery. */
-  private val builtInputs = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Parallel fixture write (see the one-batch NOTE above): spread the
-    * corpus over the session's full parallelism instead of funneling it
-    * through one task. The repartition is harness-side fixture I/O, never
-    * part of the measured operator's production shape. */
-  private def fixtureWrite(df: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
+    * Every query here relies on the whole corpus (sentinels included)
+    * landing in ONE micro-batch, so the watermark advances once, after all
+    * real events are in state. Through r16 a `coalesce(1)` single-file
+    * write pinned that, which made fixture creation a SINGLE-THREADED
+    * scan+write charged to whichever stream query built it first (~9 s at
+    * sf0.1, ~90 s at sf10). A file-source stream with NO
+    * `maxFilesPerTrigger` has read limit `allAvailable`, so
+    * `Trigger.AvailableNow` still processes every file in ONE batch
+    * regardless of file count — StreamSessionizeSpec pins
+    * exactly-one-data-batch over a multi-file fixture, and every query's
+    * output is single-batch order-independent (aggregates; per-user sort in
+    * sessionize; bit-identical dup copies in dedup). This remains a
+    * TEST-HARNESS device — a real pipeline relies on per-source watermark
+    * tracking across batches, not on one-batch delivery. */
+  private def fixtureWrite(df: DataFrame): org.apache.spark.sql.DataFrameWriter[Row] =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism).write
-  private def inputOnce(key: String, fixtureRoot: String, dir: String)
-                       (build: String => Unit): String =
-    builtInputs.getOrElseUpdate(s"$fixtureRoot|$key|$dir", {
-      val inDir = s"$fixtureRoot/${key}_in_${tag(dir)}"
-      GraftSession.deleteTree(new java.io.File(inDir))
-      build(inDir)
-      inDir
-    })
+
+  /** `ev` plus one far-future event per (id, event type), with the id as
+    * both event and user id, stamped `pastSeconds` + 1 h after the corpus'
+    * last `ts`. Its watermark closes every real session, window or join
+    * horizon ending at most `pastSeconds` after that, so the no-data
+    * micro-batch AvailableNow runs after the last file emits them. `ev`
+    * itself when there are no sentinels. */
+  private def withSentinels(ev: DataFrame, pastSeconds: Long,
+                            sentinels: (Long, String)*): DataFrame =
+    if (sentinels.isEmpty) ev
+    else {
+      val spark = ev.sparkSession
+      import spark.implicits._
+      val maxTs = ev.agg(max($"ts")).as[Timestamp].head()
+      val ts = new Timestamp(maxTs.getTime + (pastSeconds + 3600) * 1000)
+      ev.unionByName(sentinels.map { case (id, t) => (id, id, ts, t, 0.0) }
+        .toDF("event_id", "user_id", "ts", "event_type", "value"))
+    }
+
+  /** The events with `ts` truncated to seconds, so streaming interval and
+    * gap arithmetic (millis) classifies boundaries exactly like the batch
+    * paths and oracles (`unix_timestamp` seconds). */
+  private def eventsToTheSecond(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Tables.events(spark, dir).select($"event_id", $"user_id",
+      date_trunc("second", $"ts").as("ts"), $"event_type", $"value")
+  }
 
   final case class Event(event_id: Long, user_id: Long, ts: Timestamp,
                          event_type: String, value: Double)
@@ -242,9 +269,9 @@ object StreamSessionize {
       .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  /** The streaming sessionizer run end-to-end as a REGISTERED BATCH QUERY
-    * (driver correctness gate): events land in a parquet file source, a
-    * `Trigger.AvailableNow` stream sessionizes them through
+
+  /** The streaming sessionizer run as a registered batch query: a
+    * `Trigger.AvailableNow` stream sessionizes the events through
     * flatMapGroupsWithState, and the emitted sessions are re-shaped to the
     * exact schema of the batch [[graft.ops.LlmData.sessionize]] — identical
     * input must yield identical sessions, so the batch DuckDB oracle
@@ -252,37 +279,18 @@ object StreamSessionize {
     *
     * Flush mechanics: sessions still open when the data runs out only
     * close via EVENT-TIME TIMEOUT, which needs the watermark to pass
-    * last+gap. A single sentinel event (user_id −1) stamped gap+1h past
-    * the corpus max drives the final watermark over every real session's
-    * timeout; the no-data micro-batch that AvailableNow runs after the
-    * last file then fires the timeouts and drains the state store. The
-    * sentinel's own session is filtered from the result.
-    *
-    * Timestamps are pre-truncated to seconds so the streaming gap
-    * arithmetic (millis) classifies boundaries exactly like the batch
-    * path's `unix_timestamp` seconds.
+    * last+gap. A single sentinel event (user_id −1, [[withSentinels]])
+    * drives the final watermark over every real session's timeout; the
+    * no-data micro-batch then fires the timeouts and drains the state
+    * store. The sentinel's own session is filtered from the result.
     */
   def availableNowSessionize(spark: SparkSession, dir: String,
-                             fixtureRoot: String = defaultFixtureRoot,
                              gapSeconds: Long = 1800): DataFrame = {
     import spark.implicits._
-    val (ckpt, _) = freshRun("stream_sess", fixtureRoot, dir)
-
-    val ev = graft.Tables.events(spark, dir)
-      .select($"event_id", $"user_id", date_trunc("second", $"ts").as("ts"),
-        $"event_type", $"value")
-    val inDir = inputOnce(s"stream_sess_$gapSeconds", fixtureRoot, dir) { in =>
-      val maxTs = ev.agg(max($"ts")).as[Timestamp].head()
-      val sentinelTs = new Timestamp(maxTs.getTime + (gapSeconds + 3600) * 1000)
-      val sentinel = Seq((-1L, -1L, sentinelTs, "sentinel", 0.0))
-        .toDF("event_id", "user_id", "ts", "event_type", "value")
-      fixtureWrite(ev.unionByName(sentinel)).parquet(in)
-    }
-
-    val stream = spark.readStream.schema(ev.schema).parquet(inDir)
-      .as[Event]
-    val sessions = drainToParquet(spark, "stream_sess", fixtureRoot, dir, ckpt, inDir)(
-      sessionize(stream, gapSeconds, watermarkDelay = "0 seconds").toDF())
+    val ev = eventsToTheSecond(spark, dir)
+    val sessions = availableNow("stream_sess", dir, ev, s"stream_sess_$gapSeconds", Parquet)(
+      in => fixtureWrite(withSentinels(ev, gapSeconds, -1L -> "sentinel")).parquet(in))(
+      src => sessionize(src.as[Event], gapSeconds, watermarkDelay = "0 seconds").toDF())
 
     // shape to the batch sessionize schema; session_seq re-derived from the
     // per-user session start order (sessions of one user are disjoint and
@@ -300,148 +308,83 @@ object StreamSessionize {
         ($"end_s" - $"start_s").as("span_s"))
   }
 
-  /** The watermarked tumbling-window aggregate as a REGISTERED BATCH QUERY
-    * (same sentinel-flush mechanics as [[availableNowSessionize]]): 10-min
-    * windows × event_type with count and an exact integer-cents sum
+  /** The watermarked tumbling-window aggregate as a registered batch query:
+    * 10-min windows × event_type with count and an exact integer-cents sum
     * (a raw double sum is accumulation-order-dependent and could never
     * hash-match the oracle). Window starts align to the epoch origin, so
-    * the oracle is a plain `epoch // 600 * 600` GROUP BY. Append mode
-    * only emits a window once the watermark passes its end — the sentinel
-    * closes every real window in the final no-data batch. */
+    * the oracle is a plain `epoch // 600 * 600` GROUP BY. Append mode only
+    * emits a window once the watermark passes its end — the sentinel
+    * closes every real window in the final no-data batch. A tumbling
+    * window is the hopping one with `slide = window`, which Spark's
+    * `TimeWindowing` plans as a tumbling window. */
   def availableNowWindowedCounts(spark: SparkSession, dir: String,
-                                 fixtureRoot: String = defaultFixtureRoot,
-                                 windowSeconds: Int = 600): DataFrame = {
-    import spark.implicits._
-    val (ckpt, sinkName) = freshRun("stream_wc", fixtureRoot, dir)
+                                 windowSeconds: Int = 600): DataFrame =
+    windowCounts(spark, dir, "stream_wc", windowSeconds, windowSeconds)
 
-    val ev = graft.Tables.events(spark, dir)
-      .select($"event_id", $"user_id", $"ts", $"event_type", $"value")
-    // Input shared with [[availableNowHoppingCounts]] — identical corpus,
-    // identical sentinel offset (the key carries windowSeconds, the only
-    // parameter the fixture depends on).
-    val inDir = inputOnce(s"stream_wc_$windowSeconds", fixtureRoot, dir) { in =>
-      val maxTs = ev.agg(max($"ts")).as[Timestamp].head()
-      val sentinelTs = new Timestamp(maxTs.getTime + (windowSeconds + 3600) * 1000L)
-      val sentinel = Seq((-1L, -1L, sentinelTs, "sentinel", 0.0))
-        .toDF("event_id", "user_id", "ts", "event_type", "value")
-      fixtureWrite(ev.unionByName(sentinel)).parquet(in)
-    }
-
-    val stream = spark.readStream.schema(ev.schema).parquet(inDir)
-    startDrained(spark, inDir, ckpt)(stream
-      .withWatermark("ts", "0 seconds")
-      .groupBy(window(col("ts"), s"$windowSeconds seconds"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(cents(col("value"))).as("sum_value_c"))
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("n"), col("sum_value_c"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start())
-
-    spark.table(sinkName)
-      .filter(col("event_type") =!= "sentinel")
-      .select(unix_timestamp(col("w_start")).as("w_start_s"), col("event_type"),
-        col("n"), (col("sum_value_c") / lit(100.0)).as("sum_value"))
-  }
-
-  /** HOPPING (sliding) windowed streaming aggregate — the overlapping-
-    * window variant of [[availableNowWindowedCounts]]: 600-second windows
+  /** HOPPING (sliding) windowed streaming aggregate: 600-second windows
     * sliding every 300 seconds, so every event lands in exactly two
     * windows. State is (windows × types)-bounded exactly as with tumbling
     * windows — the slide multiplies live windows by len/slide, not by the
     * data. Epoch-aligned starts make the oracle a plain two-offset
     * explode + GROUP BY. */
   def availableNowHoppingCounts(spark: SparkSession, dir: String,
-                                fixtureRoot: String = defaultFixtureRoot,
                                 windowSeconds: Int = 600,
-                                slideSeconds: Int = 300): DataFrame = {
+                                slideSeconds: Int = 300): DataFrame =
+    windowCounts(spark, dir, "stream_hop", windowSeconds, slideSeconds)
+
+  private def windowCounts(spark: SparkSession, dir: String, kind: String,
+                           windowSeconds: Int, slideSeconds: Int): DataFrame = {
     import spark.implicits._
-    val (ckpt, sinkName) = freshRun("stream_hop", fixtureRoot, dir)
-
-    val ev = graft.Tables.events(spark, dir)
+    val ev = Tables.events(spark, dir)
       .select($"event_id", $"user_id", $"ts", $"event_type", $"value")
-    // Shares the tumbling-window fixture (same corpus, same sentinel).
-    val inDir = inputOnce(s"stream_wc_$windowSeconds", fixtureRoot, dir) { in =>
-      val maxTs = ev.agg(max($"ts")).as[Timestamp].head()
-      val sentinelTs = new Timestamp(maxTs.getTime + (windowSeconds + 3600) * 1000L)
-      val sentinel = Seq((-1L, -1L, sentinelTs, "sentinel", 0.0))
-        .toDF("event_id", "user_id", "ts", "event_type", "value")
-      fixtureWrite(ev.unionByName(sentinel)).parquet(in)
-    }
-
-    val stream = spark.readStream.schema(ev.schema).parquet(inDir)
-    startDrained(spark, inDir, ckpt)(stream
-      .withWatermark("ts", "0 seconds")
-      .groupBy(window(col("ts"), s"$windowSeconds seconds", s"$slideSeconds seconds"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(cents(col("value"))).as("sum_value_c"))
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("n"), col("sum_value_c"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start())
-
-    spark.table(sinkName)
+    // One input for every slide: the fixture depends on windowSeconds alone.
+    availableNow(kind, dir, ev, s"stream_wc_$windowSeconds", Memory(OutputMode.Append))(
+      in => fixtureWrite(withSentinels(ev, windowSeconds, -1L -> "sentinel")).parquet(in))(
+      _.withWatermark("ts", "0 seconds")
+        .groupBy(window(col("ts"), s"$windowSeconds seconds", s"$slideSeconds seconds"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(cents(col("value"))).as("sum_value_c"))
+        .select(col("window.start").as("w_start"), col("event_type"),
+          col("n"), col("sum_value_c")))
       .filter(col("event_type") =!= "sentinel")
       .select(unix_timestamp(col("w_start")).as("w_start_s"), col("event_type"),
         col("n"), (col("sum_value_c") / lit(100.0)).as("sum_value"))
   }
 
-  /** [[dedupStream]] run end-to-end as a REGISTERED BATCH QUERY: the
-    * corpus lands in the file source TWICE (two parquet files — the
-    * at-least-once delivery a real ingest pipeline sees), the stream
-    * drops duplicate event_ids within the watermark horizon, and the
-    * deduped stream is aggregated per event_type with an exact
-    * integer-cents value sum. If dedup under-drops (a duplicate leaks) or
-    * over-drops, every count/sum/hash in the oracle — a plain aggregate
-    * over the ORIGINAL events — fails. Duplicate rows are bit-identical
-    * copies, so the result is independent of WHICH arrival the state
-    * store keeps. */
-  def availableNowDedup(spark: SparkSession, dir: String,
-                        fixtureRoot: String = defaultFixtureRoot): DataFrame = {
+  /** [[dedupStream]] run as a registered batch query: the corpus lands in
+    * the file source TWICE (two parquet writes — the at-least-once delivery
+    * a real ingest pipeline sees), the stream drops duplicate event_ids
+    * within the watermark horizon, and the deduped stream is aggregated per
+    * event_type with an exact integer-cents value sum. If dedup under-drops
+    * (a duplicate leaks) or over-drops, every count/sum/hash in the oracle
+    * — a plain aggregate over the ORIGINAL events — fails. Duplicate rows
+    * are bit-identical copies, so the result is independent of WHICH
+    * arrival the state store keeps. */
+  def availableNowDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (ckpt, sinkName) = freshRun("stream_dedup", fixtureRoot, dir)
-
-    val ev = graft.Tables.events(spark, dir)
-      .select($"event_id", $"user_id", date_trunc("second", $"ts").as("ts"),
-        $"event_type", $"value")
-    val inDir = inputOnce("stream_dedup", fixtureRoot, dir) { in =>
-      // at-least-once delivery: the full corpus arrives twice
+    val ev = eventsToTheSecond(spark, dir)
+    availableNow("stream_dedup", dir, ev, "stream_dedup", Memory(OutputMode.Complete)) { in =>
       fixtureWrite(ev).parquet(in)
       fixtureWrite(ev).mode("append").parquet(in)
-    }
-
-    val stream = spark.readStream.schema(ev.schema).parquet(inDir)
-    // Aggregate INSIDE the stream (chained stateful ops: dedup state →
-    // agg state) in Complete mode, so the memory sink holds one row per
-    // event_type — result-sized, never corpus-sized, the shape that
-    // survives an unbounded stream on a real cluster.
-    startDrained(spark, inDir, ckpt)(dedupStream(stream, Seq("event_id"), watermarkDelay = "1 hour")
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n_events"),
-        sum(cents($"value")).as("sum_value_c"),
-        min($"event_id").as("min_event_id"),
-        max($"event_id").as("max_event_id"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode(OutputMode.Complete)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start())
-
-    spark.table(sinkName)
-      .select($"event_type", $"n_events",
-        ($"sum_value_c" / lit(100.0)).as("sum_value"),
-        $"min_event_id", $"max_event_id")
+    } { src =>
+      // Aggregate INSIDE the stream (chained stateful ops: dedup state →
+      // agg state) in Complete mode, so the memory sink holds one row per
+      // event_type — result-sized, never corpus-sized, the shape that
+      // survives an unbounded stream on a real cluster.
+      dedupStream(src, Seq("event_id"), watermarkDelay = "1 hour")
+        .groupBy($"event_type")
+        .agg(count(lit(1)).as("n_events"),
+          sum(cents($"value")).as("sum_value_c"),
+          min($"event_id").as("min_event_id"),
+          max($"event_id").as("max_event_id"))
+    }.select($"event_type", $"n_events",
+      ($"sum_value_c" / lit(100.0)).as("sum_value"),
+      $"min_event_id", $"max_event_id")
   }
 
-  /** Watermarked STREAM-STREAM inner join as a REGISTERED BATCH QUERY:
-    * each user's clicks join their purchases arriving within the next 10
+  /** Watermarked STREAM-STREAM inner join as a registered batch query: each
+    * user's clicks join their purchases arriving within the next 10
     * minutes — the attribution/conversion join every event pipeline runs.
     * Both sides carry watermarks and the join condition bounds purchase
     * time against click time, so each side's buffered state is evicted
@@ -449,40 +392,11 @@ object StreamSessionize {
     * 10-minute horizon, not stream history, which is the only shape that
     * survives an unbounded stream. Inner-join matches emit in the
     * micro-batch that completes the pair (no sentinel needed; the
-    * watermark only gates state cleanup). Timestamps are pre-truncated to
-    * seconds so the interval arithmetic matches the batch oracle — a plain
-    * SQL self-join over the same events — exactly. */
+    * watermark only gates state cleanup). Oracle: a plain SQL self-join
+    * over the same events. */
   def availableNowStreamJoin(spark: SparkSession, dir: String,
-                             fixtureRoot: String = defaultFixtureRoot,
-                             horizonSeconds: Long = 600): DataFrame = {
-    import spark.implicits._
-    val (ckpt, _) = freshRun("stream_join", fixtureRoot, dir)
-
-    val ev = graft.Tables.events(spark, dir)
-      .select($"event_id", $"user_id", date_trunc("second", $"ts").as("ts"),
-        $"event_type", $"value")
-    val inDir = inputOnce("stream_join", fixtureRoot, dir) { in =>
-      fixtureWrite(ev).parquet(in)
-    }
-
-    val src = spark.readStream.schema(ev.schema).parquet(inDir)
-    val clicks = src.filter($"event_type" === "click")
-      .select($"event_id".as("click_id"), $"user_id".as("c_user"),
-        $"ts".as("click_ts"))
-      .withWatermark("click_ts", "0 seconds")
-    val purchases = src.filter($"event_type" === "purchase")
-      .select($"event_id".as("purchase_id"), $"user_id".as("p_user"),
-        $"ts".as("purchase_ts"), $"value")
-      .withWatermark("purchase_ts", "0 seconds")
-    drainToParquet(spark, "stream_join", fixtureRoot, dir, ckpt, inDir)(
-      clicks.join(purchases,
-        $"c_user" === $"p_user" &&
-          $"purchase_ts" >= $"click_ts" &&
-          $"purchase_ts" <= $"click_ts" + expr(s"INTERVAL $horizonSeconds SECONDS")))
-      .select($"click_id", $"purchase_id", $"c_user".as("user_id"),
-        (unix_timestamp($"purchase_ts") - unix_timestamp($"click_ts")).as("delay_s"),
-        cents($"value").as("value_c"))
-  }
+                             horizonSeconds: Long = 600): DataFrame =
+    streamJoin(spark, dir, "stream_join", horizonSeconds, "inner")
 
   /** Watermarked stream-stream LEFT OUTER join — [[availableNowStreamJoin]]
     * with the semantics production attribution actually needs: clicks that
@@ -490,52 +404,42 @@ object StreamSessionize {
     * be emitted once BOTH sides' watermarks prove no qualifying purchase
     * can still arrive (click_ts + horizon fully below the watermark), so
     * the state store's row-expiry path — not just its match path — is
-    * under the oracle here. The fixture appends one far-future sentinel
-    * per side: each side's watermark derives from its own events, and
-    * without both advancing past `maxTs + horizon` the tail clicks would
-    * legitimately stay buffered forever on an unbounded stream
-    * (AvailableNow then runs the final eviction micro-batch — the same
-    * mechanics the sessionize sentinel relies on). Sentinels are filtered
-    * from the result by id sign.
+    * under the oracle here. The fixture appends one sentinel per side
+    * ([[withSentinels]]): each side's watermark derives from its own
+    * events, and without both advancing past `maxTs + horizon` the tail
+    * clicks would legitimately stay buffered forever on an unbounded
+    * stream. Sentinels are filtered from the result by id sign.
     *
     * State stays bounded by the same 10-minute horizon as the inner join;
     * the unmatched rows add no state, only deferred emission. Oracle: a
     * plain SQL LEFT JOIN with the time window in the ON clause. */
   def availableNowStreamJoinOuter(spark: SparkSession, dir: String,
-                                  fixtureRoot: String = defaultFixtureRoot,
-                                  horizonSeconds: Long = 600): DataFrame = {
+                                  horizonSeconds: Long = 600): DataFrame =
+    streamJoin(spark, dir, "stream_join_outer", horizonSeconds, "leftOuter",
+      -1L -> "click", -2L -> "purchase")
+
+  private def streamJoin(spark: SparkSession, dir: String, kind: String,
+                         horizonSeconds: Long, joinType: String,
+                         sentinels: (Long, String)*): DataFrame = {
     import spark.implicits._
-    val (ckpt, _) = freshRun("stream_join_outer", fixtureRoot, dir)
-
-    val ev = graft.Tables.events(spark, dir)
-      .select($"event_id", $"user_id", date_trunc("second", $"ts").as("ts"),
-        $"event_type", $"value")
-    val inDir = inputOnce(s"stream_join_outer_$horizonSeconds", fixtureRoot, dir) { in =>
-      val maxTs = ev.agg(max($"ts")).as[Timestamp].head()
-      val sentinelTs = new Timestamp(maxTs.getTime + (horizonSeconds + 3600) * 1000)
-      val sentinels = Seq(
-        (-1L, -1L, sentinelTs, "click", 0.0),
-        (-2L, -2L, sentinelTs, "purchase", 0.0))
-        .toDF("event_id", "user_id", "ts", "event_type", "value")
-      fixtureWrite(ev.unionByName(sentinels)).parquet(in)
-    }
-
-    val src = spark.readStream.schema(ev.schema).parquet(inDir)
-    val clicks = src.filter($"event_type" === "click")
-      .select($"event_id".as("click_id"), $"user_id".as("c_user"),
-        $"ts".as("click_ts"))
-      .withWatermark("click_ts", "0 seconds")
-    val purchases = src.filter($"event_type" === "purchase")
-      .select($"event_id".as("purchase_id"), $"user_id".as("p_user"),
-        $"ts".as("purchase_ts"), $"value")
-      .withWatermark("purchase_ts", "0 seconds")
-    drainToParquet(spark, "stream_join_outer", fixtureRoot, dir, ckpt, inDir)(
+    val ev = eventsToTheSecond(spark, dir)
+    val joined = availableNow(kind, dir, ev, s"${kind}_$horizonSeconds", Parquet)(
+      in => fixtureWrite(withSentinels(ev, horizonSeconds, sentinels: _*)).parquet(in)) { src =>
+      val clicks = src.filter($"event_type" === "click")
+        .select($"event_id".as("click_id"), $"user_id".as("c_user"),
+          $"ts".as("click_ts"))
+        .withWatermark("click_ts", "0 seconds")
+      val purchases = src.filter($"event_type" === "purchase")
+        .select($"event_id".as("purchase_id"), $"user_id".as("p_user"),
+          $"ts".as("purchase_ts"), $"value")
+        .withWatermark("purchase_ts", "0 seconds")
       clicks.join(purchases,
         $"c_user" === $"p_user" &&
           $"purchase_ts" >= $"click_ts" &&
           $"purchase_ts" <= $"click_ts" + expr(s"INTERVAL $horizonSeconds SECONDS"),
-        "leftOuter"))
-      .filter($"click_id" >= 0)
+        joinType)
+    }
+    (if (sentinels.isEmpty) joined else joined.filter($"click_id" >= 0))
       .select($"click_id", $"purchase_id", $"c_user".as("user_id"),
         (unix_timestamp($"purchase_ts") - unix_timestamp($"click_ts")).as("delay_s"),
         cents($"value").as("value_c"))
@@ -549,27 +453,18 @@ object StreamSessionize {
     * side is complete by definition — at 100 TB this is a broadcast hash
     * join inside every micro-batch, the stream side never shuffles, and
     * dimension updates between batches are picked up automatically
-    * (Spark re-plans the static side each trigger).
-    *
-    * Sink: [[drainToParquet]] — this is the stream query with the LARGEST
-    * row-proportional output (the full enriched event stream), the one the
-    * r16 scale audit caught first. */
-  def availableNowStaticEnrich(spark: SparkSession, dir: String,
-                               fixtureRoot: String = defaultFixtureRoot): DataFrame = {
+    * (Spark re-plans the static side each trigger). Its output is the
+    * LARGEST row-proportional one (the full enriched event stream), the
+    * one the r16 scale audit caught first ([[Parquet]]). */
+  def availableNowStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (ckpt, _) = freshRun("stream_enrich", fixtureRoot, dir)
-
-    val ev = graft.Tables.events(spark, dir)
+    val ev = Tables.events(spark, dir)
       .select($"event_id", $"user_id", $"event_type", $"value")
-    val inDir = inputOnce("stream_enrich", fixtureRoot, dir) { in =>
-      fixtureWrite(ev).parquet(in)
-    }
-
-    val src = spark.readStream.schema(ev.schema).parquet(inDir)
-    val dim = broadcast(graft.Tables.customer(spark, dir)
+    val dim = broadcast(Tables.customer(spark, dir)
       .select($"c_custkey", $"c_mktsegment", $"c_nationkey"))
-    drainToParquet(spark, "stream_enrich", fixtureRoot, dir, ckpt, inDir)(
-      src.join(dim, src("user_id") === dim("c_custkey"), "left")
+    availableNow("stream_enrich", dir, ev, "stream_enrich", Parquet)(
+      in => fixtureWrite(ev).parquet(in))(
+      src => src.join(dim, src("user_id") === dim("c_custkey"), "left")
         .select($"event_id", $"user_id",
           coalesce($"c_mktsegment", lit("UNKNOWN")).as("segment"),
           coalesce($"c_nationkey", lit(-1L)).as("nation_key"),
@@ -581,11 +476,11 @@ object StreamSessionize {
     * wholesale in its own `batch_id=<id>` directory with overwrite
     * semantics, so a redelivered batch (failure/restart replay from the
     * checkpoint) REPLACES its own previous attempt instead of appending
-    * beside it. This is the standard exactly-once recipe for sinks with
-    * no transactional commit (plain parquet/object storage); at 100 TB
-    * the per-batch overwrite is a directory swap and readers see
-    * batch-atomic output. `maxFilesPerTrigger=1` forces a multi-batch run
-    * so the per-batch layout is actually exercised.
+    * beside it ([[CrossRun]]). This is the standard exactly-once recipe for
+    * sinks with no transactional commit (plain parquet/object storage); at
+    * 100 TB the per-batch overwrite is a directory swap and readers see
+    * batch-atomic output. The fixture is 4 files read one per trigger, so
+    * the per-batch layout is actually exercised.
     *
     * Returns the aggregate read back from the sink directory (batch_id
     * discovered as a partition column and ignored) — equal to the batch
@@ -594,55 +489,18 @@ object StreamSessionize {
     * StreamSessionizeSpec by re-running the whole stream into the same
     * sink with a fresh checkpoint.
     */
-  def availableNowForeachBatchSink(spark: SparkSession, dir: String,
-                                   fixtureRoot: String = defaultFixtureRoot): DataFrame = {
+  def availableNowForeachBatchSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (ckpt, _) = freshRun("stream_fbsink", fixtureRoot, dir)
-    // The sink survives across calls (idempotence is cross-run); only
-    // the checkpoint is fresh per call.
-    val outDir = s"$fixtureRoot/stream_fbsink_sink_${tag(dir)}"
-
-    val ev = graft.Tables.events(spark, dir)
+    val ev = Tables.events(spark, dir)
       .select($"event_id", $"user_id", $"event_type", $"value")
-    val inDir = inputOnce("stream_fbsink", fixtureRoot, dir) { in =>
-      ev.repartition(4).write.mode("overwrite").parquet(in)
-    }
-
-    val src = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val query = startDrained(spark, inDir, ckpt)(src.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start())
-
-    // Per-batch overwrite makes a REDELIVERED batch idempotent, but it
-    // cannot retire a batch id that this run never produced: if a prior
-    // run into the same sink emitted MORE batches (different file layout
-    // → different batch count), its surplus `batch_id=N` dirs would
-    // silently double-count in the read-back. Drop every batch id at or
-    // above this run's count — in production this is the sink-side
-    // high-water-mark check a foreachBatch parquet sink needs anyway.
-    val nBatches = query.recentProgress.iterator
-      .filter(_.numInputRows > 0).map(_.batchId).reduceOption(_ max _)
-      .map(_ + 1).getOrElse(0L)
-    Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .filter(_.getName.stripPrefix("batch_id=").toLong >= nBatches)
-      .foreach(GraftSession.deleteTree)
-
-    spark.read.parquet(outDir)
+    availableNow("stream_fbsink", dir, ev, "stream_fbsink", CrossRun)(
+      in => ev.repartition(4).write.mode("overwrite").parquet(in))(identity)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
         (sum(cents($"value")) / lit(100.0)).as("sum_value"),
         min($"event_id").as("min_event_id"),
         max($"event_id").as("max_event_id"))
   }
-
-  private def tag(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** Watermarked tumbling-window counts per event type — the canonical
     * streaming aggregate (late data beyond the watermark dropped, state

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Bench.determinism]], the comparison Bench makes between the
-  * fingerprints of each query's iterations. */
+  * fingerprints of each query's iterations, and the parsing of Bench's
+  * iteration count and the session's cores. */
 class BenchDeterminismSpec extends AnyFunSuite {
 
   private val a: Either[String, Bench.Fp] = Right((1L, 2L, 3L))
@@ -39,5 +40,16 @@ class BenchDeterminismSpec extends AnyFunSuite {
 
   test("one iteration compares nothing") {
     assert(Bench.determinism(Seq("q_a" -> Seq(a), "q_b" -> Seq(Left("boom"))), oracled).isEmpty)
+  }
+
+  test("iteration and core counts accept only integers of at least 1, and name the setting") {
+    for (name <- Seq("SPARK_GRAFT_BENCH_ITERS", "SPARK_GRAFT_CPUS")) {
+      assert(GraftSession.positiveInt(Map.empty, name, 3) == 3)
+      assert(GraftSession.positiveInt(Map(name -> " 2 "), name, 3) == 2)
+      for (bad <- Seq("0", "-2", "two", "1.5", "")) {
+        val e = intercept[IllegalArgumentException](GraftSession.positiveInt(Map(name -> bad), name, 3))
+        assert(e.getMessage == s"$name must be an integer of at least 1, got '$bad'")
+      }
+    }
   }
 }

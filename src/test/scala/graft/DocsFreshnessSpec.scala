@@ -95,6 +95,10 @@ class DocsFreshnessSpec extends AnyFunSuite {
       s"README claims $claimed scalatest cases but sources register $actual")
   }
 
+  /** A top-level object member's definition line; group 1 is its name. */
+  private val member =
+    """^  (?:(?:private|protected|override|final)(?:\[\w+\])?\s+)*(?:lazy\s+)?(?:val|def)\s+(\w+)""".r
+
   /** Engine-side inline cents rules in Scala source `src`: the Column form
     * `round(… * 100).cast("long")` anywhere, and the SQL form
     * `CAST(round(…*100) AS BIGINT)` outside DuckDB oracle strings. Comments
@@ -106,7 +110,6 @@ class DocsFreshnessSpec extends AnyFunSuite {
     val arg = """(?:[^()]|\([^()]*\))*"""
     val columnForm = s"""round\\($arg\\*\\s*100(?:\\.0)?\\s*\\)\\s*\\.cast\\(\\s*"(?:long|bigint)"\\s*\\)""".r
     val sqlForm = s"""(?i)CAST\\s*\\(\\s*round\\s*\\($arg\\*\\s*100(?:\\.0)?\\s*\\)\\s*AS\\s+BIGINT""".r
-    val member = """^  (?:(?:private|protected|override|final)(?:\[\w+\])?\s+)*(?:lazy\s+)?(?:val|def)\s+(\w+)""".r
     var owner = ""
     lines.indices.flatMap { i =>
       member.findFirstMatchIn(lines(i)).foreach(m => owner = m.group(1))
@@ -262,5 +265,59 @@ class DocsFreshnessSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"plan-shaping setting outside graft.Tuning/GraftSession: ${offenders.mkString("; ")}")
+  }
+
+  /** Lines of Scala source `src` that name a fixture dir of their own: the
+    * shared relative `target/qfixtures` or a `fixtureRoot`. Comments count
+    * too, so no doc points a reader at such a dir. */
+  private def fixtureRoots(src: String): Seq[String] =
+    """target/qfixtures|\bfixtureRoot\b""".r.findAllMatchIn(src)
+      .map(m => s"line ${src.take(m.start).count(_ == '\n') + 1}").toSeq.distinct
+
+  /** Lines of Scala source `src` that set a stream's trigger to AvailableNow
+    * or its checkpoint location, each with the object member it is in;
+    * comments skipped. */
+  private def streamStarts(src: String): Seq[(String, String)] = {
+    val code = """(?s)/\*.*?\*/""".r
+      .replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
+      .split("\n", -1).map(_.replaceFirst("//.*", ""))
+    val start = """Trigger\s*\.\s*AvailableNow\b|checkpointLocation""".r
+    var owner = ""
+    code.indices.flatMap { i =>
+      member.findFirstMatchIn(code(i)).foreach(m => owner = m.group(1))
+      if (start.findFirstIn(code(i)).isDefined) Seq(s"line ${i + 1}" -> owner) else Nil
+    }
+  }
+
+  test("fixtures live in graft.Fixtures and streams run only through StreamSessionize.availableNow") {
+    // the detectors themselves, on a fixed snippet
+    val probe = Seq(
+      "object P {",
+      """  private val fixtureRoot = "target/qfixtures"""",
+      """  private def availableNow(kind: String) = {""",
+      """    writer.option("checkpointLocation", ckpt)""",
+      """      .trigger(Trigger.AvailableNow()).start()""",
+      "  }",
+      """  // .trigger(Trigger.AvailableNow()) in a comment is fine""",
+      """  def fbsink(src: DataFrame) = src.writeStream""",
+      """    .trigger(Trigger .AvailableNow()).start()""",
+      """  /* checkpointLocation in a block is fine; a doc naming target/qfixtures is not */""",
+      "}").mkString("\n")
+    assert(fixtureRoots(probe) == Seq("line 2", "line 10"), fixtureRoots(probe))
+    assert(streamStarts(probe) == Seq("line 4" -> "availableNow", "line 5" -> "availableNow",
+      "line 9" -> "fbsink"), streamStarts(probe))
+    // sbt forks the test JVM with cwd = project base
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
+    val offenders = scalaFiles(root).flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      fixtureRoots(src).map(h => s"${f.getPath} $h fixture dir") ++
+        streamStarts(src).collect {
+          case (h, owner) if !(f.getName == "StreamSessionize.scala" && owner == "availableNow") =>
+            s"${f.getPath} $h stream start in $owner"
+        }
+    }
+    assert(offenders.isEmpty,
+      s"fixture dir or stream run outside graft.Fixtures/StreamSessionize.availableNow: ${offenders.mkString("; ")}")
   }
 }

@@ -15,7 +15,6 @@ import graft.{GraftSession, SparkSpec, Tuning}
 class StreamRuntimeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-  private val fixtureRoot = "target/test-tmp/stream_runtime_fixture"
   private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
   private val IsolationKey = "spark.sql.artifact.isolation.enabled"
 
@@ -36,7 +35,7 @@ class StreamRuntimeSpec extends SparkSpec {
   }
 
   private def windowedRun(windowSeconds: Int): Long =
-    StreamSessionize.availableNowWindowedCounts(spark, dir, fixtureRoot, windowSeconds).count()
+    StreamSessionize.availableNowWindowedCounts(spark, dir, windowSeconds).count()
 
   test("a local-checkpoint stream run forks no readlink and few processes in all") {
     windowedRun(420) // builds the input fixture, whose parquet write forks chmod

@@ -73,8 +73,7 @@ class StreamSessionizeSpec extends SparkSpec {
 
   test("availableNowSessionize equals the batch sessionize row-for-row") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = availableNowSessionize(spark, dir,
-      fixtureRoot = "target/test-tmp/stream_sess_fixture")
+    val streamed = availableNowSessionize(spark, dir)
     val batch = graft.ops.LlmData.sessionize(spark, dir)
     val s = streamed.collect().map(_.toSeq).toSet
     val b = batch.collect().map(_.toSeq).toSet
@@ -84,16 +83,15 @@ class StreamSessionizeSpec extends SparkSpec {
 
   test("memoized stream input: a repeat invocation reuses the fixture and reproduces identical rows") {
     // Registered q_stream_* queries build their file-source input once per
-    // JVM (StreamSessionize.inputOnce) and only the checkpoint is fresh per
+    // JVM (graft.Fixtures.once) and only the checkpoint is fresh per
     // call — a bench iteration 2+ therefore streams from the memoized
     // files. Pin that the second call (memoized input + fresh checkpoint)
     // reproduces the first call's rows exactly; a stale-checkpoint bug
     // would yield an empty sink, a corrupted memo a different row set.
     val dir = "/root/testdata/sf0.001"
-    val root = "target/test-tmp/stream_memo_fixture"
-    val first = availableNowSessionize(spark, dir, fixtureRoot = root)
+    val first = availableNowSessionize(spark, dir)
       .collect().map(_.toSeq).toSet
-    val second = availableNowSessionize(spark, dir, fixtureRoot = root)
+    val second = availableNowSessionize(spark, dir)
       .collect().map(_.toSeq).toSet
     assert(first.nonEmpty, "first invocation emitted nothing")
     assert(first == second,
@@ -103,8 +101,7 @@ class StreamSessionizeSpec extends SparkSpec {
 
   test("availableNowStaticEnrich equals the batch broadcast left join row-for-row") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = availableNowStaticEnrich(spark, dir,
-      fixtureRoot = "target/test-tmp/stream_enrich_fixture")
+    val streamed = availableNowStaticEnrich(spark, dir)
     import org.apache.spark.sql.functions._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -123,8 +120,7 @@ class StreamSessionizeSpec extends SparkSpec {
 
   test("availableNowHoppingCounts equals the batch two-offset window expansion") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = availableNowHoppingCounts(spark, dir,
-      fixtureRoot = "target/test-tmp/stream_hop_fixture")
+    val streamed = availableNowHoppingCounts(spark, dir)
     import org.apache.spark.sql.functions._
     // batch reference: every event lands in exactly two 600s windows that
     // slide by 300s — the window starting at its 300s-floor and the one
@@ -143,10 +139,28 @@ class StreamSessionizeSpec extends SparkSpec {
     assert(s == b, s"stream/batch diverge: only-stream=${(s -- b).take(5)} only-batch=${(b -- s).take(5)}")
   }
 
+  test("the windowed and hopping queries share one input fixture, built once per process") {
+    val dir = "/root/testdata/sf0.001"
+    val input = new java.io.File(graft.Fixtures.path("stream_wc_660_in", dir))
+    // Each build is one parquet write job, and every part file it writes
+    // carries that job's UUID: the distinct UUIDs count the builds.
+    def buildIds(): Set[String] = Option(input.listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.endsWith(".parquet"))
+      .map(_.split("-").slice(2, 7).mkString("-")).toSet
+    assert(buildIds().isEmpty, s"$input exists before any 660 s window query ran")
+    availableNowWindowedCounts(spark, dir, windowSeconds = 660).collect()
+    val first = buildIds()
+    availableNowHoppingCounts(spark, dir, windowSeconds = 660, slideSeconds = 330).collect()
+    availableNowWindowedCounts(spark, dir, windowSeconds = 660).collect()
+    assert(first.size == 1, s"the first query wrote ${first.size} build(s): $first")
+    assert(buildIds() == first, s"the input was rebuilt: ${buildIds()} after $first")
+    val inputs = new java.io.File(graft.Fixtures.root).list().filter(_.contains("_660_in_"))
+    assert(inputs.toSeq == Seq(input.getName), inputs.mkString(", "))
+  }
+
   test("availableNowStreamJoinOuter equals the batch left join, including unmatched clicks") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = availableNowStreamJoinOuter(spark, dir,
-      fixtureRoot = "target/test-tmp/stream_join_outer_fixture")
+    val streamed = availableNowStreamJoinOuter(spark, dir)
     import org.apache.spark.sql.functions._
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),
@@ -174,12 +188,11 @@ class StreamSessionizeSpec extends SparkSpec {
 
   test("foreachBatch sink is idempotent under full redelivery (two runs, one copy of the data)") {
     val dir = "/root/testdata/sf0.001"
-    val root = "target/test-tmp/stream_fbsink_fixture"
     // Run the whole stream TWICE into the same sink: run 2 gets a fresh
     // checkpoint, so every batch is redelivered from scratch — the
     // per-batch-id overwrite must replace run 1's output, not append.
-    availableNowForeachBatchSink(spark, dir, fixtureRoot = root)
-    val second = availableNowForeachBatchSink(spark, dir, fixtureRoot = root)
+    availableNowForeachBatchSink(spark, dir)
+    val second = availableNowForeachBatchSink(spark, dir)
     import org.apache.spark.sql.functions._
     val expected = graft.Tables.events(spark, dir)
       .groupBy(col("event_type"))
@@ -196,8 +209,7 @@ class StreamSessionizeSpec extends SparkSpec {
   test("availableNowDedup over a doubled corpus equals the batch aggregate of the original") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val streamed = availableNowDedup(spark, dir,
-      fixtureRoot = "target/test-tmp/stream_dedup_fixture")
+    val streamed = availableNowDedup(spark, dir)
     val batch = graft.Tables.events(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),

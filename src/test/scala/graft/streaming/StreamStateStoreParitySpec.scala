@@ -9,7 +9,7 @@ import org.apache.spark.sql.Row
   * storage plumbing, never semantics. RocksDB is the production posture
   * once state outgrows executor heap (per-active-user session state at
   * 100 TB); the fixture runs keep the default because their state is
-  * kilobytes. Checkpoints are fresh per run (freshRun), so swapping the
+  * kilobytes. Checkpoints are fresh per run (availableNow), so swapping the
   * provider between runs is legal — a provider is only sticky within one
   * checkpoint's lifetime.
   */
