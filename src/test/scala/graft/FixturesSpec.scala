@@ -1,6 +1,7 @@
 package graft
 
 import java.io.File
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops.{Etl, Sources}
 
 /** Where the registered queries keep the files they derive from a corpus
@@ -11,7 +12,7 @@ class FixturesSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val corpus = new File(dir).getCanonicalPath + File.separator
     val tmp = new File(System.getProperty("java.io.tmpdir")).getCanonicalPath + File.separator
-    val queries = Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)](
+    val queries = Seq[(String, (SparkSession, String) => DataFrame)](
       "weatherCsv" -> Etl.weatherCsv, "parquetSink" -> Etl.parquetSink,
       "compaction" -> Etl.compaction, "taxiEtl" -> Etl.taxiEtl,
       "jsonRoundtrip" -> Sources.jsonRoundtrip, "orcRoundtrip" -> Sources.orcRoundtrip,
