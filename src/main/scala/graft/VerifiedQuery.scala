@@ -16,6 +16,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    rounded to 6 decimals on both sides.
   *  - Timestamps in outputs are formatted to strings or cast to epoch
   *    integers to dodge parquet physical-type mismatches.
+  *
+  * The frame `build` returns may be cached: operators hand their results
+  * through `graft.ops.Rounds.keep`, which releases their working caches
+  * and leaves the result to its reader. The runner that reads a query's
+  * frame owns it and releases it after its action: `Verify` clears the
+  * session's cache after each query's write, `Bench` before each
+  * iteration.
   */
 final case class VerifiedQuery(
     name: String,

@@ -19,7 +19,7 @@ object Verify {
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+        } finally spark.catalog.clearCache() // the query's result is ours to release
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -187,10 +187,7 @@ object Bpe {
       .select($"source", $"n_words", $"n_chars", $"n_tokens",
         expr("(n_tokens * 1000000) div n_words").as("fertility_micro"),
         expr("(n_chars * 1000000) div n_tokens").as("compression_micro"))
-    out.cache().count() // materialize before releasing the upstream caches
-    vocab.unpersist()
-    srcHist.unpersist()
-    out
+    graft.ops.Rounds.keep(out, vocab, srcHist)
   }
 
   /** Shared oracle CTE chain: w0..wK over the vocabulary, each w_i
@@ -344,15 +341,7 @@ object Bpe {
       .select($"source", $"n_words", $"n_chars", $"n_tokens",
         expr("(n_tokens * 1000000) div n_words").as("fertility_micro"),
         expr("(n_chars * 1000000) div n_tokens").as("compression_micro"))
-    // Materialize the result-sized frame while the histograms are still
-    // cached, then release them; the tiny cached `out` (source rows)
-    // deliberately stays for the caller's action — unpersisting it here
-    // would make the caller recompute the whole pipeline WITHOUT the
-    // caches (same pattern and rationale as [[bpeEncode]]).
-    out.cache().count()
-    words.unpersist()
-    srcHist.unpersist()
-    out
+    graft.ops.Rounds.keep(out, words, srcHist)
   }
 
   private val wordpieceSql: String = {

@@ -104,18 +104,7 @@ object Entity {
         when($"cnt" > 1, when($"ck" === $"ck1", $"ck2").otherwise($"ck1"))
           .otherwise($"mbest.o_ck1").as("best_match"),
         $"n_block_names")
-      // Materialize-and-release (the kHop pattern): force the match-set-
-      // sized output once, then drop the groups cache so a long-lived
-      // session (Verify/Bench sweep 150+ queries in one JVM) doesn't leak
-      // an InMemoryRelation per invocation (ADVICE r8). The groups release
-      // is in a finally so a failed materialization can't strand it
-      // (ADVICE r9); the returned relation is cached and OWNED BY THE
-      // CALLER — unpersist it (EntitySkewProbe, SketchGraphEntitySpec) or
-      // clearCache between queries (Bench) when sweeping many invocations.
-      .cache()
-    try out.count()
-    finally groups.unpersist()
-    out
+    Rounds.keep(out, groups)
   }
 
   /** Deliberately the NAIVE entity-level formulation: in-block all-pairs

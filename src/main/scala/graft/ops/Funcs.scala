@@ -314,15 +314,7 @@ object Funcs {
         sum(when($"price_c" < $"lo_c", $"cnt").otherwise(0L)).as("n_clip_lo"),
         sum(when($"price_c" > $"hi_c", $"cnt").otherwise(0L)).as("n_clip_hi"),
         (sum($"clipped_c" * $"cnt") / lit(100.0)).as("sum_clipped"))
-      .cache()
-    // Materialize the O(groups) result, then drop the histogram cache
-    // (ADVICE r17: Verify runs all queries in one session with no
-    // clearCache, so a scale-proportional cache left pinned here survives
-    // the rest of the run — the bpeEncode materialize-then-unpersist
-    // pattern keeps only the 3-row output resident).
-    out.count()
-    hist.unpersist()
-    out
+    Rounds.keep(out, hist)
   }
 
   private val winsorizeSql =

@@ -507,12 +507,7 @@ object Graph {
       .groupBy($"node").agg(count(lit(1)).as("n_tri"))
     val out = deg.join(perNode, Seq("node"), "left")
       .select($"node", $"degree", coalesce($"n_tri", lit(0L)).as("n_tri"))
-      .cache()
-    out.count() // materialize before dropping the working caches
-    e.unpersist()
-    deg.unpersist()
-    edges.unpersist()
-    out
+    Rounds.keep(out, e, deg, edges)
   }
 
   /** Plan-audit helper: the un-materialized triangle plan (the registered

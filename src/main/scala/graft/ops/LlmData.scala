@@ -594,11 +594,7 @@ object LlmData {
     // computed over the FULL corpus, not the fp-survivors: a survivor
     // whose (smaller) near-dup partner was fp-dropped must still drop,
     // and independent drop-sets keep the stages order-insensitive.
-    // dropByIds materializes the small drop set, then releases the
-    // signature cache the candidate join consumed (ADVICE r3).
-    val (cand, release) = Similarity.minhashDetCandidatesWithRelease(docs)
-    val afterNear = Similarity.dropByIds(afterFp,
-      cand.select($"doc_b".as("doc_id")).distinct(), release)
+    val afterNear = Similarity.minhashDetCandidates(docs)(Similarity.dropLaterDups(afterFp, _))
     // stage 3: quality gate + per-source stats
     val nTok = Text.tokenCount($"text")
     val stops = Text.occurrenceCount($"text", Seq("the", "a", "of", "and", "to", "in", "is"))

@@ -88,13 +88,7 @@ object Robust {
         sum(when(lit(2) * $"dev2" > lit(3) * $"mad4", $"cnt").otherwise(0L)).as("n_outliers"),
         sum(when(lit(2) * $"dev2" > lit(3) * $"mad4", $"v" * $"cnt").otherwise(0L)).as("outlier_sum_c"))
       .select($"g", $"n", $"med2", $"mad4", $"n_outliers", $"outlier_sum_c")
-      .cache()
-    // Materialize the O(groups) result, then drop the working caches
-    // (ADVICE r17: never leave a scale-proportional cache pinned for the
-    // rest of a shared session).
-    out.count()
-    hist.unpersist(); med.unpersist(); mad.unpersist()
-    out
+    Rounds.keep(out, hist, med, mad)
   }
 
   private val madOutliersSql =
@@ -179,12 +173,7 @@ object Robust {
       .groupBy($"seg", $"bucket")
       .agg(sum($"cnt").as("n"), min($"bal_c").as("min_c"),
         max($"bal_c").as("max_c"), sum($"bal_c" * $"cnt").as("sum_c"))
-      .cache()
-    // Materialize the O(segments × 4) result, then drop the histogram
-    // cache (ADVICE r17 — see madOutliers).
-    out.count()
-    hist.unpersist()
-    out
+    Rounds.keep(out, hist)
   }
 
   private val quantileBucketSql =

@@ -9,10 +9,15 @@ import org.apache.spark.storage.StorageLevel
   * [[Graph.labelPropagationSym]], [[Graph.kHopReachability]],
   * [[Similarity.connectedComponents]]): Pregel-style supersteps, a
   * per-round step plus a stop rule. [[run]] owns the round counter and
-  * `PlanGrowth.record`, the [[hold]] cadence, the convergence probes, the
-  * round cap, and the result's materialization before every working cache
-  * is released. Each loop keeps only its step, its stop rule and its own
-  * inputs. */
+  * `PlanGrowth.record`, the [[hold]] cadence, the convergence probes and
+  * the round cap. Each loop keeps only its step, its stop rule and its own
+  * inputs.
+  *
+  * [[keep]] is the engine's one materialize-then-release rule: every
+  * operator that caches working frames (the loops' rounds, the histogram
+  * and signature caches of the analytics and dedup operators) hands its
+  * small result and those frames to it, and gets the result back cached
+  * and owned by the caller. */
 private[ops] object Rounds {
 
   /** How a loop stops: at the latest after `cap` rounds. */
@@ -36,11 +41,9 @@ private[ops] object Rounds {
   }
 
   /** Runs `step(state, round)` (`round` 1-based) from `init` until `stop`
-    * and returns the result, cached and counted, with the number of rounds
-    * it took. Only then are every earlier round's frame (`init` included)
-    * and every `working` frame released: a cache that depends on a
-    * released one and has not loaded its buffers would be recompiled from
-    * lineage. */
+    * and returns the result with the number of rounds it took. The result
+    * goes through [[keep]] with every earlier round's frame (`init`
+    * included) and every `working` frame. */
   def run(op: String, init: DataFrame, stop: Stop, working: DataFrame*)
          (step: (DataFrame, Int) => DataFrame): (DataFrame, Int) = {
     val (cap, probe) = (stop.cap, Some(stop).collect { case p: Probe => p })
@@ -67,10 +70,26 @@ private[ops] object Rounds {
       throw new IllegalStateException(
         s"$op did not converge in $cap rounds: its state at the cap is not a fixpoint")
     }
+    (keep(result, (frames ++ working).toSeq: _*), done)
+  }
+
+  /** `result`, cached (unless it already has a storage level) and counted,
+    * after which every `working` frame other than `result` is unpersisted.
+    * The count comes first because a cache that reads a released one and
+    * has not loaded its buffers would be recomputed from lineage without
+    * it. The release runs even when the count throws, and then `result` is
+    * unpersisted too before the error propagates, so a failed operator
+    * leaves nothing cached. The returned frame is cached and owned by the
+    * caller: unpersist it, or clear the session's cache, once it has been
+    * read. This is the pairing of every `cache()` with an `unpersist()`
+    * that a session running many queries needs: a working cache left
+    * pinned lives until the process exits. */
+  def keep(result: DataFrame, working: DataFrame*): DataFrame = {
     if (result.storageLevel == StorageLevel.NONE) result.cache()
-    result.count()
-    release((frames ++ working).filterNot(_ eq result))
-    (result, done)
+    try result.count()
+    catch { case e: Throwable => result.unpersist(); throw e }
+    finally release(working.filterNot(_ eq result))
+    result
   }
 
   /** The first of rounds `from..to` whose probe passes: one job for all. */

@@ -29,19 +29,14 @@ object Similarity {
     * shingle → binary HashingTF (2^18 dims) → MinHashLSH(numHashTables) →
     * approxSimilarityJoin (bucketed on the hash bands, never all-pairs) at
     * the given Jaccard-distance threshold.
-    * Returns candidate pairs (doc_a < doc_b, jaccardDist).
+    * Hands the candidate pairs (doc_a < doc_b, jaccard_dist) to `use`
+    * and returns its result. The vectorized side is cached while `use`
+    * runs and unpersisted when it returns, so `use` materializes whatever
+    * it needs from the pairs (through [[Rounds.keep]], or
+    * [[connectedComponents]], which materializes its edges).
     */
-  def minhashCandidates(docs: DataFrame, threshold: Double = 0.6,
-                        numHashTables: Int = 5): DataFrame =
-    minhashCandidatesWithRelease(docs, threshold, numHashTables)._1
-
-  /** [[minhashCandidates]] plus a release hook that unpersists the cached
-    * vectorized side; callers that materialize their result (the dedup
-    * operators) invoke it after the consuming action so the corpus-sized
-    * cache doesn't outlive the query (ADVICE r3). */
-  private[ops] def minhashCandidatesWithRelease(
-      docs: DataFrame, threshold: Double = 0.6,
-      numHashTables: Int = 5): (DataFrame, () => Unit) = {
+  def minhashCandidates[T](docs: DataFrame, threshold: Double = 0.6,
+                           numHashTables: Int = 5)(use: DataFrame => T): T = {
     // Tokenize in a SEPARATE projection: the shingling lambda would
     // otherwise re-run split(text) once per shingle position (it references
     // the token array 3×, which also keeps CollapseProject from inlining).
@@ -58,42 +53,36 @@ object Similarity {
     // cache: the vectorized side feeds BOTH sides of the self-join plus the
     // LSH fit — without it the whole shingle+hash lineage runs three times.
     val vecs = tf.transform(shingled).select(col("doc_id"), col("features")).cache()
-    val lsh = new MinHashLSH()
-      .setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(42)
-      .fit(vecs)
-    val cand = lsh.approxSimilarityJoin(vecs, vecs, threshold, "jaccard_dist")
-      .select(col("datasetA.doc_id").as("doc_a"),
-        col("datasetB.doc_id").as("doc_b"),
-        col("jaccard_dist"))
-      .filter(col("doc_a") < col("doc_b"))
-    (cand, () => { vecs.unpersist(); () })
+    try {
+      val lsh = new MinHashLSH()
+        .setInputCol("features").setOutputCol("hashes")
+        .setNumHashTables(numHashTables).setSeed(42)
+        .fit(vecs)
+      use(lsh.approxSimilarityJoin(vecs, vecs, threshold, "jaccard_dist")
+        .select(col("datasetA.doc_id").as("doc_a"),
+          col("datasetB.doc_id").as("doc_b"),
+          col("jaccard_dist"))
+        .filter(col("doc_a") < col("doc_b")))
+    } finally vecs.unpersist()
   }
 
-  /** Materialize the (candidate-graph-sized, small) drop-id set eagerly,
-    * invoke `release` to free the heavy upstream cache it consumed, and
-    * anti-join. The returned frame depends only on the small cached drop
-    * set, so nothing data-sized stays pinned for the session (ADVICE r3:
-    * unpersist after the consuming action). The drop-set cache itself
-    * (one long per dropped id) lives until the caller is done with the
-    * returned frame — a long-lived session issuing many dedups should
-    * `unpersist` results it no longer needs or `spark.catalog.clearCache()`
-    * periodically, as Bench does between iterations. */
-  private[ops] def dropByIds(docs: DataFrame, ids: DataFrame,
-                             release: () => Unit): DataFrame = {
-    val dropIds = ids.cache()
-    dropIds.count()
-    release()
-    docs.join(dropIds, Seq("doc_id"), "left_anti")
-  }
+  /** `docs` without the rows whose key is in `ids`, a one-column frame
+    * named like the key. The drop set goes through [[Rounds.keep]] with the
+    * `working` frames it was built from, so the returned frame reads only
+    * that small cached set (owned by the caller). */
+  private def dropIds(docs: DataFrame, ids: DataFrame, working: DataFrame*): DataFrame =
+    docs.join(Rounds.keep(ids, working: _*), ids.columns.toSeq, "left_anti")
+
+  /** Single-linkage drop over candidate pairs: every doc that has a
+    * near-dup with a smaller id. */
+  private[ops] def dropLaterDups(docs: DataFrame, cand: DataFrame): DataFrame =
+    dropIds(docs, cand.select(col("doc_b").as("doc_id")).distinct())
 
   /** Dedup by MinHash candidates: drop every doc that has a near-dup with a
     * smaller id (single-linkage step, no transitive closure — at pipeline
     * scale this runs per-batch and converges across passes). */
-  def minhashDedup(docs: DataFrame, threshold: Double = 0.6): DataFrame = {
-    val (cand, release) = minhashCandidatesWithRelease(docs, threshold)
-    dropByIds(docs, cand.select(col("doc_b").as("doc_id")).distinct(), release)
-  }
+  def minhashDedup(docs: DataFrame, threshold: Double = 0.6): DataFrame =
+    minhashCandidates(docs, threshold)(dropLaterDups(docs, _))
 
   /** Connected components over a candidate edge set by iterative min-label
     * propagation WITH pointer jumping: each round a node adopts the
@@ -199,9 +188,7 @@ object Similarity {
     // distinct() leaves the cache partitioned on (src, dst), so each round
     // re-exchanged the full edge frame — one edge-sized repartition at
     // materialize now buys an exchange-free edge side for every round
-    val sym = pre.repartition(col("dst")).cache()
-    sym.count()
-    pre.unpersist()
+    val sym = Rounds.keep(pre.repartition(col("dst")), pre)
     val init = sym.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster", col("doc_id")).cache()
     // convergence via Σcluster: labels only ever DECREASE per node (least),
@@ -244,28 +231,14 @@ object Similarity {
 
   /** Transitive-closure MinHash dedup: keep one doc (the min id) per
     * connected component of the near-dup graph. */
-  def minhashDedupTransitive(docs: DataFrame, threshold: Double = 0.6): DataFrame = {
-    val (cand, release) = minhashCandidatesWithRelease(docs, threshold)
-    val comps = connectedComponents(cand)
-    // connectedComponents materialized the edge set eagerly — the
-    // candidate pipeline's cache has served its consumers
-    release()
-    dropNonMinima(docs, comps)
-  }
+  def minhashDedupTransitive(docs: DataFrame, threshold: Double = 0.6): DataFrame =
+    dropNonMinima(docs, minhashCandidates(docs, threshold)(connectedComponents(_)))
 
-  /** Anti-join `docs` against the non-minimum members of each component,
-    * releasing the component-label frame the iterative
-    * [[connectedComponents]] loop left cached: the (candidate-graph-sized)
-    * drop set is materialized eagerly, the labels are unpersisted, and the
-    * returned kept-docs frame depends only on the small drop set — no
-    * session-lifetime cache of the label frame (ADVICE r3). */
-  private def dropNonMinima(docs: DataFrame, comps: DataFrame): DataFrame = {
-    val dropIds = comps.filter(col("doc_id") =!= col("cluster"))
-      .select(col("doc_id")).cache()
-    dropIds.count()
-    comps.unpersist()
-    docs.join(dropIds, Seq("doc_id"), "left_anti")
-  }
+  /** `docs` without the non-minimum members of each component of `comps`
+    * (`doc_id`, `cluster`), matched on `docs`' column `key`. The drop set
+    * is kept and the label frame released ([[dropIds]]). */
+  private def dropNonMinima(docs: DataFrame, comps: DataFrame, key: String = "doc_id"): DataFrame =
+    dropIds(docs, comps.filter(col("doc_id") =!= col("cluster")).select(col("doc_id").as(key)), comps)
 
   /** Registered rows-only query: kept documents after MinHash dedup.
     * The corpus goes through [[graft.Tuning.spread]]: a scan that plans
@@ -314,25 +287,20 @@ object Similarity {
     * Defaults tuned on the synthetic corpus: background pairs agree on ≤7
     * of 12 positions, planted near-dups on ≥10 — minAgree=9 splits the
     * bimodal gap (measured at sf0.001/0.01/0.1).
-    */
-  def minhashDetCandidates(docs: DataFrame, numHashes: Int = 12,
-                           bandWidth: Int = 2, minAgree: Int = 9): DataFrame =
-    minhashDetCandidatesWithRelease(docs, numHashes, bandWidth, minAgree)._1
-
-  /** [[minhashDetCandidates]] plus a release hook for the signature cache.
     *
+    * Hands the pairs (doc_a < doc_b, agree) to `use` and returns its
+    * result, with the signature frame cached while `use` runs and
+    * unpersisted when it returns (the scope of [[minhashCandidates]]).
     * Why the cache is load-bearing (measured, not guessed): at test SF the
     * planner broadcasts one side of the band self-join, so ReuseExchange
     * never dedupes the two sides, AND the join's inferred
     * `isnotnull(band key)` constraint pushes the whole signature
     * computation down into each side's scan FILTER — without the cache the
     * per-row signature work ran up to 4× (q_simhash-class queries doubled
-    * in the r4 bench). The cache evaluates it once; the dedup operators
-    * materialize their small drop set and then invoke the release hook, so
-    * the corpus-sized cache doesn't outlive the query (ADVICE r3). */
-  private[ops] def minhashDetCandidatesWithRelease(
-      docs: DataFrame, numHashes: Int = 12,
-      bandWidth: Int = 2, minAgree: Int = 9): (DataFrame, () => Unit) = {
+    * in the r4 bench). The cache evaluates it once.
+    */
+  def minhashDetCandidates[T](docs: DataFrame, numHashes: Int = 12,
+                              bandWidth: Int = 2, minAgree: Int = 9)(use: DataFrame => T): T = {
     require(numHashes % bandWidth == 0, "bandWidth must divide numHashes")
     val sigs = minhashDetSignatures(docs, numHashes).cache()
     val nBands = numHashes / bandWidth
@@ -343,25 +311,22 @@ object Similarity {
       .select(col("doc_id"), col("sig"), col("bk.band"), col("bk.key"))
     val a = banded.as("a")
     val b = banded.as("b")
-    val cand = a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+    try use(a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         aggregate(zip_with(col("a.sig"), col("b.sig"),
             (x, y) => when(x === y, 1).otherwise(0)),
           lit(0), (acc, v) => acc + v).as("agree"))
       .distinct()
-      .filter(col("agree") >= minAgree)
-    (cand, () => { sigs.unpersist(); () })
+      .filter(col("agree") >= minAgree))
+    finally sigs.unpersist()
   }
 
   /** Dedup by deterministic-minhash candidates (single-linkage: drop every
     * doc with a near-dup of smaller id — same policy as [[minhashDedup]]). */
   def minhashDetDedup(docs: DataFrame, numHashes: Int = 12,
-                      bandWidth: Int = 2, minAgree: Int = 9): DataFrame = {
-    val (cand, release) =
-      minhashDetCandidatesWithRelease(docs, numHashes, bandWidth, minAgree)
-    dropByIds(docs, cand.select(col("doc_b").as("doc_id")).distinct(), release)
-  }
+                      bandWidth: Int = 2, minAgree: Int = 9): DataFrame =
+    minhashDetCandidates(docs, numHashes, bandWidth, minAgree)(dropLaterDups(docs, _))
 
   /** Transitive-closure dedup over the DETERMINISTIC candidate graph: one
     * kept doc (the component minimum) per connected component. Because the
@@ -371,13 +336,9 @@ object Similarity {
     * reachability on the oracle side). */
   def minhashDetDedupTransitive(docs: DataFrame, numHashes: Int = 12,
                                 bandWidth: Int = 2, minAgree: Int = 9,
-                                localThreshold: Long = 100000L): DataFrame = {
-    val (cand, release) =
-      minhashDetCandidatesWithRelease(docs, numHashes, bandWidth, minAgree)
-    val comps = connectedComponents(cand, localThreshold = localThreshold)
-    release() // connectedComponents materialized the edge set eagerly
-    dropNonMinima(docs, comps)
-  }
+                                localThreshold: Long = 100000L): DataFrame =
+    dropNonMinima(docs, minhashDetCandidates(docs, numHashes, bandWidth, minAgree)(
+      connectedComponents(_, localThreshold = localThreshold)))
 
   def minhashDetTransitiveQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -486,9 +447,7 @@ object Similarity {
   def neardupSurvivor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tuning.spread(Tables.documents(spark, dir))
-    val (cand, release) = minhashDetCandidatesWithRelease(docs)
-    val comps = connectedComponents(cand)
-    release() // connectedComponents materialized the edge set eagerly
+    val comps = minhashDetCandidates(docs)(connectedComponents(_))
     val quality = docs.select($"doc_id", LlmData.qualityCol($"text").as("quality"))
     val w = Window.partitionBy($"cluster").orderBy($"quality".desc, $"doc_id")
     comps.join(quality, Seq("doc_id"))
@@ -532,21 +491,22 @@ object Similarity {
     * four 16-bit keys; docs sharing any band join within that bucket and
     * survive if full Hamming distance <= maxHamming. Band count / width
     * give the standard LSH guarantee for hamming<=3 within 64 bits.
+    * Hands the pairs (doc_a < doc_b, hamming) to `use` in the scope of
+    * [[minhashDetCandidates]]: the banded hashes are cached while `use`
+    * runs (without the cache the hash ran up to 4× per row — twice per
+    * join side via the scan-pushed isnotnull(key) constraint — and the
+    * bench query doubled).
     */
-  def simhashCandidates(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    simhashCandidatesWithRelease(docs, maxHamming)._1
-
-  /** [[simhashCandidates]] plus a release hook for the banded-hash cache
-    * (same rationale as [[minhashDetCandidatesWithRelease]]: without the
-    * cache the interpreted 64-bit-vote fold ran up to 4× per row — twice
-    * per join side via the scan-pushed isnotnull(key) constraint — and the
-    * bench query doubled; with it, one evaluation, released by the caller
-    * after the consuming action). */
-  private[ops] def simhashCandidatesWithRelease(
-      docs: DataFrame, maxHamming: Int = 3): (DataFrame, () => Unit) = {
+  def simhashCandidates[T](docs: DataFrame, maxHamming: Int = 3)(use: DataFrame => T): T =
     // native codegen'd hash (bit-identical to Text.simhash64 — pinned in
     // DotProductSpec); the HOF fold was this query's dominant cost
-    val hashed = docs.select(col("doc_id"), Text.simhash64Native(lower(col("text"))).as("sh"))
+    simhashBandCandidates(docs, Text.simhash64Native(lower(col("text"))), maxHamming)(use)
+
+  /** The banded self-join of [[simhashCandidates]] and
+    * [[simhashDetCandidates]] over the per-doc hash `hash`. */
+  private def simhashBandCandidates[T](docs: DataFrame, hash: Column, maxHamming: Int)(
+      use: DataFrame => T): T = {
+    val hashed = docs.select(col("doc_id"), hash.as("sh"))
     val banded = hashed.select(col("doc_id"), col("sh"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"),
@@ -555,19 +515,17 @@ object Similarity {
       .cache()
     val a = banded.as("a")
     val b = banded.as("b")
-    val cand = a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+    try use(a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         Text.hamming64(col("a.sh"), col("b.sh")).as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHamming)
-    (cand, () => { banded.unpersist(); () })
+      .filter(col("hamming") <= maxHamming))
+    finally banded.unpersist()
   }
 
-  def simhashDedup(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val (cand, release) = simhashCandidatesWithRelease(docs, maxHamming)
-    dropByIds(docs, cand.select(col("doc_b").as("doc_id")).distinct(), release)
-  }
+  def simhashDedup(docs: DataFrame, maxHamming: Int = 3): DataFrame =
+    simhashCandidates(docs, maxHamming)(dropLaterDups(docs, _))
 
   /** Registered rows-only query: kept documents after SimHash dedup, over
     * the documents scan as it plans (one simhash per row is cheap next to
@@ -583,41 +541,15 @@ object Similarity {
   /** SimHash banded dedup on the DETERMINISTIC 62-bit hash
     * ([[Text.simhashDet]]): four 16-bit bands key the bucket self-join
     * (hamming ≤ 3 over 62 bits guarantees at least one untouched band),
-    * full Hamming check inside buckets. Same algorithm as
+    * full Hamming check inside buckets. Same algorithm and `use` scope as
     * [[simhashCandidates]]; every number is engine-portable integer math,
     * so the dedup carries a full DuckDB oracle. */
-  def simhashDetCandidates(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    simhashDetCandidatesWithRelease(docs, maxHamming)._1
-
-  /** [[simhashDetCandidates]] plus a release hook for the banded-hash
-    * cache (rationale at [[minhashDetCandidatesWithRelease]]; the native
-    * codegen'd hash is cheaper than the HOF fold but still corpus-wide
-    * per-row work worth evaluating exactly once). */
-  private[ops] def simhashDetCandidatesWithRelease(
-      docs: DataFrame, maxHamming: Int = 3): (DataFrame, () => Unit) = {
+  def simhashDetCandidates[T](docs: DataFrame, maxHamming: Int = 3)(use: DataFrame => T): T =
     // native codegen'd hash (bit-identical to Text.simhashDet)
-    val hashed = docs.select(col("doc_id"), Text.simhashDetNative(lower(col("text"))).as("sh"))
-    val banded = hashed.select(col("doc_id"), col("sh"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          shiftrightunsigned(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))): _*)).as("bk"))
-      .select(col("doc_id"), col("sh"), col("bk.band"), col("bk.key"))
-      .cache()
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val cand = a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        Text.hamming64(col("a.sh"), col("b.sh")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-    (cand, () => { banded.unpersist(); () })
-  }
+    simhashBandCandidates(docs, Text.simhashDetNative(lower(col("text"))), maxHamming)(use)
 
-  def simhashDetDedup(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val (cand, release) = simhashDetCandidatesWithRelease(docs, maxHamming)
-    dropByIds(docs, cand.select(col("doc_b").as("doc_id")).distinct(), release)
-  }
+  def simhashDetDedup(docs: DataFrame, maxHamming: Int = 3): DataFrame =
+    simhashDetCandidates(docs, maxHamming)(dropLaterDups(docs, _))
 
   /** Registered FULLY-ORACLED query: kept documents after deterministic
     * SimHash banded dedup (same partition-sizing note as
@@ -1200,15 +1132,7 @@ object Similarity {
                               maxRowsPerBlock: Int = Int.MaxValue): DataFrame = {
     val pairs = cosineNearDupBlocked(emb, blockCol, minCos, maxRowsPerBlock)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    val comps = connectedComponents(pairs)
-    // same release discipline as dropNonMinima: materialize the (pair-
-    // graph-sized) drop set, unpersist the loop's label cache, return a
-    // frame that depends only on the drop set
-    val dropIds = comps.filter(col("doc_id") =!= col("cluster"))
-      .select(col("doc_id").as("vec_id")).cache()
-    dropIds.count()
-    comps.unpersist()
-    emb.join(dropIds, Seq("vec_id"), "left_anti")
+    dropNonMinima(emb, connectedComponents(pairs), key = "vec_id")
   }
 
   def cosineNearDupTransitiveQuery(spark: SparkSession, dir: String): DataFrame =
@@ -1764,18 +1688,13 @@ object Similarity {
   def dedupClusterStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tuning.spread(Tables.documents(spark, dir))
-    val (cand, release) = minhashDetCandidatesWithRelease(docs)
-    val comps = connectedComponents(cand)
-    release()
+    val comps = minhashDetCandidates(docs)(connectedComponents(_))
     val multi = comps.groupBy($"cluster").agg(count(lit(1)).as("cluster_size"))
       .groupBy($"cluster_size").agg(count(lit(1)).as("n_clusters"))
     val singles = docs.select($"doc_id").join(comps, Seq("doc_id"), "left_anti")
       .agg(count(lit(1)).as("n_clusters"))
       .select(lit(1L).as("cluster_size"), $"n_clusters")
-    val out = multi.unionByName(singles).cache()
-    out.count() // materialize (tiny) so the CC label cache can go
-    comps.unpersist()
-    out
+    Rounds.keep(multi.unionByName(singles), comps)
   }
 
   /** Histogram on the oracle side: component sizes from the recursive-CTE
@@ -1829,8 +1748,7 @@ object Similarity {
     // The oracle SQL still spells the joins; the hash gate pins equality.
     def splitOf(id: org.apache.spark.sql.Column) =
       when(Etl.hashBucket(id) < 80, lit("train")).otherwise(lit("test"))
-    val (cand, release) = minhashDetCandidatesWithRelease(docs)
-    val leaks = cand
+    minhashDetCandidates(docs)(cand => Rounds.keep(cand
       .withColumn("split_a", splitOf($"doc_a"))
       .withColumn("split_b", splitOf($"doc_b"))
       .filter($"split_a" =!= $"split_b")
@@ -1839,11 +1757,7 @@ object Similarity {
         when($"split_a" === "test", $"doc_b").otherwise($"doc_a").as("train_doc"))
       .groupBy($"test_doc")
       .agg(count(lit(1)).as("n_train_dups"), min($"train_doc").as("min_train_dup"))
-      .select($"test_doc".as("doc_id"), $"n_train_dups", $"min_train_dup")
-      .cache()
-    leaks.count() // materialize the leak-sized result, then drop the signature cache
-    release()
-    leaks
+      .select($"test_doc".as("doc_id"), $"n_train_dups", $"min_train_dup")))
   }
 
   private val splitLeakageSql =

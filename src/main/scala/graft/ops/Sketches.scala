@@ -858,13 +858,7 @@ object Sketches {
       .select($"scope", $"p_num", $"p_den", $"n", $"rank",
         $"est_lo", $"est_hi", $"exact",
         ($"exact" >= $"est_lo" && $"exact" <= $"est_hi").as("in_bucket"))
-      .cache()
-    // Materialize the O(scopes × probes) result, then drop the histogram
-    // cache (ADVICE r17: a scale-proportional cache must not stay pinned
-    // for the rest of a shared session).
-    out.count()
-    histF.unpersist()
-    out
+    Rounds.keep(out, histF)
   }
 
   private val quantileSketchSql =

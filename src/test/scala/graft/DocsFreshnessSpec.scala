@@ -233,6 +233,36 @@ class DocsFreshnessSpec extends AnyFunSuite {
       s"round mechanics outside graft.ops.Rounds: ${offenders.mkString("; ")}")
   }
 
+  /** Lines of Scala source `src` that name a release thunk: a
+    * `…WithRelease` function or a `() => Unit` type. Comments count too, so
+    * no doc points a reader at a removed thunk. */
+  private def releaseThunks(src: String): Seq[String] =
+    """WithRelease|\(\)\s*=>\s*Unit""".r.findAllMatchIn(src)
+      .map(m => s"line ${src.take(m.start).count(_ == '\n') + 1}").toSeq.distinct
+
+  test("no release thunks in src/main: caches are released by Rounds.keep or a scoped use") {
+    // the detector itself, on a fixed snippet: both thunk forms are caught,
+    // a kept result and a scoped use are not
+    val probe = Seq(
+      "object P {",
+      "  private[ops] def minhashCandidatesWithRelease(docs: DataFrame): (DataFrame, () => Unit) = ???",
+      "  def dropByIds(docs: DataFrame, ids: DataFrame, release: ()=>Unit): DataFrame = ???",
+      "  def keep(result: DataFrame, working: DataFrame*): DataFrame = ???",
+      "  def candidates[T](docs: DataFrame)(use: DataFrame => T): T = ???",
+      "  def timed(body: => Unit): Long = ???",
+      "  /* see simhashCandidatesWithRelease */",
+      "}").mkString("\n")
+    assert(releaseThunks(probe) == Seq("line 2", "line 3", "line 7"), releaseThunks(probe))
+    // sbt forks the test JVM with cwd = project base
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
+    val offenders = scalaFiles(root).flatMap { f =>
+      releaseThunks(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+        .map(h => s"${f.getPath} $h")
+    }
+    assert(offenders.isEmpty, s"release thunk in src/main: ${offenders.mkString("; ")}")
+  }
+
   test("only Tuning and GraftSession set shuffle width, AQE or whole-stage codegen") {
     // the detector itself, on a fixed snippet: string keys and SQLConf
     // entries are caught, comments are not

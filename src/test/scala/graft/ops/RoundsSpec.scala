@@ -4,11 +4,12 @@ import graft.SparkSpec
 import graft.plans.PlanGrowth
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 /** The round driver `Rounds.run` on tiny synthetic steps (a counter column
-  * that every round increments), and its cache hygiene on the five graph
-  * loops that run through it. */
+  * that every round increments), and the cache hygiene of `Rounds.keep` on
+  * the graph loops and the operators that release through it. */
 class RoundsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -115,7 +116,9 @@ class RoundsSpec extends SparkSpec {
       "pageRankConverged" -> (() => Graph.pageRankConverged(sym, eps = 5000L, maxIters = 30)._1),
       "labelPropagationSym" -> (() => Graph.labelPropagationSym(sym, iters = 3)),
       "kHopReachability" -> (() => Graph.kHopReachability(sym, Seq(1L).toDF("node"), k = 3)),
-      "connectedComponents" -> (() => Similarity.connectedComponents(path, localThreshold = 0L)))
+      "connectedComponents" -> (() => Similarity.connectedComponents(path, localThreshold = 0L)),
+      "triangleCounts" -> (() => Graph.triangleCounts(
+        Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (1L, 4L)).toDF("u", "v"))))
     for ((name, loop) <- loops) {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val out = loop()
@@ -125,5 +128,60 @@ class RoundsSpec extends SparkSpec {
       assert(spark.sparkContext.getPersistentRDDs.keySet == before,
         s"$name's returned frame did not hold the one cached RDD")
     }
+  }
+
+  private def persistent: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** The cached RDDs that `df`'s plan reads. */
+  private def readBy(df: DataFrame): Set[Int] =
+    df.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+    }.toSet
+
+  test("each query over a kept result leaves at most one cached RDD, one its frame reads") {
+    val dir = "/root/testdata/sf0.001"
+    val touched = Seq("q_bpe_encode", "q_wordpiece", "q_entity_match", "q_winsorize",
+      "q_mad_outliers", "q_quantile_bucket", "q_quantile_sketch", "q_triangle_count",
+      "q_pagerank", "q_pagerank_conv", "q_label_prop", "q_khop_bfs", "q_minhash_dedup",
+      "q_minhash_det_dedup", "q_minhash_det_transitive", "q_minhash_det_transitive_dist",
+      "q_neardup_survivor", "q_simhash_dedup", "q_simhash_det_dedup", "q_dedup_clusters",
+      "q_split_leakage", "q_llm_pipeline", "q_cosine_neardup_transitive")
+    spark.catalog.clearCache()
+    val before = persistent
+    for (name <- touched) {
+      val out = graft.SparkEntry.queries(name)(spark, dir)
+      val grown = persistent -- before
+      assert(grown.size <= 1, s"$name left ${grown.size} cached RDDs")
+      assert(grown.subsetOf(readBy(out)), s"$name left a cache its frame does not read")
+      out.count()
+      spark.catalog.clearCache() // the reader's release, as Verify's
+      assert(persistent == before, s"$name left a cache outside the session's cache manager")
+    }
+  }
+
+  test("keep releases its working frames and its result when the count throws") {
+    val before = persistent
+    val working = counter.cache()
+    working.count()
+    val boom = udf((v: Long) => { if (v >= 0L) throw new IllegalStateException("boom"); v })
+    val e = intercept[Exception](Rounds.keep(working.select(boom(col("v")).as("v")), working))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom")), e)
+    assert(persistent == before, s"left ${persistent -- before} cached")
+  }
+
+  test("a candidate scope releases its signature cache when its use returns") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
+      (2L, "THE QUICK brown fox jumps over the lazy dog near the river bank"),
+      (3L, "an entirely different sentence about something else altogether")).toDF("doc_id", "text")
+    val before = persistent
+    val counts = Seq(
+      Similarity.minhashDetCandidates(docs)(_.count()),
+      Similarity.minhashCandidates(docs)(_.count()),
+      Similarity.simhashCandidates(docs)(_.count()),
+      Similarity.simhashDetCandidates(docs)(_.count()))
+    assert(counts == Seq(1L, 1L, 1L, 1L), s"candidate pairs $counts")
+    assert(persistent == before, s"left ${persistent -- before} cached")
   }
 }

@@ -333,8 +333,7 @@ class SketchGraphEntitySpec extends SparkSpec {
 
   test("entity matching finds planted near-duplicate names and scores exactly") {
     import spark.implicits._
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("entity-fix-").toFile.getAbsolutePath
+    val dir = graft.GraftSession.scratchDir("entity-fix-")
     // same 14-char prefix + nation → in-block; planted distances 1 and 2;
     // the >2 pair and the cross-nation twin must NOT match
     Seq(

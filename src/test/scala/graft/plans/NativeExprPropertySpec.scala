@@ -40,10 +40,9 @@ class NativeExprPropertySpec extends SparkSpec {
   /** Round-trip a dataframe through parquet so the comparison select runs
     * the native expression through codegen over a real file scan. */
   private def viaParquet(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fuzz-").toFile
-    dir.deleteOnExit()
-    df.write.mode("overwrite").parquet(dir.getAbsolutePath)
-    spark.read.parquet(dir.getAbsolutePath)
+    val dir = graft.GraftSession.scratchDir("graft-fuzz-")
+    df.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
   }
 
   // ---------------------------------------------------------------- strings

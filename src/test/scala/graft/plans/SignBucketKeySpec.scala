@@ -104,7 +104,7 @@ class SignBucketKeySpec extends SparkSpec {
   }
 
   test("signature scan stays inside WholeStageCodegen (the fusion's whole point)") {
-    val dir = java.nio.file.Files.createTempDirectory("signkey").toFile.getAbsolutePath
+    val dir = graft.GraftSession.scratchDir("signkey")
     vecs.write.mode("overwrite").parquet(dir)
     val sigs = graft.ops.Similarity.hyperplaneSignatures(
       spark.read.parquet(dir).select($"id".as("vec_id"), $"emb".as("embedding")))
